@@ -1,6 +1,31 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  /** Seconds to run one query through the noop sink, or None if it throws:
+    * a failure is not a (fast) result. */
+  private[graft] def timeOnce(spark: SparkSession, sfDir: String, name: String,
+                              fn: (SparkSession, String) => DataFrame): Option[Double] = {
+    val t0 = System.nanoTime()
+    // noop sink: materializes every output column through the full plan
+    // (count() would let Catalyst prune the projection away)
+    try {
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      Some((System.nanoTime() - t0) / 1e9)
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] $name FAILED: $e")
+        None
+    }
+  }
+
+  /** The fastest of `reps` runs, or None if any of them failed. */
+  private[graft] def bestOf(reps: Int)(run: => Option[Double]): Option[Double] = {
+    val times = Seq.fill(reps)(run)
+    Option.when(times.forall(_.isDefined))(times.flatten.min)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -36,14 +61,6 @@ object Bench {
     // and stay resident across queries/reps, so per-query numbers are WARM
     // "index built once, queried many times" figures — the pipeline-shaped
     // cost model we actually care about at scale — not cold single-query cost.
-    def timeOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      // noop sink: materializes every output column through the full plan
-      // (count() would let Catalyst prune the projection away)
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
-      (System.nanoTime() - t0) / 1e9
-    }
     System.err.println("[bench] note: per-query times are warm shared-index " +
       "figures — cached build artifacts (scored-pair relation, shingle index, " +
       "trained centroids) are materialized by an untimed warm pass at the " +
@@ -64,13 +81,19 @@ object Bench {
     def gcMs: Long = {
       var t = 0L; gcBeans.forEach(b => t += math.max(0L, b.getCollectionTime)); t
     }
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      timeOnce(name, fn) // untimed rebuild absorber (result discarded)
-      val gc0 = gcMs
-      val best = Seq.fill(3)(timeOnce(name, fn)).min
-      System.err.println(f"[bench] $name%-28s best=$best%7.3f gc=${(gcMs - gc0) / 1000.0}%6.2f s")
-      name -> best
+    // A query that throws in its untimed run or any timed rep is a failure:
+    // listed in `errors`, left out of `total` and of `queries`.
+    val outcomes = SparkEntry.queries.map { case (name, fn) =>
+      name -> timeOnce(spark, sfDir, name, fn).flatMap { _ => // untimed rebuild absorber
+        val gc0 = gcMs
+        val best = bestOf(3)(timeOnce(spark, sfDir, name, fn))
+        best.foreach(b =>
+          System.err.println(f"[bench] $name%-28s best=$b%7.3f gc=${(gcMs - gc0) / 1000.0}%6.2f s"))
+        best
+      }
     }
+    val results = outcomes.collect { case (name, Some(best)) => name -> best }
+    val errors = outcomes.collect { case (name, None) => name }.toSeq.sorted
     def r3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val total = if (results.nonEmpty) results.values.sum else 0.0
@@ -90,8 +113,11 @@ object Bench {
     def line(keyOf: String => String, fmt: Double => String): String = {
       val qs = results.map { case (k, v) => "\"" + keyOf(k) + "\":" + fmt(v) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,${errorsField(keyOf)}"sf":"$sfDir"}"""
     }
+    // additive: present only when some query failed
+    def errorsField(keyOf: String => String): String =
+      if (errors.isEmpty) "" else errors.map(e => "\"" + keyOf(e) + "\"").mkString("\"errors\":[", ",", "],")
     // Full per-query coverage goes to a FILE regardless of query count —
     // the stdout tail is a fixed ~2000-char window, so at any N the file is
     // the complete record and the final stdout line only has to stay
@@ -131,8 +157,9 @@ object Bench {
       val qs = kept.map { case (k, v) =>
         "\"" + k.takeWhile(_ != '_') + "\":" + r3(v)
       }.mkString("{", ",", "}")
-      println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"omitted":${results.size - kept.size},"sf":"$sfDir"}""")
+      println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"omitted":${results.size - kept.size},${errorsField(_.takeWhile(_ != '_'))}"sf":"$sfDir"}""")
     }
     System.out.flush()
+    if (errors.nonEmpty) sys.exit(1)
   }
 }

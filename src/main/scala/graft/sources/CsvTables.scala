@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -51,16 +52,24 @@ object CsvTables {
   *
   * Scale: the merge is one shuffle on the key; last-writer selection is
   * `max_by(struct)` (single agg, no window sort). In production this is a
-  * Delta/Iceberg MERGE; here parquet-swap with the same semantics.
+  * Delta/Iceberg MERGE; here a parquet swap with the same semantics.
   */
 object KeyedUpsertSink {
 
   /** Merge `updates` into the table at `dir` keyed by `keys`: for each key
-    * keep the row with the highest `version` (ties: existing wins). */
+    * keep the row with the highest `version` (ties: existing wins).
+    *
+    * The merged table is written once, to `dir__tmp`, and swapped in:
+    * `dir` is renamed to `dir__old`, `dir__tmp` to `dir`, and `dir__old`
+    * deleted. At every point of a crash either `dir` holds a whole table or
+    * it is missing and `dir__tmp` holds the merged one (`_SUCCESS` written);
+    * the next upsert then finishes the swap before it merges. */
   def upsert(spark: SparkSession, dir: String, updates: DataFrame,
              keys: Seq[String], version: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(dir)
+    val path = new Path(dir)
+    val (tmp, old) = (new Path(dir + "__tmp"), new Path(dir + "__old"))
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path) && fs.exists(new Path(tmp, "_SUCCESS"))) swap(fs, tmp, path)
     val existing: Option[DataFrame] =
       if (fs.exists(path)) Some(spark.read.parquet(dir)) else None
 
@@ -78,12 +87,15 @@ object KeyedUpsertSink {
         struct(col(version), -col("__new"))).as("__row"))
       .select(keys.map(col) ++ valueCols.filter(_ != "__new").map(c => col(s"__row.$c")): _*)
 
-    val tmp = dir + "__tmp"
-    picked.write.mode("overwrite").parquet(tmp)
-    val res = spark.read.parquet(tmp).cache()
-    res.count() // materialize before replacing the source
-    res.write.mode("overwrite").parquet(dir)
-    res.unpersist()
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    picked.write.mode("overwrite").parquet(tmp.toString)
+    fs.delete(old, true)
+    if (fs.exists(path)) swap(fs, path, old)
+    swap(fs, tmp, path)
+    fs.delete(old, true)
   }
+
+  /** `from` → `to`; `to` must not exist (a rename onto a directory moves
+    * `from` into it). */
+  private def swap(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to)) throw new java.io.IOException(s"upsert: cannot rename $from to $to")
 }

@@ -30,6 +30,30 @@ class StreamingSinksSpec extends GraftSuite {
     } finally q.stop()
   }
 
+  test("upsert finishes a swap a crash interrupted between removing the store and renaming the merge") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_upsert_swap")
+    val dir = base.resolve("out")
+    val tmp = base.resolve("out__tmp")
+    def rows = spark.read.parquet(dir.toString).orderBy("post_id").as[(Long, Long, Long)].collect().toList
+    KeyedUpsertSink.upsert(spark, dir.toString, Seq((1L, 100L, 5L), (2L, 100L, 7L)).toDF("post_id", "window_end", "n"),
+      Seq("post_id"), "window_end")
+    // the crash: the merged table is complete in out__tmp, out is gone
+    Files.move(dir, tmp)
+    assert(Files.exists(tmp.resolve("_SUCCESS")) && !Files.exists(dir))
+    KeyedUpsertSink.upsert(spark, dir.toString, Seq((1L, 200L, 9L)).toDF("post_id", "window_end", "n"),
+      Seq("post_id"), "window_end")
+    assert(rows == List((1L, 200L, 9L), (2L, 100L, 7L)))
+    assert(!Files.exists(tmp) && !Files.exists(base.resolve("out__old")))
+
+    // a crash while the merge was being written: out is whole and wins
+    Files.createDirectories(tmp)
+    Files.writeString(tmp.resolve("part-00000.parquet"), "truncated")
+    KeyedUpsertSink.upsert(spark, dir.toString, Seq((3L, 100L, 1L)).toDF("post_id", "window_end", "n"),
+      Seq("post_id"), "window_end")
+    assert(rows == List((1L, 200L, 9L), (2L, 100L, 7L), (3L, 100L, 1L)))
+  }
+
   test("control file stream: params picked up per micro-batch, errors routed (S5/F13/R2)") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_control").toString
