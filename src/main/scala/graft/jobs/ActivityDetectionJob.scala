@@ -39,15 +39,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Why two queries, not one: the reference chains its enrichment and
   * window operators inside one Flink job; Spark's planner forbids a
   * second flatMapGroupsWithState downstream of another stateful operator
-  * in one query, so the model chain and the classify chain each run as
-  * their own query against the shared source — same operators, same
-  * state, with the model handed across via the driver (a few hundred
-  * doubles; the reference broadcasts its model the same way). The
-  * stateful CHAIN itself (per-user enrichment feeding the clustering
-  * window) IS expressible in one query on the `transformWithState` API —
-  * [[StreamOps.enrichedClusterChain]], parity-pinned in StreamingSpec;
-  * only classification, which needs the model OUTSIDE the state group,
-  * keeps the second query.
+  * in one query, and classification needs the model OUTSIDE the
+  * clustering state group, so the model chain and the classify chain
+  * each run as their own query against the shared source — same
+  * operators, same state, with the model handed across via the driver (a
+  * few hundred doubles; the reference broadcasts its model the same way).
   *
   * Scale: clustering state is one bounded window buffer (≤ maxCount
   * points) in a single state group — the same parallelism-1 choice the
@@ -193,61 +189,6 @@ object ActivityDetectionJob {
       }
       .start()
 
-  /** The reference's SINGLE-JOB Task-3 chain as an alternative main
-    * (reference: UnusualActivityDetectionJob wires per-person feature
-    * enrichment into the clustering window inside one Flink job). Spark
-    * 4's `transformWithState` makes that chain expressible as ONE
-    * streaming query — [[StreamOps.enrichedClusterChain]]: per-user
-    * frequency enrichment (stateful, re-declared event time) feeding the
-    * global clustering window (stateful) — where the classic
-    * `flatMapGroupsWithState` API forces [[run]]'s two-query composition.
-    * The model store, bootstrap, and upsert semantics are identical to
-    * [[modelQuery]]'s; the chain trains on the ENRICHED feature space
-    * (value, log1p(per-user event count)), so classification against this
-    * store composes via the same enrichment, not [[featurize]]. Requires
-    * the RocksDB state store provider (TWS contract) — set on the session
-    * here, as the job mains own their session. */
-  def runTws(spark: SparkSession, events: DataFrame, outDir: String,
-             checkpointDir: String, k: Int = 4, decay: Double = 0.2,
-             windowSizeMs: Long = 12 * 3600 * 1000L,
-             minCount: Int = 20, maxCount: Int = 200,
-             watermark: String = "1 hour"): StreamingQuery = {
-    import spark.implicits._
-    // the provider conf is read at query START and frozen into the query's
-    // checkpoint; restore the session's previous value afterwards so later
-    // queries on the shared session keep their own backend (mirrors
-    // runResolved's checkCorrectness handling)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val latest = newModelRef
-      bootstrapModel(spark, outDir).foreach(m => latest.set(Some(m)))
-      val evs = events
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-        .withWatermark("ts", watermark)
-        .as[graft.streaming.Ev]
-      StreamOps.enrichedClusterChain(evs, k, decay, windowSizeMs, minCount, maxCount)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", s"$checkpointDir/model")
-        .foreachBatch { (batch: Dataset[ModelRow], _: Long) =>
-          val rows = batch.collect().sortBy(_.version) // a handful of models
-          rows.lastOption.foreach(m => latest.set(Some((m.version, toModel(m)))))
-          if (rows.nonEmpty)
-            KeyedUpsertSink.upsert(spark, s"$outDir/models",
-              spark.createDataset(rows.toIndexedSeq).toDF(), Seq("version"), "version")
-        }
-        .start()
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-  }
-
   /** Compose the full job (both queries, racing on the shared source —
     * production semantics). Returns (model query, classify query). */
   def run(spark: SparkSession, events: DataFrame, ctrl: Option[DataFrame],
@@ -279,26 +220,15 @@ object ActivityDetectionJob {
   /** CLI: ActivityDetectionJob <sfDir> <outDir> <checkpointDir>
     * [speedup] [runSeconds] [controlDir]. `controlDir` is the watched
     * S5 control-file directory (`k=`/`decay=`/`label:i=` lines). */
-  /** CLI: ActivityDetectionJob <sfDir> <outDir> <checkpointDir> [speedup]
-    * [runSeconds] [ctrlDir|tws] — pass `tws` as the 6th arg to run the
-    * single-query transformWithState chain instead of the two-query
-    * composition (mutually exclusive with a control dir). */
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, ckpt) = (args(0), args(1), args(2))
     val speedup = args.lift(3).getOrElse("10000")
     val runSec = args.lift(4).map(_.toLong).getOrElse(Long.MaxValue)
-    val mode = args.lift(5)
     val spark = Jobs.session("activity-detection")
     val events = Jobs.replayEvents(spark, sfDir, speedup)
-    if (mode.contains("tws")) {
-      val q = runTws(spark, events, outDir, ckpt)
-      Jobs.await(q, runSec)
-      q.stop(); spark.stop()
-    } else {
-      val ctrl = mode.map(d => spark.readStream.text(d))
-      val (modelQ, classifyQ) = run(spark, events, ctrl, outDir, ckpt)
-      Jobs.await(modelQ, runSec)
-      modelQ.stop(); classifyQ.stop(); spark.stop()
-    }
+    val ctrl = args.lift(5).map(d => spark.readStream.text(d))
+    val (modelQ, classifyQ) = run(spark, events, ctrl, outDir, ckpt)
+    Jobs.await(modelQ, runSec)
+    modelQ.stop(); classifyQ.stop(); spark.stop()
   }
 }

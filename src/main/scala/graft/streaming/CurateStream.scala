@@ -5,7 +5,7 @@ import graft.sources.KeyedUpsertSink
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
+  StreamingQuery}
 
 /** A document arriving on the curation ingest stream. */
 final case class CurDoc(doc_id: Long, lang: String, source: String,
@@ -80,8 +80,6 @@ object CurateStream {
     (st, out)
   }
 
-  private def asCur(r: (String, CurDoc)): CurDoc = r._2
-
   /** Stage A (keyed index): one fMGWS group per text fingerprint. */
   def dupTags(docs: Dataset[CurDoc]): Dataset[DupTagged] = {
     implicit val stateEnc = Encoders.scalaLong
@@ -94,7 +92,7 @@ object CurateStream {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (_: String, it: Iterator[(String, CurDoc)],
          state: GroupState[Long]) => {
-          val (st, out) = foldFp(state.getOption, it.map(asCur).toSeq)
+          val (st, out) = foldFp(state.getOption, it.map(_._2).toSeq)
           st.foreach(state.update)
           out.iterator
         })
@@ -105,46 +103,6 @@ object CurateStream {
     java.security.MessageDigest.getInstance("MD5")
       .digest(text.getBytes("UTF-8"))
       .map(b => f"$b%02x").mkString
-
-  /** [[dupTags]] on the transformWithState API — the J11/DedupStream
-    * three-API-parity pattern: the same [[foldFp]] core on RocksDB
-    * ValueState, plus a declarative `TTLConfig` that makes this form the
-    * DEDUP-WITHIN-HORIZON deployment (an untouched fingerprint drops out
-    * of the index after the horizon; the NoTimeout fMGWS form keeps the
-    * index forever — the persisted-corpus-index deployment). */
-  def dupTagsTws(docs: Dataset[CurDoc],
-                 ttl: TTLConfig = TTLConfig.NONE): Dataset[DupTagged] = {
-    implicit val outEnc = Encoders.product[DupTagged]
-    implicit val keyEnc = Encoders.STRING
-    implicit val rowEnc =
-      Encoders.tuple(Encoders.STRING, Encoders.product[CurDoc])
-    val timeMode =
-      if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
-    docs.map(dc => (fpOf(dc.text), dc))(rowEnc)
-      .groupByKey(_._1)
-      .transformWithState(new FpIndexProcessor(ttl), timeMode,
-        OutputMode.Append())
-  }
-
-  /** The fingerprint-index [[StatefulProcessor]] — same [[foldFp]] core
-    * as the fMGWS form. */
-  class FpIndexProcessor(ttl: TTLConfig)
-    extends StatefulProcessor[String, (String, CurDoc), DupTagged] {
-    @transient private var canonical: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      canonical = getHandle.getValueState[Long]("canonical",
-        Encoders.scalaLong, ttl)
-
-    override def handleInputRows(fp: String,
-                                 rows: Iterator[(String, CurDoc)],
-                                 timerValues: TimerValues): Iterator[DupTagged] = {
-      val st0 = if (canonical.exists()) Some(canonical.get()) else None
-      val (st, out) = foldFp(st0, rows.map(asCur).toSeq)
-      st.foreach(canonical.update)
-      out.iterator
-    }
-  }
 
   /** Per-batch verdict derivation — the batch q119 composition over one
     * micro-batch's tagged docs (shared by run and the spec). */

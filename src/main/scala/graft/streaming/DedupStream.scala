@@ -3,8 +3,7 @@ package graft.streaming
 import graft.functions.{MinHashSig, TextLsh}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** A document arriving on the ingest stream. */
 final case class DocEv(doc_id: Long, ts: java.sql.Timestamp, text: String)
@@ -80,10 +79,9 @@ object DedupStream {
       .as[BucketDoc]
   }
 
-  /** The bucket transition shared by BOTH state-API forms (the
-    * ClusterWindowLogic pattern — one core, two adapters, cannot drift):
-    * fold a batch of arrivals in (ts, doc_id) order through the bucket's
-    * canonical entry. */
+  /** The bucket transition behind [[candidates]], kept pure (the
+    * ClusterWindowLogic pattern): fold a batch of arrivals in
+    * (ts, doc_id) order through the bucket's canonical entry. */
   private[streaming] def foldBucket(st0: Option[BucketState], rows: Seq[BucketDoc])
       : (Option[BucketState], Seq[DedupCand]) = {
     var st = st0
@@ -125,44 +123,6 @@ object DedupStream {
           st.foreach(state.update)
           out.iterator
         })
-  }
-
-  /** [[candidates]] on the transformWithState API. The declarative
-    * `TTLConfig` is what makes this form the DEDUP-WITHIN-HORIZON
-    * deployment: with a TTL, a bucket whose canonical entry hasn't been
-    * touched for the horizon is dropped by the store itself, bounding the
-    * index to recently-seen content (the NoTimeout fMGWS form keeps the
-    * index forever — the persisted-corpus-index deployment). Requires the
-    * RocksDB state store provider (Spark's TWS contract). */
-  def candidatesTws(docs: Dataset[DocEv],
-                    ttl: TTLConfig = TTLConfig.NONE): Dataset[DedupCand] = {
-    implicit val outEnc = Encoders.product[DedupCand]
-    implicit val keyEnc = Encoders.STRING
-    val timeMode =
-      if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
-    bandRows(docs)
-      .groupByKey(_.bkey)
-      .transformWithState(new BucketIndexProcessor(ttl), timeMode,
-        OutputMode.Append())
-  }
-
-  /** The bucket-index [[StatefulProcessor]] — same [[foldBucket]] core as
-    * the fMGWS form. */
-  class BucketIndexProcessor(ttl: TTLConfig)
-    extends StatefulProcessor[String, BucketDoc, DedupCand] {
-    @transient private var canonical: ValueState[BucketState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      canonical = getHandle.getValueState[BucketState]("canonical",
-        Encoders.product[BucketState], ttl)
-
-    override def handleInputRows(bkey: String, rows: Iterator[BucketDoc],
-                                 timerValues: TimerValues): Iterator[DedupCand] = {
-      val st0 = if (canonical.exists()) Some(canonical.get()) else None
-      val (st, out) = foldBucket(st0, rows.toSeq)
-      st.foreach(canonical.update)
-      out.iterator
-    }
   }
 
   /** Stage C (windowed verdicts): per-doc rollup over the doc's ≤16

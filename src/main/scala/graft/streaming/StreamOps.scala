@@ -3,7 +3,7 @@ package graft.streaming
 import graft.functions.KMeans
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Typed event for streaming ops (the reference's unified `Event` shape,
   * model/Events.scala:13, with the testdata column names). */
@@ -242,40 +242,6 @@ object StreamOps {
     * Downstream, [[abCounts]] folds the deltas with a plain streaming
     * sum and [[graft.operators.WindowPack.abScore]] turns the folded
     * table into the identical batch verdict row. */
-  /** The per-user A/B state fold shared by the fMGWS op and the
-    * transformWithState processor — one arithmetic, two state APIs (the
-    * J11 as-of parity pattern). Returns the new state and the delta to
-    * emit, if any. */
-  private def abFold(uid: Long, old: AbState, evs: Seq[Ev],
-                     windowUs: Long,
-                     wmUs: Long = Long.MinValue): (AbState, Option[AbDelta]) = {
-    // exact µs (getTime alone truncates to ms — the batch twin compares
-    // unix_micros, so the window boundary must be µs-exact)
-    def us(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-    val newViews = evs.filter(_.event_type == "view").map(e => us(e.ts))
-    val fv = (old.fv +: newViews).min
-    val newPurch = evs.filter(_.event_type == "purchase").map(e => us(e.ts))
-    // fv only ever rewinds, so p > fv + w can never convert — prune;
-    // p <= fv may yet qualify under a further rewind — keep.
-    // Never-viewed users (fv == MaxValue) would otherwise buffer every
-    // purchase forever: once the event-time watermark passes a purchase p,
-    // any still-admissible view has ts >= wm > p, so conversion (p > fv)
-    // is impossible — evict p. With no watermark (wmUs = MinValue) the
-    // filter keeps everything, preserving the exact replay semantics the
-    // parity specs pin.
-    val purch = (old.purchases ++ newPurch).distinct
-      .filter(p => (fv == Long.MaxValue && p >= wmUs) ||
-        (fv != Long.MaxValue && p <= fv + windowUs))
-    val conv = fv != Long.MaxValue &&
-      purch.exists(p => p > fv && p <= fv + windowUs)
-    val dn = (if (fv != Long.MaxValue) 1L else 0L) -
-      (if (old.fv != Long.MaxValue) 1L else 0L)
-    val dc = (if (conv) 1L else 0L) - (if (old.conv) 1L else 0L)
-    (AbState(fv, purch, conv),
-      if (dn == 0L && dc == 0L) None else Some(AbDelta(uid % 2, dn, dc)))
-  }
-
   def abDeltas(events: Dataset[Ev], windowUs: Long): Dataset[AbDelta] = {
     implicit val stateEnc = Encoders.product[AbState]
     implicit val outEnc = Encoders.product[AbDelta]
@@ -295,37 +261,36 @@ object StreamOps {
         })
   }
 
-  /** [[abDeltas]] on Spark 4's stateful-processor API — same [[abFold]],
-    * RocksDB-backed `ValueState` instead of `GroupState` (the as-of
-    * parity trio's pattern; AbStreamSpec pins tws == fMGWS). */
-  class AbProcessor(windowUs: Long)
-    extends StatefulProcessor[Long, Ev, AbDelta] {
-    @transient private var st: ValueState[AbState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[AbState]("abState",
-        Encoders.product[AbState], TTLConfig.NONE)
-
-    override def handleInputRows(uid: Long, rows: Iterator[Ev],
-                                 timerValues: TimerValues): Iterator[AbDelta] = {
-      val old = if (st.exists()) st.get() else AbState(Long.MaxValue, Nil, false)
-      // getCurrentWatermarkInMs is <= 0 when no watermark is tracked
-      // (TimeMode.None) — keep-all in that case
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val wmUs = if (wm > 0) wm * 1000L else Long.MinValue
-      val (next, delta) = abFold(uid, old, rows.toSeq, windowUs, wmUs)
-      st.update(next)
-      delta.iterator
-    }
-  }
-
-  /** [[abDeltas]] via [[AbProcessor]]/`transformWithState`. */
-  def abDeltasTws(events: Dataset[Ev], windowUs: Long): Dataset[AbDelta] = {
-    implicit val outEnc = Encoders.product[AbDelta]
-    implicit val keyEnc = Encoders.scalaLong
-    events.groupByKey(_.user_id)
-      .transformWithState(new AbProcessor(windowUs),
-        TimeMode.None(), OutputMode.Append())
+  /** The per-user A/B state fold behind [[abDeltas]], kept pure (state
+    * in, (state, delta) out) like the other fold cores. Returns the new
+    * state and the delta to emit, if any. */
+  private def abFold(uid: Long, old: AbState, evs: Seq[Ev], windowUs: Long,
+                     wmUs: Long): (AbState, Option[AbDelta]) = {
+    // exact µs (getTime alone truncates to ms — the batch twin compares
+    // unix_micros, so the window boundary must be µs-exact)
+    def us(t: java.sql.Timestamp): Long =
+      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+    val newViews = evs.filter(_.event_type == "view").map(e => us(e.ts))
+    val fv = (old.fv +: newViews).min
+    val newPurch = evs.filter(_.event_type == "purchase").map(e => us(e.ts))
+    // fv only ever rewinds, so p > fv + w can never convert — prune;
+    // p <= fv may yet qualify under a further rewind — keep.
+    // Never-viewed users (fv == MaxValue) would otherwise buffer every
+    // purchase forever: once the event-time watermark passes a purchase p,
+    // any still-admissible view has ts >= wm > p, so conversion (p > fv)
+    // is impossible — evict p. With no watermark (wmUs = MinValue) the
+    // filter keeps everything, preserving the exact replay semantics the
+    // batch-twin specs pin.
+    val purch = (old.purchases ++ newPurch).distinct
+      .filter(p => (fv == Long.MaxValue && p >= wmUs) ||
+        (fv != Long.MaxValue && p <= fv + windowUs))
+    val conv = fv != Long.MaxValue &&
+      purch.exists(p => p > fv && p <= fv + windowUs)
+    val dn = (if (fv != Long.MaxValue) 1L else 0L) -
+      (if (old.fv != Long.MaxValue) 1L else 0L)
+    val dc = (if (conv) 1L else 0L) - (if (old.conv) 1L else 0L)
+    (AbState(fv, purch, conv),
+      if (dn == 0L && dc == 0L) None else Some(AbDelta(uid % 2, dn, dc)))
   }
 
   /** The live per-variant (n, c) counts: [[abDeltas]] folded by a
@@ -601,25 +566,36 @@ object StreamOps {
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (user: Long, it: Iterator[Ev], state: GroupState[AsOfState]) => {
-          var last = state.getOption
-          val out = scala.collection.mutable.ArrayBuffer.empty[EnrichedPurchase]
-          it.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            e.event_type match {
-              case "view" =>
-                last = Some(AsOfState(e.ts.getTime, e.value))
-              case "purchase" =>
-                val prior = last match {
-                  case Some(AsOfState(vts, vv))
-                    if e.ts.getTime - vts <= maxAgeSec * 1000 => vv
-                  case _ => 0.0
-                }
-                out += EnrichedPurchase(e.event_id, user, e.value, prior)
-              case _ => ()
-            }
-          }
+          val (last, out) = asOfFold(user, state.getOption, it.toSeq, maxAgeSec)
           last.foreach(state.update)
           out.iterator
         })
+  }
+
+  /** The per-user as-of transition behind [[asOfEnrich]] and
+    * [[asOfEnrichTtl]]: replay a batch in (ts, event_id) order through the
+    * user's last view; each purchase takes that view's value, or 0.0 when
+    * there is none or it is staler than `maxAgeSec`. Returns the new last
+    * view and the enriched purchases. */
+  private def asOfFold(user: Long, last0: Option[AsOfState], evs: Seq[Ev],
+                       maxAgeSec: Long): (Option[AsOfState], Seq[EnrichedPurchase]) = {
+    var last = last0
+    val out = scala.collection.mutable.ArrayBuffer.empty[EnrichedPurchase]
+    evs.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
+      e.event_type match {
+        case "view" =>
+          last = Some(AsOfState(e.ts.getTime, e.value))
+        case "purchase" =>
+          val prior = last match {
+            case Some(AsOfState(vts, vv))
+              if e.ts.getTime - vts <= maxAgeSec * 1000 => vv
+            case _ => 0.0
+          }
+          out += EnrichedPurchase(e.event_id, user, e.value, prior)
+        case _ => ()
+      }
+    }
+    (last, out.toSeq)
   }
 
   /** [[asOfEnrich]] with event-time state eviction (W6/W7): a user's
@@ -643,22 +619,7 @@ object StreamOps {
             state.remove() // watermark passed viewTs + maxAge: evict
             Iterator.empty
           } else {
-            var last = state.getOption
-            val out = scala.collection.mutable.ArrayBuffer.empty[EnrichedPurchase]
-            it.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-              e.event_type match {
-                case "view" =>
-                  last = Some(AsOfState(e.ts.getTime, e.value))
-                case "purchase" =>
-                  val prior = last match {
-                    case Some(AsOfState(vts, vv))
-                      if e.ts.getTime - vts <= maxAgeSec * 1000 => vv
-                    case _ => 0.0
-                  }
-                  out += EnrichedPurchase(e.event_id, user, e.value, prior)
-                case _ => ()
-              }
-            }
+            val (last, out) = asOfFold(user, state.getOption, it.toSeq, maxAgeSec)
             last.foreach { s =>
               state.update(s)
               state.setTimeoutTimestamp(s.viewTs + maxAgeSec * 1000)
@@ -666,59 +627,6 @@ object StreamOps {
             out.iterator
           }
         })
-  }
-
-  /** [[asOfEnrich]] on Spark 4's `transformWithState` API — the modern
-    * stateful-processor form (arbitrary state via the handle, declarative
-    * per-state TTL, RocksDB-backed). Semantics identical to
-    * [[asOfEnrich]] (asserted in StreamingSpec); state is one
-    * [[AsOfState]] value per user (fixed-size last-value state — it never
-    * grows per key, so no TTL is configured; the API's declarative
-    * `TTLConfig` is the knob a deployment whose KEY SPACE grows unboundedly
-    * would turn on, at the cost of per-batch TTL-index maintenance in every
-    * RocksDB commit — measured pathological on this workload's many tiny
-    * micro-batches, and output-neutral anyway since the staleness cutoff
-    * already ignores old views).
-    * Requires the RocksDB state store provider (Spark's TWS contract).
-    */
-  class AsOfProcessor(maxAgeSec: Long)
-    extends StatefulProcessor[Long, Ev, EnrichedPurchase] {
-    @transient private var lastView: ValueState[AsOfState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      lastView = getHandle.getValueState[AsOfState]("lastView",
-        Encoders.product[AsOfState], TTLConfig.NONE)
-
-    override def handleInputRows(user: Long, rows: Iterator[Ev],
-                                 timerValues: TimerValues): Iterator[EnrichedPurchase] = {
-      var last = if (lastView.exists()) Some(lastView.get()) else None
-      val out = scala.collection.mutable.ArrayBuffer.empty[EnrichedPurchase]
-      rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-        e.event_type match {
-          case "view" =>
-            last = Some(AsOfState(e.ts.getTime, e.value))
-          case "purchase" =>
-            val prior = last match {
-              case Some(AsOfState(vts, vv))
-                if e.ts.getTime - vts <= maxAgeSec * 1000 => vv
-              case _ => 0.0
-            }
-            out += EnrichedPurchase(e.event_id, user, e.value, prior)
-          case _ => ()
-        }
-      }
-      last.foreach(lastView.update)
-      out.iterator
-    }
-  }
-
-  /** J11 as-of enrichment via [[AsOfProcessor]]/`transformWithState`. */
-  def asOfEnrichTws(events: Dataset[Ev], maxAgeSec: Long = 21600L): Dataset[EnrichedPurchase] = {
-    implicit val outEnc = Encoders.product[EnrichedPurchase]
-    implicit val keyEnc = Encoders.scalaLong
-    events.groupByKey(_.user_id)
-      .transformWithState(new AsOfProcessor(maxAgeSec),
-        TimeMode.None(), OutputMode.Append())
   }
 
   /** A6 count-bounded clustering window: buffer feature vectors in state;
@@ -823,85 +731,12 @@ object StreamOps {
         })
   }
 
-  /** [[clusterWindows]] on Spark 4's `transformWithState` — same
-    * [[ClusterWindowLogic]] transition core, so the two API forms are
-    * semantics-identical by construction (parity asserted in
-    * StreamingSpec). The TWS form is what makes the reference's
-    * SINGLE-JOB operator chain expressible in one Spark query: unlike
-    * `flatMapGroupsWithState`, `transformWithState` outputs can carry a
-    * re-declared event-time column (`eventTimeColumnName`) and feed
-    * further stateful operators downstream — see [[enrichedClusterChain]].
-    * Requires the RocksDB state store provider (Spark's TWS contract). */
-  def clusterWindowsTws(in: Dataset[ClusterIn], k: Int, decay: Double,
-                        windowSizeMs: Long, minCount: Int, maxCount: Int,
-                        seed: Long = 137L): Dataset[ModelRow] = {
-    // parameter validation shared with the fMGWS form
-    new ClusterWindowLogic(k, decay, windowSizeMs, minCount, maxCount, seed)
-    implicit val outEnc = Encoders.product[ModelRow]
-    implicit val keyEnc = Encoders.scalaInt
-    in.groupByKey(_ => 0)
-      .transformWithState(
-        new ClusterWindowProcessor(k, decay, windowSizeMs, minCount, maxCount, seed),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** The reference's Task 3 operator CHAIN in ONE streaming query
-    * (UnusualActivityDetectionJob wires per-person feature enrichment into
-    * the clustering window inside a single Flink job): per-user
-    * frequency-enriched features → global clustering window. Legal only on
-    * `transformWithState`: the enrichment stage re-declares its output
-    * event time (`eventTimeColumnName = "ts"`), which
-    * `flatMapGroupsWithState` cannot do (a second stateful operator behind
-    * it is rejected by the planner — the constraint that forces
-    * ActivityDetectionJob's two-query composition on the classic API).
-    * Input must carry a watermark on `ts`; RocksDB provider required. */
-  def enrichedClusterChain(events: Dataset[Ev], k: Int, decay: Double,
-                           windowSizeMs: Long, minCount: Int, maxCount: Int,
-                           seed: Long = 137L): Dataset[ModelRow] = {
-    implicit val midEnc = Encoders.product[ClusterIn]
-    implicit val outEnc = Encoders.product[ModelRow]
-    implicit val userKeyEnc = Encoders.scalaLong
-    implicit val oneKeyEnc = Encoders.scalaInt
-    events.groupByKey(_.user_id)
-      .transformWithState(new FreqEnrichProcessor, "ts", OutputMode.Append())
-      .groupByKey(_ => 0)
-      .transformWithState(
-        new ClusterWindowProcessor(k, decay, windowSizeMs, minCount, maxCount, seed),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** Per-user frequency enrichment for [[enrichedClusterChain]] — the
-    * reference's AggregateFeaturesFunction shape (last-value/counter state
-    * keyed by person, AggregateFeaturesFunction.scala:22-66): each event
-    * emits a feature point (value, log1p(events seen by this user)), with
-    * the per-user counter held in value state. Deterministic: rows sort by
-    * (ts, event_id) within a batch, and a user's counter depends only on
-    * its own sorted history. */
-  class FreqEnrichProcessor extends StatefulProcessor[Long, Ev, ClusterIn] {
-    @transient private var count: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      count = getHandle.getValueState[Long]("n", Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(user: Long, rows: Iterator[Ev],
-                                 timerValues: TimerValues): Iterator[ClusterIn] = {
-      var n = if (count.exists()) count.get() else 0L
-      val out = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).map { e =>
-        n += 1
-        ClusterIn(e.ts, Seq(e.value, math.log1p(n.toDouble)), "")
-      }
-      count.update(n)
-      out.iterator
-    }
-  }
 }
 
-/** Shared transition core of the A6/W4/W8 clustering window — ONE
-  * implementation driving both the `flatMapGroupsWithState` form
-  * ([[StreamOps.clusterWindows]]) and the `transformWithState` form
-  * ([[StreamOps.clusterWindowsTws]]), so the two APIs cannot drift. All
-  * methods are pure (state in, (state, emissions) out); the operator
-  * adapters own state storage and timer plumbing. */
+/** Transition core of the A6/W4/W8 clustering window behind
+  * [[StreamOps.clusterWindows]]. All methods are pure (state in,
+  * (state, emissions) out); the operator owns state storage and timer
+  * plumbing. */
 private[streaming] final class ClusterWindowLogic(
     k: Int, decay: Double, windowSizeMs: Long, minCount: Int, maxCount: Int,
     seed: Long) extends Serializable {
@@ -923,9 +758,8 @@ private[streaming] final class ClusterWindowLogic(
 
   /** Data-less window-end callback (the operator's timer fired). Guarded
     * on the window actually being due: timer registrations are clamped to
-    * wm+1, so a genuine fMGWS timeout always passes; the guard shields the
-    * TWS adapter, whose already-deleted timers can still fire within the
-    * batch that deleted them. */
+    * wm+1, so a genuine timeout always passes, and a timeout that is not
+    * due changes nothing. */
   def onTimeout(st0: ClusterWinState, wm: Long): (ClusterWinState, Seq[ModelRow]) = {
     val out = ArrayBuffer.empty[ModelRow]
     var st = st0
@@ -1039,55 +873,5 @@ private[streaming] final class ClusterWindowLogic(
         weights = merged.clusters.map(_.weight), version = version)
     }
     st
-  }
-}
-
-/** [[ClusterWindowLogic]] on the `transformWithState` API: one value state
-  * + explicit event-time timers. The adapter re-arms to exactly the
-  * logic's desired timer after every invocation (deleting stale
-  * registrations — TWS timers are a SET, unlike fMGWS's single timeout);
-  * [[ClusterWindowLogic.onTimeout]]'s due-guard absorbs timers that
-  * expire in the same batch that deleted them. */
-private[streaming] class ClusterWindowProcessor(
-    k: Int, decay: Double, windowSizeMs: Long, minCount: Int, maxCount: Int,
-    seed: Long)
-  extends StatefulProcessor[Int, ClusterIn, ModelRow] {
-
-  private val logic =
-    new ClusterWindowLogic(k, decay, windowSizeMs, minCount, maxCount, seed)
-  @transient private var st: ValueState[ClusterWinState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[ClusterWinState]("cw",
-      Encoders.product[ClusterWinState], TTLConfig.NONE)
-
-  private def current: ClusterWinState =
-    if (st.exists()) st.get() else logic.initial
-
-  private def rearm(state: ClusterWinState, wm: Long): Unit = {
-    val want = logic.desiredTimer(state, wm)
-    val have = getHandle.listTimers().toSet
-    want match {
-      case Some(t) =>
-        have.filter(_ != t).foreach(getHandle.deleteTimer)
-        if (!have.contains(t)) getHandle.registerTimer(t)
-      case None => have.foreach(getHandle.deleteTimer)
-    }
-  }
-
-  override def handleInputRows(key: Int, rows: Iterator[ClusterIn],
-                               timerValues: TimerValues): Iterator[ModelRow] = {
-    val wm = timerValues.getCurrentWatermarkInMs()
-    val (next, out) = logic.onData(current, wm, rows)
-    st.update(next); rearm(next, wm)
-    out.iterator
-  }
-
-  override def handleExpiredTimer(key: Int, timerValues: TimerValues,
-                                  expiredTimerInfo: ExpiredTimerInfo): Iterator[ModelRow] = {
-    val wm = timerValues.getCurrentWatermarkInMs()
-    val (next, out) = logic.onTimeout(current, wm)
-    st.update(next); rearm(next, wm)
-    out.iterator
   }
 }

@@ -87,38 +87,6 @@ class AbStreamSpec extends GraftSuite {
     } finally q.stop()
   }
 
-  test("transformWithState A/B deltas equal the flatMapGroupsWithState op") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val all = eventsTyped
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def run(name: String,
-              op: org.apache.spark.sql.Dataset[Ev] => org.apache.spark.sql.Dataset[graft.streaming.AbDelta]) = {
-        val stream = MemoryStream[Ev]
-        val q = op(stream.toDS())
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        try {
-          all.grouped(all.length / 3 + 1).toSeq.reverse
-            .foreach { c => stream.addData(c); q.processAllAvailable() }
-          spark.table(name).collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        } finally q.stop()
-      }
-      val tws = run("ab_tws", StreamOps.abDeltasTws(_, DAY_US))
-      val classic = run("ab_classic", StreamOps.abDeltas(_, DAY_US))
-      assert(tws.nonEmpty && sumDeltas(tws) == sumDeltas(classic))
-      // identical micro-batching => identical per-batch emissions too
-      assert(tws.sorted.toSeq == classic.sorted.toSeq)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("A/B chain restarts from checkpoint; the post-restart rewind still retracts") {
     // The purchase that the late view must invalidate arrives BEFORE the
     // stop/restart: the -1 can only be emitted if the per-user purchase

@@ -116,37 +116,27 @@ class CurateStreamSpec extends GraftSuite {
     assert(v == w)
   }
 
-  test("transformWithState fingerprint index equals the fMGWS index across micro-batches") {
+  test("fingerprint index over 4 micro-batches equals batch q30's exact dedup") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
     val docs = allDocs.toSeq
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val stream = MemoryStream[CurDoc]
+    val q = CurateStream.dupTags(stream.toDS()).writeStream.format("memory")
+      .queryName("cur_tags").outputMode("append").start()
     try {
-      def run(name: String,
-              f: org.apache.spark.sql.Dataset[CurDoc] =>
-                org.apache.spark.sql.Dataset[graft.streaming.DupTagged]) = {
-        val stream = MemoryStream[CurDoc]
-        val q = f(stream.toDS()).writeStream.format("memory")
-          .queryName(name).outputMode("append").start()
-        try {
-          docs.grouped(docs.length / 4 + 1).foreach { c =>
-            stream.addData(c); q.processAllAvailable()
-          }
-          spark.table(name).select(col("doc_id"), col("is_dup")).collect()
-            .map(r => (r.getLong(0), r.getBoolean(1))).sorted.toSeq
-        } finally q.stop()
+      docs.grouped(docs.length / 4 + 1).foreach { c =>
+        stream.addData(c); q.processAllAvailable()
       }
-      val tws = run("cur_tws", ds => CurateStream.dupTagsTws(ds))
-      val classic = run("cur_classic", ds => CurateStream.dupTags(ds))
-      assert(tws.nonEmpty && tws == classic,
-        s"tws=${tws.size} classic=${classic.size} diverge")
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+      val got = spark.table("cur_tags").select(col("doc_id"), col("is_dup"))
+        .collect().map(r => (r.getLong(0), r.getBoolean(1))).sorted.toSeq
+      // id-ordered ingest: first-seen canonical == q30's global min doc_id
+      val want = graft.operators.TextPack.queries("q30_dedup_exact")(spark, sf)
+        .select(col("doc_id"), col("is_dup"))
+        .collect().map(r => (r.getLong(0), r.getBoolean(1))).sorted.toSeq
+      assert(got.nonEmpty && got == want,
+        s"${got.size} streamed tags vs ${want.size} batch verdicts diverge")
+    } finally q.stop()
   }
 
   test("within-batch duplicates: smallest doc_id wins the empty slot") {

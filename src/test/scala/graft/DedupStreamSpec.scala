@@ -163,37 +163,6 @@ class DedupStreamSpec extends GraftSuite {
       s"streaming=${got.size} relational=${expected.size} signatures diverge")
   }
 
-  test("transformWithState index equals the fMGWS index across micro-batches") {
-    // the two state-API forms share the foldBucket core; this pins the
-    // adapters (ValueState plumbing vs GroupState)
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val docs = docEvs(120)
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def run(name: String, f: org.apache.spark.sql.Dataset[DocEv] => org.apache.spark.sql.Dataset[DedupCand]) = {
-        val stream = MemoryStream[DocEv]
-        val q = f(stream.toDS()).writeStream.format("memory")
-          .queryName(name).outputMode("append").start()
-        try {
-          docs.grouped(docs.length / 4 + 1).foreach { c =>
-            stream.addData(c); q.processAllAvailable()
-          }
-          spark.table(name).as[DedupCand].collect().map(key).sorted.toSeq
-        } finally q.stop()
-      }
-      val tws = run("dedup_tws", ds => DedupStream.candidatesTws(ds))
-      val classic = run("dedup_classic", ds => DedupStream.candidates(ds))
-      assert(tws.nonEmpty && tws == classic,
-        s"tws=${tws.size} classic=${classic.size} diverge")
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("bucket-index state distributes across >=2 state partitions, one row per bucket") {
     // the index is keyed by LSH bucket — state must hash-spread across the
     // shuffle partitions (the scale property: no single-task index), and a

@@ -423,43 +423,6 @@ class JobsSpec extends GraftSuite {
     assert(cRestart.toSet == cStraight.toSet, "classified stores diverged across restart")
   }
 
-  test("ActivityDetectionJob.runTws: the single-query TWS chain fills the model store") {
-    // stretch item: the reference's one-job enrichment→clustering chain as
-    // a runnable main on transformWithState (StreamingSpec pins the chain
-    // semantics; this pins the store wiring + restart bootstrap path)
-    import spark.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    val base = java.nio.file.Files.createTempDirectory("graft_tws_main").toString
-    val out = s"$base/out"; val ckpt = s"$base/ckpt"; val in = s"$base/in"
-    new java.io.File(in).mkdirs()
-    val sch = "event_id long, ts timestamp, user_id long, event_type string, value double"
-    try {
-      // input fully written before the query starts — the TWS chain's
-      // per-user counters and clustering buffer are batch-boundary
-      // sensitive, and a write racing the file listing splits batches
-      // arbitrarily
-      (0 until 8).map(i => (100L + i, new java.sql.Timestamp((100L + i) * 1000L),
-          i.toLong % 3, "view", (i % 5).toDouble))
-        .toDF("event_id", "ts", "user_id", "event_type", "value")
-        .write.mode("append").parquet(in)
-      val q = ActivityDetectionJob.runTws(spark,
-        spark.readStream.schema(sch).parquet(in),
-        out, ckpt, k = 3, decay = 0.2,
-        windowSizeMs = 12 * 3600 * 1000L, minCount = 2, maxCount = 6)
-      try q.processAllAvailable() finally q.stop()
-      val models = spark.read.parquet(s"$out/models").collect()
-      assert(models.map(_.getAs[Int]("version")).toSeq == Seq(1),
-        "maxCount=6 must fire exactly one model from 8 points")
-      // the chain trains on the ENRICHED 2-d space (value, log1p(count))
-      val cents = models.head.getAs[scala.collection.Seq[scala.collection.Seq[Double]]]("centroids")
-      assert(cents.nonEmpty && cents.forall(_.length == 2))
-    } finally prevProv match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None    => spark.conf.unset(provKey)
-    }
-  }
-
   test("ActivityDetectionJob.run: composed job races safely; every classified row is consistent with its recorded model") {
     val out = tmp("adj3_out"); val ckpt = tmp("adj3_ckpt")
     val (modelQ, classifyQ) = ActivityDetectionJob.run(spark, replayed, None,

@@ -9,10 +9,26 @@ import java.nio.file.Files
   * and restarted from its checkpoint; the final upsert table must equal the
   * batch recomputation — no loss, no duplicates (the reference's
   * exactly-once contract: FlinkStreamingJob.scala:69-97 checkpoints +
-  * idempotent upserts). Also runs the stateful pipeline on the RocksDB
-  * state store provider (reference's RocksDB backend, application.conf:106-114).
+  * idempotent upserts). Also runs the stateful pipeline and the
+  * clustering-window restart on the RocksDB state store provider
+  * (reference's RocksDB backend, application.conf:106-114).
   */
 class RecoverySpec extends GraftSuite {
+
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDB =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run `body` with the session's state store provider set to `provider`
+    * (the session default when None), restoring the previous setting. */
+  private def withStateStore[T](provider: Option[String])(body: => T): T = {
+    val prev = spark.conf.getOption(ProviderKey)
+    provider.foreach(spark.conf.set(ProviderKey, _))
+    try body finally prev match {
+      case Some(v) => spark.conf.set(ProviderKey, v)
+      case None => spark.conf.unset(ProviderKey)
+    }
+  }
 
   test("runResolved chain resumes from checkpoint: BOTH stateful operators recover") {
     // The full Task-1 chain holds two stateful operators in one query
@@ -115,7 +131,14 @@ class RecoverySpec extends GraftSuite {
     assert(got.sameElements(expected))
   }
 
-  test("clustering window survives a checkpoint restart: decay chain and control params intact") {
+  // once per state store provider: the default and RocksDB, which
+  // SoakBench and ReplayBench offer through SPARK_GRAFT_STATE=rocksdb
+  for ((suffix, provider) <- Seq("" -> None, " (RocksDB)" -> Some(RocksDB)))
+    test(s"clustering window survives a checkpoint restart: decay chain and control params intact$suffix") {
+      withStateStore(provider)(clusterWindowRestart())
+    }
+
+  private def clusterWindowRestart(): Unit = {
     // the model stream is stopped between two windows and restarted from
     // its checkpoint; window 2's decay blend must use window 1's centroids
     // from RECOVERED state, and a control line delivered after the restart
@@ -237,10 +260,7 @@ class RecoverySpec extends GraftSuite {
     import spark.implicits._
     import graft.streaming.{Ev, StreamOps}
     implicit val sq = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withStateStore(Some(RocksDB)) {
       val all = Tables.events(spark, sf)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
         .as[Ev].collect().toSeq
@@ -255,11 +275,6 @@ class RecoverySpec extends GraftSuite {
           .slidingStats(Tables.events(spark, sf), exactDistinct = false).count()
         assert(streamed == batch)
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

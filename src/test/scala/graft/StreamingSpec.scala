@@ -538,52 +538,10 @@ class StreamingSpec extends GraftSuite {
     assert(a == b, s"model depends on same-timestamp arrival order:\n $a\n vs $b")
   }
 
-  test("transformWithState as-of enrichment equals the flatMapGroupsWithState op") {
-    // Spark 4's stateful-processor API (RocksDB-backed) must produce the
-    // SAME enrichment as the classic flatMapGroupsWithState form when fed
-    // the same micro-batches in the same order
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val all = eventsTyped
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = MemoryStream[Ev]
-      val q = StreamOps.asOfEnrichTws(stream.toDS())
-        .writeStream.format("memory").queryName("asof_tws_out")
-        .outputMode("append").start()
-      try {
-        all.grouped(math.max(1, all.length / 4 + 1))
-          .foreach { c => stream.addData(c); q.processAllAvailable() }
-        val tws = spark.table("asof_tws_out").collect()
-          .map(r => (r.getLong(0), r.getDouble(3))).toMap
-        // classic op fed identically
-        val stream2 = MemoryStream[Ev]
-        val q2 = StreamOps.asOfEnrich(stream2.toDS())
-          .writeStream.format("memory").queryName("asof_classic_out")
-          .outputMode("append").start()
-        try {
-          all.grouped(math.max(1, all.length / 4 + 1))
-            .foreach { c => stream2.addData(c); q2.processAllAvailable() }
-          val classic = spark.table("asof_classic_out").collect()
-            .map(r => (r.getLong(0), r.getDouble(3))).toMap
-          assert(tws.nonEmpty && tws == classic,
-            s"tws=${tws.size} classic=${classic.size} diverge")
-        } finally q2.stop()
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("transformWithState clustering window equals the flatMapGroupsWithState op across every fire path") {
-    // the two API forms share ClusterWindowLogic; this pins the adapters
-    // (state plumbing, timer set vs single timeout) through regular fire,
-    // control-line re-parameterization, early fire, extension, delayed
-    // fire, and ahead-of-window carry-over — identical chunk sequence,
-    // identical model stream
+  test("clustering window across every fire path emits the pinned model stream") {
+    // one chunk sequence through regular fire, control-line
+    // re-parameterization, early fire, extension, delayed fire and
+    // ahead-of-window carry-over; the model stream is pinned as literals
     import spark.implicits._
     implicit val sq = spark.sqlContext
     def pt(sec: Long, x: Double) = graft.streaming.ClusterIn(
@@ -598,103 +556,24 @@ class StreamingSpec extends GraftSuite {
       Seq(ctrl(131L, "# noop")),                                 // window 3 end passes: extension
       // past the 131s watermark (at-or-behind rows are late-filtered)
       Seq(pt(140L, 1.0), pt(141L, 2.0)))                         // delayed fire v3
-    def run(tag: String,
-            op: org.apache.spark.sql.Dataset[graft.streaming.ClusterIn] => org.apache.spark.sql.Dataset[graft.streaming.ModelRow]): Seq[(Int, Int, Seq[Seq[Double]], Seq[Double], Seq[String], Int)] = {
-      val stream = MemoryStream[graft.streaming.ClusterIn]
-      val q = op(stream.toDS().withWatermark("ts", "0 seconds"))
-        .writeStream.format("memory").queryName(tag)
-        .outputMode("append").start()
-      try {
-        chunks.foreach { c => stream.addData(c); q.processAllAvailable() }
-        spark.table(tag).orderBy("version").collect().toSeq.map(r =>
-          (r.getInt(0), r.getInt(1),
-            r.getSeq[scala.collection.Seq[Double]](2).map(_.toSeq).toSeq,
-            r.getSeq[Double](3).toSeq, r.getSeq[String](4).toSeq, r.getInt(6)))
-      } finally q.stop()
-    }
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val stream = MemoryStream[graft.streaming.ClusterIn]
+    val q = StreamOps.clusterWindows(
+        stream.toDS().withWatermark("ts", "0 seconds"),
+        k = 2, decay = 0.2, windowSizeMs = 60000L, minCount = 2, maxCount = 8)
+      .writeStream.format("memory").queryName("cw_fire_paths")
+      .outputMode("append").start()
     try {
-      val classic = run("cw_api_classic", ds => StreamOps.clusterWindows(
-        ds, k = 2, decay = 0.2, windowSizeMs = 60000L, minCount = 2, maxCount = 8))
-      val tws = run("cw_api_tws", ds => StreamOps.clusterWindowsTws(
-        ds, k = 2, decay = 0.2, windowSizeMs = 60000L, minCount = 2, maxCount = 8))
-      assert(classic.map(_._1) == Seq(1, 2, 3),
-        s"scenario should produce 3 models, got ${classic.map(t => (t._1, t._2))}")
-      assert(classic(1)._3.length == 3, "v2 must honor the k=3 control line")
-      assert(tws == classic,
-        s"transformWithState form diverged:\n tws=$tws\n classic=$classic")
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("single-query chained stateful pipeline: per-user enrichment into the clustering window") {
-    // the reference chains enrichment and clustering inside ONE job;
-    // flatMapGroupsWithState cannot (planner rejects a stateful op behind
-    // it), transformWithState can — enrichedClusterChain re-declares the
-    // enrichment output's event time and feeds the clustering window in
-    // the same query. Oracle: the same enrichment computed driver-side,
-    // fed through the CLASSIC clusterWindows with identical chunking.
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val all = eventsTyped.sortBy(e => (e.ts.getTime, e.event_id))
-    val chunks = all.grouped(all.length / 3 + 1).toSeq
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // chained single query (window >> event span: count-trigger only)
-      val evStream = MemoryStream[graft.streaming.Ev]
-      val q = StreamOps.enrichedClusterChain(
-          evStream.toDS().withWatermark("ts", "1 hour"),
-          k = 3, decay = 0.2, windowSizeMs = 3650L * 24 * 3600 * 1000,
-          minCount = 5, maxCount = 50)
-        .writeStream.format("memory").queryName("chain_out")
-        .outputMode("append").start()
-      try {
-        chunks.foreach { c => evStream.addData(c); q.processAllAvailable() }
-      } finally q.stop()
-      val chained = spark.table("chain_out").orderBy("version").collect().toSeq
+      chunks.foreach { c => stream.addData(c); q.processAllAvailable() }
+      val models = spark.table("cw_fire_paths").orderBy("version").collect().toSeq
         .map(r => (r.getInt(0), r.getInt(1),
-          r.getSeq[scala.collection.Seq[Double]](2).map(_.toSeq).toSeq))
-
-      // driver-side enrichment (per-user counter over per-user (ts, id)
-      // order) -> classic operator, same chunking
-      val counts = scala.collection.mutable.Map.empty[Long, Long]
-      val enrichedChunks = chunks.map(_.groupBy(_.user_id).toSeq
-        .flatMap { case (u, evs) =>
-          evs.sortBy(e => (e.ts.getTime, e.event_id)).map { e =>
-            val n = counts.getOrElse(u, 0L) + 1
-            counts(u) = n
-            graft.streaming.ClusterIn(e.ts, Seq(e.value, math.log1p(n.toDouble)), "")
-          }
-        })
-      val ptStream = MemoryStream[graft.streaming.ClusterIn]
-      val q2 = StreamOps.clusterWindows(
-          ptStream.toDS().withWatermark("ts", "1 hour"),
-          k = 3, decay = 0.2, windowSizeMs = 3650L * 24 * 3600 * 1000,
-          minCount = 5, maxCount = 50)
-        .writeStream.format("memory").queryName("chain_oracle_out")
-        .outputMode("append").start()
-      try {
-        enrichedChunks.foreach { c => ptStream.addData(c); q2.processAllAvailable() }
-      } finally q2.stop()
-      val oracle = spark.table("chain_oracle_out").orderBy("version").collect().toSeq
-        .map(r => (r.getInt(0), r.getInt(1),
-          r.getSeq[scala.collection.Seq[Double]](2).map(_.toSeq).toSeq))
-
-      assert(chained.nonEmpty && chained.map(_._1) == (1 to chained.length),
-        s"chain produced ${chained.length} models")
-      assert(chained == oracle,
-        s"chained query diverged from enrich∘cluster composition: " +
-          s"chained=${chained.map(_._1)} oracle=${oracle.map(_._1)}")
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+          r.getSeq[scala.collection.Seq[Double]](2).length))
+      // (version, n_points, k): v1 = window 1's 5 points; v2 = the carried
+      // 62s point + 7 more at maxCount, under k=3; v3 = the extended
+      // window 3 once it holds minCount points (the 130s point waits for
+      // window 4)
+      assert(models == Seq((1, 5, 2), (2, 8, 3), (3, 2, 3)),
+        s"model stream drifted: $models")
+    } finally q.stop()
   }
 
   test("append-mode session windows emit exactly the batch sessions once the watermark closes them") {
