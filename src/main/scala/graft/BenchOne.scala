@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-loop benchmark: time ONLY the named queries (best-of-3, same
   * session/config/noop-sink contract as [[Bench]]) so a single-operator
   * change can be measured without a full 70-query sweep.
@@ -17,15 +15,7 @@ import org.apache.spark.sql.SparkSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("bench-one")
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(',').filter(_.nonEmpty)
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.{CurDoc, CurateStream}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Sustained-ingest soak of the live curation pipeline: drain the full
@@ -18,18 +17,10 @@ import org.apache.spark.sql.functions._
 object CurateSoak {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val backend = sys.env.getOrElse("SPARK_GRAFT_STATE", "hdfs")
     val nChunks = args.lift(0).map(_.toInt).getOrElse(16)
     val withShards = args.lift(1).contains("shards")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("curate-soak")
     if (backend == "rocksdb")
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")

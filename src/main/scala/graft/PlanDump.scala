@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the executed plan of named queries (the brief's
   * "explain and iterate" loop, scripted). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = Sessions.local("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { name =>
       println(s"========== $name ==========")

@@ -29,14 +29,12 @@ object Tables {
     * where the gate fires. When the input already plans >= cores
     * partitions (many files / many row groups — the production case) the
     * df is returned unchanged, so nothing here is tuned to local mode.
-    * The planned-partition probe runs once per (session, table), not once
-    * per query invocation. */
-  private val scanParts = new graft.operators.SessionMemo[Integer]
-  private[graft] def parallel(df: DataFrame, key: String): DataFrame = {
+    * The planned-partition probe runs once per (session, dir, table), not
+    * once per query invocation. */
+  private[graft] def parallel(df: DataFrame, dir: String, table: String): DataFrame = {
     val s = df.sparkSession
     val cores = s.sparkContext.defaultParallelism
-    if (sys.env.contains("GRAFT_NOPAR")) return df // A/B kill switch (dev)
-    val n = scanParts.get(s, key)(Integer.valueOf(df.rdd.getNumPartitions))
+    val n = graft.operators.Artifacts.get(s, dir, s"scanParts|$table")(df.rdd.getNumPartitions)
     if (n >= cores) df else df.repartition(cores)
   }
 

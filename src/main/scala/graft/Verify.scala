@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardCopyOption}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -21,16 +20,8 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet // optional query-name subset for local runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val capSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_CAP_SEC", "120").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("verify")
     new java.io.File(outDir).mkdirs()
     def q(s: String): String = Jsons.quote(s)
     // the sf dir is known here: enable the data-dependent oracles

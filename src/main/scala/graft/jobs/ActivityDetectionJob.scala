@@ -224,7 +224,7 @@ object ActivityDetectionJob {
     val (sfDir, outDir, ckpt) = (args(0), args(1), args(2))
     val speedup = args.lift(3).getOrElse("10000")
     val runSec = args.lift(4).map(_.toLong).getOrElse(Long.MaxValue)
-    val spark = Jobs.session("activity-detection")
+    val spark = graft.Sessions.local("activity-detection")
     val events = Jobs.replayEvents(spark, sfDir, speedup)
     val ctrl = args.lift(5).map(d => spark.readStream.text(d))
     val (modelQ, classifyQ) = run(spark, events, ctrl, outDir, ckpt)

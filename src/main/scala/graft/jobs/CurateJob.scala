@@ -70,14 +70,7 @@ object CurateJob {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_curate"
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-curate")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("curate")
     val aud = run(spark, sfDir, outDir)
     aud.show(50, truncate = false)
     spark.stop()

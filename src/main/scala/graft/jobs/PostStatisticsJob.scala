@@ -151,16 +151,16 @@ object PostStatisticsJob {
 
   /** CLI: PostStatisticsJob <sfDir> <outDir> <checkpointDir> [speedup] [runSeconds] [mode]
     * — mode `resolved` runs the full reply-resolved chain on the default
-    * scale-out resolver (`resolved-scaleout` is a back-compat alias);
-    * `resolved-singlegroup` selects the reference-faithful fallback. */
+    * scale-out resolver; `resolved-singlegroup` selects the
+    * reference-faithful fallback. */
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, ckpt) = (args(0), args(1), args(2))
     val speedup = args.lift(3).getOrElse("10000")
     val runSec = args.lift(4).map(_.toLong).getOrElse(Long.MaxValue)
-    val spark = Jobs.session("post-statistics")
+    val spark = graft.Sessions.local("post-statistics")
     val events = Jobs.replayEvents(spark, sfDir, speedup)
     val q = args.lift(5) match {
-      case Some("resolved") | Some("resolved-scaleout") =>
+      case Some("resolved") =>
         runResolved(spark, events, outDir, ckpt)
       case Some("resolved-singlegroup") =>
         runResolved(spark, events, outDir, ckpt, scaleOut = false)
@@ -178,20 +178,6 @@ private[jobs] object Jobs {
   def await(q: StreamingQuery, runSec: Long): Unit =
     if (runSec >= Long.MaxValue / 1000L) q.awaitTermination()
     else q.awaitTermination(runSec * 1000L)
-
-  def session(name: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-$name")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   /** The scaled replay of `<sfDir>/events.parquet` (S1/S3). */
   def replayEvents(spark: SparkSession, sfDir: String, speedup: String): DataFrame =

@@ -104,15 +104,7 @@ object PrepJob {
   /** CLI entry: PrepJob <sfDir> <warehousePath> */
   def main(args: Array[String]): Unit = {
     val Array(sfDir, out) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("prep")
     run(spark, sfDir, out)
     spark.stop()
   }

@@ -99,7 +99,7 @@ object RecommendationsJob {
     val (sfDir, outDir, ckpt) = (args(0), args(1), args(2))
     val speedup = args.lift(3).getOrElse("10000")
     val runSec = args.lift(4).map(_.toLong).getOrElse(Long.MaxValue)
-    val spark = Jobs.session("recommendations")
+    val spark = graft.Sessions.local("recommendations")
     val events = Jobs.replayEvents(spark, sfDir, speedup)
     val q = run(spark, events, sfDir, outDir, ckpt)
     Jobs.await(q, runSec)

@@ -41,14 +41,7 @@ object ShardJob {
   /** CLI entry: ShardJob <sfDir> <outPath> */
   def main(args: Array[String]): Unit = {
     val Array(sfDir, out) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("shard")
     writePartitioned(spark, sfDir, out)
     spark.stop()
   }

@@ -72,11 +72,7 @@ object SketchJob {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val store = if (args.length > 1) args(1) else "/tmp/graft_sketch_store"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("sketch")
     val regs = maintain(spark, Tables.documents(spark, sfDir), store)
     estimates(regs).show(50, truncate = false)
     spark.stop()

@@ -38,12 +38,10 @@ object ActivityPack {
         round(element_at(col("f"), 2), 4).as("f1"),
         round(element_at(col("f"), 3), 4).as("f2"))
 
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, KMeans.Model]()
-
   /** Seeded deterministic model over an sf dir's documents. Memoized per
-    * directory — a model is trained once and classified with many times
-    * (same policy as SimilarityPack's IVF centroid cache). Cap-selected
+    * (session, dir) in [[Artifacts]] — a model is trained once and
+    * classified with many times (same policy as SimilarityPack's IVF
+    * centroids). Cap-selected
     * ([[graft.functions.KMeansDistributed.train]]): at or below the
     * TrainSample cap the full set is collected in doc_id order and trained
     * driver-side (bit-identical to previous rounds, so the data-dependent
@@ -51,11 +49,12 @@ object ActivityPack {
     * over all rows from a bootstrap seeded by the deterministic
     * hash-priority sample — no full collect at any input size. */
   def model(s: SparkSession, d: String): KMeans.Model =
-    modelCache.computeIfAbsent(d, _ =>
+    Artifacts.get(s, d, "activityModel") {
       graft.functions.KMeansDistributed.train(
         featureDf(s, d).select(col("doc_id"),
           array(col("f0"), col("f1"), col("f2")).as("v")),
-        col("doc_id"), col("v"), K, seed = 137L))
+        col("doc_id"), col("v"), K, seed = 137L)
+    }
 
   val queries: Map[String, Q] = Map(
     // F5 text featurization (reference tokenizer + 3 ratios,
@@ -77,7 +76,7 @@ object ActivityPack {
       // the scan already plans >= cores partitions). q21/q22 measured
       // SLOWER with the same move (their partial agg collapses harder, so
       // the raw-row shuffle does not pay) — deliberately not applied there.
-      Tables.parallel(Tables.events(s, d), s"$d/events")
+      Tables.parallel(Tables.events(s, d), d, "events")
         .groupBy(window(col("ts"), "12 hours", "1 hour").as("w"), col("user_id"))
         .agg(count(lit(1)).as("frequency"))
         .select(unix_timestamp(col("w.start")).as("wstart"), col("user_id"), col("frequency"))

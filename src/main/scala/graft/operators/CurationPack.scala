@@ -171,17 +171,11 @@ object CurationPack {
     * trained once per session per corpus (the epoch fold re-ran inside
     * every consumer's plan otherwise — epochs × full-pass re-aggregation
     * per invocation) and collapsed to a materialized 1-row weight
-    * relation; bpeChain's [[SessionMemo]] pattern and staleness contract
-    * ([[invalidatePerceptron]] clears). */
-  private val pctMemo = new SessionMemo[DataFrame]
+    * relation through [[Artifacts]], bpeChain's pattern. */
   private def trainedQualityPerceptron(s: SparkSession, d: String): DataFrame =
-    pctMemo.get(s, d) {
+    Artifacts.get(s, d, "qualityPerceptron") {
       trainPerceptron(pctFeatures(s, d), 4, PCT_EPOCHS).localCheckpoint()
     }
-
-  /** Drop memoized perceptron weights (data changed mid-session). */
-  def invalidatePerceptron(s: SparkSession, dir: Option[String] = None): Unit =
-    pctMemo.invalidate(s, dir)
 
   /** [[trainPerceptron]] seeded with an existing 1-row weight relation —
     * the continuation form the online/mini-batch path builds on: each new

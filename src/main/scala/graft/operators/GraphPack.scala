@@ -70,20 +70,13 @@ object GraphPack {
     // q115 at sf0.1). Build side = the rank relation: one (node, rank)
     // pair per node per partition — the per-partition build is |nodes| /
     // shuffle-partitions rows, the size AQE already bounds at scale.
-    // Escape hatch (r11 advice): under heavy dst-skew a hash build can
-    // exceed memory where SMJ would spill — `graft.pagerank.shj=false`
-    // restores SMJ without a code change.
-    val useShj = edges.sparkSession.conf
-      .get("graft.pagerank.shj", "true").toBoolean
-    def shj(df: DataFrame): DataFrame =
-      if (useShj) df.hint("shuffle_hash") else df
     (1 to iters).foldLeft(r0) { (r, _) =>
       val cin = ew.join(
-          shj(r.withColumnRenamed("node", "src")), "src")
+          r.withColumnRenamed("node", "src").hint("shuffle_hash"), "src")
         .select(col("dst").as("node"),
           expr(s"($PR_DNUM * rank * w) div ($PR_DDEN * tw)").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).cast("long").as("cin"))
-      withN.join(shj(cin), Seq("node"), "left")
+      withN.join(cin.hint("shuffle_hash"), Seq("node"), "left")
         .select(col("node"),
           (expr(s"${(PR_DDEN - PR_DNUM) * PR_SCALE} div ($PR_DDEN * n_nodes)")
             + coalesce(col("cin"), lit(0L))).cast("long").as("rank"))
@@ -117,23 +110,15 @@ object GraphPack {
   /** The memoized resolved-chain relation all three tree queries consume
     * (q45/q46 project the path column away; q135 keeps it): the fixpoint
     * is a per-corpus BUILD artifact — ~depth rounds of eager
-    * localCheckpoint joins — so it runs once per (session, dir), exactly
-    * like TextPack.bpeChain (same [[SessionMemo]] staleness contract:
-    * data under `dir` is immutable for the session; [[invalidateChains]]
-    * clears, stopped sessions are cleaned by the memo's listener). The
-    * union of round deltas is collapsed to ONE materialized LogicalRDD so
-    * every consumer scans a single bounded relation instead of re-planning
-    * (and re-reading) the per-round union. */
-  private val chainMemo = new SessionMemo[DataFrame]
+    * localCheckpoint joins — so it runs once per (session, dir) through
+    * [[Artifacts]], like TextPack.bpeChain. The union of round deltas is
+    * collapsed to ONE materialized LogicalRDD so every consumer scans a
+    * single bounded relation instead of re-planning (and re-reading) the
+    * per-round union. */
   private[graft] def resolvedChains(s: SparkSession, d: String): DataFrame =
-    chainMemo.get(s, d) {
+    Artifacts.get(s, d, "resolvedChains") {
       resolveChains(s, d, withPath = true).localCheckpoint()
     }
-
-  /** Drop memoized chains (data changed mid-session); stopped sessions
-    * are cleaned automatically. */
-  def invalidateChains(s: SparkSession, dir: Option[String] = None): Unit =
-    chainMemo.invalidate(s, dir)
 
   /** The shared fixpoint behind [[resolveRoots]] (q45/q46) and the q135
     * thread assembly. With `withPath` the delta additionally carries the

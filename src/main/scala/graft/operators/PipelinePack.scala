@@ -62,24 +62,17 @@ object PipelinePack {
     * arbitrary multi-hop dup chains — the transitive closure q28's
     * single-hop clustering deliberately skips. Runs the adaptive
     * [[connectedComponents]]: cheap propagation for the shallow common
-    * case, log-round star contraction when the graph turns out deep. */
+    * case, log-round star contraction when the graph turns out deep.
+    *
+    * The CC labeling is a per-corpus BUILD artifact (an eager multi-round
+    * fixpoint) shared by q44/q137/q142 and the q161-q164 decisions — run
+    * once per (session, dir) through [[Artifacts]] and collapsed to one
+    * materialized LogicalRDD, the TextPack.bpeChain pattern. */
   def dupClusterLabels(s: SparkSession, d: String): DataFrame =
-    ccMemo.get(s, d) {
+    Artifacts.get(s, d, "dupClusterLabels") {
       connectedComponents(TextPack.pairsDf(s, d).select(col("i"), col("j")))
         .localCheckpoint()
     }
-
-  /** The CC labeling is a per-corpus BUILD artifact (an eager multi-round
-    * fixpoint) shared by q44/q137/q142 and the q161-q164 decisions — run
-    * once per (session, dir) and collapsed to one materialized LogicalRDD,
-    * the TextPack.bpeChain pattern ([[SessionMemo]]'s immutable-testdata
-    * staleness contract; [[invalidateDupLabels]] clears). */
-  private val ccMemo = new SessionMemo[DataFrame]
-
-  /** Drop memoized dup-cluster labels (data changed mid-session); stopped
-    * sessions are cleaned automatically. */
-  def invalidateDupLabels(s: SparkSession, dir: Option[String] = None): Unit =
-    ccMemo.invalidate(s, dir)
 
   /** Adaptive connected components: min-label propagation with a small
     * round budget first (real dup graphs are near-cliques — it converges
@@ -233,15 +226,9 @@ object PipelinePack {
     * and any caller scoring against the corpus) — at cluster scale a
     * materialized table bucketed by `tok`, like TextPack's shingle index. */
   private[operators] def bm25Index(s: SparkSession, d: String): DataFrame =
-    // memoized + lineage-truncated (ccMemo's pattern): the index is a
-    // per-corpus build artifact probed by every retrieval query
-    bm25Memo.get(s, d) { buildBm25Index(s, d) }
-
-  private val bm25Memo = new SessionMemo[DataFrame]
-
-  /** Drop the memoized BM25 index (data changed mid-session). */
-  def invalidateBm25(s: SparkSession, dir: Option[String] = None): Unit =
-    bm25Memo.invalidate(s, dir)
+    // memoized + lineage-truncated (dupClusterLabels' pattern): the index
+    // is a per-corpus build artifact probed by every retrieval query
+    Artifacts.get(s, d, "bm25Index") { buildBm25Index(s, d) }
 
   private def buildBm25Index(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -781,14 +768,14 @@ object PipelinePack {
     * for docs that pass it but lose their near-dup cluster to a better
     * copy (q142's policy). Lineage-truncated and memoized like
     * TextPack.bpeChain (four consumers with disjoint agg shapes — no
-    * exchange for Spark to reuse across separate actions); same
-    * immutable-testdata staleness contract, [[invalidateDecisions]]
-    * clears. Scale: q119's doc_id-keyed joins (co-locating on a
+    * exchange for Spark to reuse across separate actions). Built from the
+    * dup-cluster labels, so invalidating the dir in [[Artifacts]] drops
+    * both. Scale: q119's doc_id-keyed joins (co-locating on a
     * doc_id-bucketed corpus), the adaptive CC labeling, and a
     * cluster-side join far smaller than the corpus; the stored relation
     * is 8 narrow columns per doc. */
   def curationDecisions(s: SparkSession, d: String): DataFrame =
-    decMemo.get(s, d) {
+    Artifacts.get(s, d, "curationDecisions") {
       val verdict = CurationPack.queries("q119_curation_verdict")(s, d)
         .select(col("doc_id"), col("reason").as("v_reason"),
           col("keep").as("v_keep"))
@@ -817,13 +804,6 @@ object PipelinePack {
           col("n_tokens"), col("quality"), col("reason"), col("keep"))
         .localCheckpoint()
     }
-
-  private val decMemo = new SessionMemo[DataFrame]
-
-  /** Drop memoized decisions (data changed mid-session); stopped
-    * sessions are cleaned automatically. */
-  def invalidateDecisions(s: SparkSession, dir: Option[String] = None): Unit =
-    decMemo.invalidate(s, dir)
 
   /** q162: per-source release datacard over a decisions frame. Quality
     * means stay integer (q129's e4 contract); a source with zero kept

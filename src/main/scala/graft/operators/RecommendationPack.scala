@@ -261,19 +261,12 @@ object RecommendationPack {
     * AsyncCandidateUsersLookupFunction:44.)
     */
   private def scored(s: SparkSession, d: String): DataFrame =
-    scoredMemo.get(s, d) { buildScored(s, d) }
-
-  /** The scored relation is a per-corpus BUILD artifact shared by q53/q54
-    * (the persisted scored-candidate table of the reference's pipeline):
-    * memoized and lineage-truncated like TextPack.bpeChain — a plain
-    * .cache() still re-analyzes + canonicalizes the whole LSH lineage on
-    * every invocation (~1 s/call of driver time at sf0.1), which the memo
-    * removes; [[SessionMemo]]'s immutable-testdata staleness contract. */
-  private val scoredMemo = new SessionMemo[DataFrame]
-
-  /** Drop memoized scored candidates (data changed mid-session). */
-  def invalidateScored(s: SparkSession, dir: Option[String] = None): Unit =
-    scoredMemo.invalidate(s, dir)
+    // A per-corpus BUILD artifact shared by q53/q54 (the persisted
+    // scored-candidate table of the reference's pipeline): memoized and
+    // lineage-truncated like TextPack.bpeChain — a plain .cache() still
+    // re-analyzes + canonicalizes the whole LSH lineage on every
+    // invocation (~1 s/call of driver time at sf0.1), which the memo removes.
+    Artifacts.get(s, d, "scored") { buildScored(s, d) }
 
   private def buildScored(s: SparkSession, d: String): DataFrame = {
     val sg = sig(s, d).cache()
@@ -300,7 +293,7 @@ object RecommendationPack {
       .filter(col("est_sim") >= MIN_SIM)
       .select(col("ucls"), col("ccls"), col("est_sim"))
     // expand class pairs to user pairs; J6 exclude known. Materialized
-    // once (see scoredMemo): q53 and q54 rank the SAME scored relation
+    // once (see scored): q53 and q54 rank the SAME scored relation
     // (q54 adds the activity filter).
     expandClassPairs(clsSims, userCls, CLASS_MEMBER_CAP).localCheckpoint()
   }

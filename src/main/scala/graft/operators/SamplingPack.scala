@@ -138,11 +138,6 @@ object SamplingPack {
        |FROM (SELECT doc_id, str_split(text, ' ') AS t FROM documents),
        |     LATERAL unnest(range(0, (len(t)-1)//$SPAN + 1)) AS u(k)""".stripMargin
 
-  /** q85's Bloom-filter sizing estimate (one HLL scan of the train spans)
-    * — a per-corpus scalar, memoized so each invocation doesn't re-run
-    * the sizing job ([[SessionMemo]] staleness contract). */
-  private val nTrainMemo = new SessionMemo[Long]
-
   val queries: Map[String, Q] = Map(
     // Corpus-wide heavy hitters: exact top-k token frequencies + corpus
     // share. groupBy gives the map-side partial count; orderBy+limit plans
@@ -408,7 +403,7 @@ object SamplingPack {
       // the sizing estimate is an EAGER action; memoized per (session, dir)
       // so re-invocations don't re-scan the span stream just to size the
       // filter (the filter itself is still built from the inputs each run)
-      val nTrain = nTrainMemo.get(s, d) {
+      val nTrain = Artifacts.get(s, d, "q85.nTrain") {
         math.max(1000L, math.round(1.1 *
           tagged.filter(!col("is_test"))
             .agg(approx_count_distinct(col("h"))).head().getLong(0)))

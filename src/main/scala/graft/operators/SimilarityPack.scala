@@ -195,19 +195,13 @@ object SimilarityPack {
     * corpus; rank by round(cos, 6) with vec_id tiebreak for cross-engine
     * determinism. */
   private def bruteTopK(s: SparkSession, d: String): DataFrame =
-    annMemo.get(s, s"$d|brute") { buildBruteTopK(s, d).localCheckpoint() }
+    Artifacts.get(s, d, "ann|brute") { buildBruteTopK(s, d).localCheckpoint() }
 
-  /** The three per-corpus top-k search results and the IVF cell
-    * assignment are BUILD artifacts shared across the ANN family (q40/
-    * q42/q43 expose them; q111 composes all three, q126 re-ranks the LSH
-    * one, q78/q166 reuse the cell assignment) — built once per (session,
-    * dir) and lineage-truncated, the bpeChain [[SessionMemo]] pattern
-    * and staleness contract ([[invalidateAnn]] clears). */
-  private val annMemo = new SessionMemo[DataFrame]
-
-  /** Drop memoized ANN search/assignment relations (data changed
-    * mid-session); stopped sessions are cleaned automatically. */
-  def invalidateAnn(s: SparkSession): Unit = annMemo.invalidate(s)
+  // The three per-corpus top-k search results and the IVF cell
+  // assignment are BUILD artifacts shared across the ANN family (q40/
+  // q42/q43 expose them; q111 composes all three, q126 re-ranks the LSH
+  // one, q78/q166 reuse the cell assignment) — built once per (session,
+  // dir) through Artifacts and lineage-truncated, the bpeChain pattern.
 
   /** Test probe: the brute top-k WITHOUT the memo's lineage truncation,
     * so SimilarityPackSpec can assert the build's plan shape (query-side
@@ -235,7 +229,7 @@ object SimilarityPack {
     * cosine + top-k within candidates only. Sub-quadratic: n² collapses to
     * Σ bucket². */
   private def lshTopK(s: SparkSession, d: String): DataFrame =
-    annMemo.get(s, s"$d|lsh") { buildLshTopK(s, d).localCheckpoint() }
+    Artifacts.get(s, d, "ann|lsh") { buildLshTopK(s, d).localCheckpoint() }
 
   private def buildLshTopK(s: SparkSession, d: String): DataFrame = {
     val e = vecs(s, d)
@@ -265,7 +259,7 @@ object SimilarityPack {
     * NPROBE nearest cells, exact cosine top-k within probed cells only.
     * Search cost: n/IVF_CELLS * NPROBE candidates per query instead of n. */
   private def ivfTopK(s: SparkSession, d: String): DataFrame =
-    annMemo.get(s, s"$d|ivf") { buildIvfTopK(s, d).localCheckpoint() }
+    Artifacts.get(s, d, "ann|ivf") { buildIvfTopK(s, d).localCheckpoint() }
 
   private def buildIvfTopK(s: SparkSession, d: String): DataFrame = {
     val cents = ivfCentroids(s, d)
@@ -731,7 +725,7 @@ object SimilarityPack {
     * argmin over centroid literals — one narrow pass, shared by the IVF
     * search (q43) and semantic dedup (q78). */
   private def assignedCells(s: SparkSession, d: String): DataFrame =
-    annMemo.get(s, s"$d|cells") { buildAssignedCells(s, d).localCheckpoint() }
+    Artifacts.get(s, d, "ann|cells") { buildAssignedCells(s, d).localCheckpoint() }
 
   private def buildAssignedCells(s: SparkSession, d: String): DataFrame = {
     val cents = ivfCentroids(s, d)
@@ -746,12 +740,10 @@ object SimilarityPack {
       .select(col("vec_id"), col("v"), col("norm"), col("cell"))
   }
 
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Vector[Vector[Double]]]()
-
   /** Seeded coarse quantizer over an sf dir's embeddings. Memoized per
-    * directory: an IVF index is built once and probed many times —
-    * re-collecting + re-training per query call would repeat the build.
+    * (session, dir) in [[Artifacts]]: an IVF index is built once and
+    * probed many times — re-collecting + re-training per query call would
+    * repeat the build.
     * Cap-selected ([[graft.functions.KMeansDistributed.train]]): at or
     * below the TrainSample cap the full set is collected in vec_id order
     * and trained driver-side (bit-identical to previous rounds, so the
@@ -760,11 +752,12 @@ object SimilarityPack {
     * seeded by the deterministic hash-priority sample — the driver holds
     * only the sample and the IVF_CELLS centroids at any input size. */
   def ivfCentroids(s: SparkSession, d: String): Vector[Vector[Double]] =
-    centroidCache.computeIfAbsent(d, _ =>
+    Artifacts.get(s, d, "ivfCentroids") {
       graft.functions.KMeansDistributed.train(
           vecs(s, d).select(col("vec_id"), col("v")),
           col("vec_id"), col("v"), IVF_CELLS, seed = 137L)
-        .clusters.map(_.centroid))
+        .clusters.map(_.centroid)
+    }
 
   /** −2·v·c + |c|² for literal centroid `c` — argmin of this over cells ==
     * argmin of true squared distance (|v|² is constant per row). */

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.GraphPack
+import graft.operators.{Artifacts, GraphPack}
 import org.apache.spark.sql.functions._
 
 class GraphPackSpec extends GraftSuite {
@@ -109,13 +109,17 @@ class GraphPackSpec extends GraftSuite {
   }
 
   test("resolvedChains is memoized per (session, dir) and invalidation rebuilds identically") {
-    val a = GraphPack.resolvedChains(spark, sf)
-    assert(GraphPack.resolvedChains(spark, sf) eq a,
+    // a fresh session, so invalidating does not make later suites rebuild
+    // the shared session's artifacts
+    val s = spark.newSession()
+    val a = GraphPack.resolvedChains(s, sf)
+    assert(GraphPack.resolvedChains(s, sf) eq a,
       "second call must hit the memo, not re-run the fixpoint")
-    GraphPack.invalidateChains(spark, Some(sf))
-    val b = GraphPack.resolvedChains(spark, sf)
+    Artifacts.invalidate(s, Some(sf))
+    val b = GraphPack.resolvedChains(s, sf)
     assert(!(b eq a), "invalidate must force a rebuild")
     assert(b.exceptAll(a).isEmpty && a.exceptAll(b).isEmpty,
       "rebuilt chain must carry identical rows")
+    Artifacts.invalidate(s)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{PipelinePack, TextPack}
+import graft.operators.{Artifacts, PipelinePack, TextPack}
 import org.apache.spark.sql.functions._
 
 class PipelinePackSpec extends GraftSuite {
@@ -331,13 +331,20 @@ class PipelinePackSpec extends GraftSuite {
   }
 
   test("dupClusterLabels is memoized per (session, dir) and invalidation rebuilds identically") {
-    val a = PipelinePack.dupClusterLabels(spark, sf)
-    assert(PipelinePack.dupClusterLabels(spark, sf) eq a,
+    // a fresh session, so invalidating does not make later suites rebuild
+    // the shared session's artifacts
+    val s = spark.newSession()
+    val a = PipelinePack.dupClusterLabels(s, sf)
+    assert(PipelinePack.dupClusterLabels(s, sf) eq a,
       "second call must hit the memo, not re-run the CC fixpoint")
-    PipelinePack.invalidateDupLabels(spark, Some(sf))
-    val b = PipelinePack.dupClusterLabels(spark, sf)
+    val decA = PipelinePack.curationDecisions(s, sf)
+    Artifacts.invalidate(s, Some(sf))
+    val b = PipelinePack.dupClusterLabels(s, sf)
     assert(!(b eq a), "invalidate must force a rebuild")
     assert(b.exceptAll(a).isEmpty && a.exceptAll(b).isEmpty,
       "rebuilt labeling must carry identical rows")
+    assert(!(PipelinePack.curationDecisions(s, sf) eq decA),
+      "the decisions built from the labels must be rebuilt too")
+    Artifacts.invalidate(s)
   }
 }

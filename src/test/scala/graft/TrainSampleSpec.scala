@@ -41,7 +41,7 @@ class TrainSampleSpec extends GraftSuite {
   test("trained models are memoized and reproducible across invocations") {
     val m1 = graft.operators.ActivityPack.model(spark, sf)
     val m2 = graft.operators.ActivityPack.model(spark, sf)
-    assert(m1 eq m2) // memoized — one train per directory
+    assert(m1 eq m2) // memoized — one train per (session, directory)
     val c1 = graft.operators.SimilarityPack.ivfCentroids(spark, sf)
     assert(c1.length == 8 && c1.forall(_.length == 64))
   }
