@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.KeyedUpsertSink
 import graft.streaming.{CurDoc, CurateStream}
 import org.apache.spark.sql.functions._
 
@@ -53,14 +54,14 @@ object CurateSoak {
     val wall = (System.nanoTime() - t0) / 1e9
     q.stop()
 
-    val verdicts = spark.read.parquet(out)
+    val verdicts = KeyedUpsertSink.read(spark, out).get
     val byReason = verdicts.groupBy(col("reason")).count()
       .collect().map(r => s""""${r.getString(0)}":${r.getLong(1)}""")
       .sorted.mkString("{", ",", "}")
     val nOut = verdicts.count()
     val shardInfo =
       if (withShards) {
-        val sh = spark.read.parquet(s"$base/shards")
+        val sh = KeyedUpsertSink.read(spark, s"$base/shards").get
         val files = sh.select(col("source"), col("file_idx")).distinct().count()
         s""","shard_docs":${sh.count()},"shard_files":$files"""
       } else ""

@@ -1,6 +1,7 @@
 package graft
 
 import graft.jobs.{ActivityDetectionJob, PostStatisticsJob, RecommendationsJob}
+import graft.sources.KeyedUpsertSink
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -106,9 +107,10 @@ object SoakBench {
     def pct(xs: Seq[Long], p: Double): Long =
       if (xs.isEmpty) 0L else xs.sorted.apply(math.min(xs.length - 1,
         (p * xs.length).toInt))
-    val windows1 = spark.read.parquet(o1).select("wstart").distinct().count()
-    val windows2 = spark.read.parquet(o2).select("wstart").distinct().count()
-    val models3 = spark.read.parquet(s"$o3/models").count()
+    def store(dir: String) = KeyedUpsertSink.read(spark, dir).get
+    val windows1 = store(o1).select("wstart").distinct().count()
+    val windows2 = store(o2).select("wstart").distinct().count()
+    val models3 = store(s"$o3/models").count()
 
     jobs.foreach { case (name, q) =>
       val ss = samples.synchronized(samples.get(q.id).map(_.toVector).getOrElse(Vector.empty))

@@ -102,30 +102,16 @@ object ActivityDetectionJob {
     * driver-side ref that a restart would otherwise reset to None — and
     * every event until the next window fire (up to a full 12 h window)
     * would be silently dropped even though the newest model sits in the
-    * store. Seeding the ref from `max(version)` of the store closes that
-    * hole; a handful of model rows, driver-side by design. */
+    * store. Seeding the ref from the store's `max(version)` row closes
+    * that hole; only that one model row reaches the driver. */
   def bootstrapModel(spark: SparkSession, outDir: String): Option[(Int, KMeans.Model)] = {
     import spark.implicits._
-    val path = new org.apache.hadoop.fs.Path(s"$outDir/models")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) None
-    else scala.util.Try {
-      spark.read.parquet(path.toString)
-        .select("version", "n_points", "centroids", "weights", "labels",
-          "avg_shift", "k_diff")
-        .as[ModelRow].collect()
-        .maxByOption(_.version)
-        .map(m => (m.version, toModel(m)))
-    } match {
-      case scala.util.Success(m) => m
-      case scala.util.Failure(e) =>
-        // a CORRUPT store must be distinguishable from a cold start: the
-        // pre-model drop window this bootstrap exists to close would
-        // otherwise silently reopen on every restart
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"model bootstrap from $path failed; starting without a model", e)
-        None
-    }
+    // a CORRUPT store logs a warning (KeyedUpsertSink.latest): the pre-model
+    // drop window this bootstrap exists to close must not reopen silently
+    KeyedUpsertSink.latest(spark, s"$outDir/models", "version")
+      .flatMap(_.select("version", "n_points", "centroids", "weights", "labels",
+        "avg_shift", "k_diff").as[ModelRow].collect().headOption)
+      .map(m => (m.version, toModel(m)))
   }
 
   /** The clustering-model query: featurized points ∪ control lines →

@@ -19,14 +19,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * counts are the sufficient statistic, so the re-derive pass is
   * 2^BITS-sized regardless of how many vectors have flowed.
   *
-  * Exactly-once (LabelQualityJob's pattern): count folds are sums, which
-  * double on a replayed micro-batch, so each fold writes its rows with a
-  * checkpoint-bound version through the monotonic-version upsert
-  * (W10/W11's sink contract — ties keep the EXISTING row). A replayed
-  * batch recomputes a doubled cumulative value, but its version ties the
-  * stored one and loses, so the store is byte-identical to a single
-  * delivery (DriftStreamSpec restarts mid-stream and asserts the final
-  * PSI table equals batch q156).
+  * Exactly-once (LabelQualityJob's pattern): each batch's bucket counts
+  * go through [[KeyedUpsertSink.addCounts]] under a checkpoint-bound
+  * version, so a replayed batch loses the version tie and the store is
+  * byte-identical to a single delivery (DriftStreamSpec restarts
+  * mid-stream and asserts the final PSI table equals batch q156).
   *
   * Scale: the per-batch delta agg is a map-side partial agg down to
   * ≤ 2^BITS rows; the store, baseline, and PSI table are all
@@ -34,33 +31,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * stream volume. */
 object DriftMonitorJob {
 
-  /** Fold one micro-batch's (sig, c) bucket counts into the standing
-    * store. Only buckets touched by the delta are rewritten; the replay
-    * guard is the version tie-break described above. */
-  def fold(spark: SparkSession, store: String, delta: DataFrame,
-           batchId: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cum =
-      if (fs.exists(new org.apache.hadoop.fs.Path(store))) {
-        val standing = spark.read.parquet(store)
-          .select(col("sig"), col("c").as("c0"))
-        delta.join(standing, Seq("sig"), "left")
-          .select(col("sig"),
-            (col("c") + coalesce(col("c0"), lit(0L))).as("c"))
-      } else delta
-    KeyedUpsertSink.upsert(spark, store,
-      cum.withColumn("version", lit(batchId)),
-      Seq("sig"), "version")
-  }
-
   /** Current PSI table from the standing new-side store and the static
     * baseline: full-outer on sig (a bucket seen by only one side still
     * contributes its smoothed term, mirroring the batch groupBy's row
     * set), zero-filled, through the shared [[SimilarityPack.psiOf]]. */
   def psiSnapshot(spark: SparkSession, store: String,
                   baseline: DataFrame): DataFrame = {
-    val cb = spark.read.parquet(store).select(col("sig"), col("c").as("c_b"))
+    val cb = KeyedUpsertSink.read(spark, store).get.select(col("sig"), col("c").as("c_b"))
     val cnt = baseline.join(cb, Seq("sig"), "full_outer")
       .select(col("sig"), coalesce(col("c_a"), lit(0L)).as("c_a"),
         coalesce(col("c_b"), lit(0L)).as("c_b"))
@@ -74,14 +51,14 @@ object DriftMonitorJob {
     * it is 2^BITS rows however large the old snapshot was. */
   def run(spark: SparkSession, newVecs: DataFrame, baseline: DataFrame,
           store: String, psiOut: String, ckpt: String): StreamingQuery = {
-    val base = LabelQualityJob.runBase(spark, ckpt, store)
+    val base = KeyedUpsertSink.versionBase(spark, ckpt, store)
     val bl = baseline.localCheckpoint(true)
     newVecs.writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (b: DataFrame, id: Long) =>
         val delta = SimilarityPack.driftSigs(b)
           .groupBy(col("sig")).agg(count(lit(1)).cast("long").as("c"))
-        fold(spark, store, delta, base + id)
+        KeyedUpsertSink.addCounts(spark, store, delta, Seq("sig"), base + id)
         psiSnapshot(spark, store, bl)
           .localCheckpoint(true)
           .write.mode(SaveMode.Overwrite).parquet(psiOut)

@@ -3,7 +3,6 @@ package graft.jobs
 import graft.operators.CurationPack
 import graft.sources.KeyedUpsertSink
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming labeling-campaign quality monitor — the live form of
@@ -15,80 +14,28 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * statistic, so the scorecard pass is item-count-sized regardless of
   * how many rating events have flowed.
   *
-  * Exactly-once without an idempotent aggregate: count folds are sums,
-  * which double on a replayed micro-batch, so each fold writes its rows
-  * with `version = batchId` through the monotonic-version upsert
-  * (W10/W11's sink contract — ties keep the EXISTING row). A batch
-  * replayed after a crash recomputes a doubled cumulative value, but its
-  * version equals the already-stored one and loses the tie, so the store
-  * is byte-identical to a single delivery (LabelQualityJobSpec restarts
-  * mid-campaign and asserts parity with the batch recomputation).
+  * Exactly-once without an idempotent aggregate: each batch's counts go
+  * through [[KeyedUpsertSink.addCounts]] under a checkpoint-bound
+  * version ([[KeyedUpsertSink.versionBase]]), so a batch replayed after a
+  * crash loses the version tie and the store is byte-identical to a
+  * single delivery (LabelQualityJobSpec restarts mid-campaign and asserts
+  * parity with the batch recomputation).
   */
 object LabelQualityJob {
-
-  /** Fold one micro-batch's rating counts into the standing store.
-    * Only keys touched by the delta are rewritten; the replay guard is
-    * the version tie-break described above. */
-  def fold(spark: SparkSession, store: String, delta: DataFrame,
-           batchId: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cum =
-      if (fs.exists(new org.apache.hadoop.fs.Path(store))) {
-        val standing = spark.read.parquet(store)
-          .select(col("item_id"), col("label"), col("c").as("c0"))
-        delta.join(standing, Seq("item_id", "label"), "left")
-          .select(col("item_id"), col("label"),
-            (col("c") + coalesce(col("c0"), lit(0L))).as("c"))
-      } else delta
-    KeyedUpsertSink.upsert(spark, store,
-      cum.withColumn("version", lit(batchId)),
-      Seq("item_id", "label"), "version")
-  }
-
-  /** Version base for this checkpoint's lifetime. A raw batchId breaks in
-    * two directions: on a FRESH checkpoint against a surviving store it
-    * restarts at 0 and loses every tie (folds silently freeze, then
-    * double-count once it climbs past the stored max), while a base
-    * re-read on EVERY start (OnlineClassifier's weights pattern) makes a
-    * same-checkpoint replay outrank its own first delivery and double the
-    * sums. Binding the base to the checkpoint via a marker file gives
-    * both guarantees: a same-checkpoint replay reuses the same base →
-    * version tie → existing wins (exactly-once); a fresh checkpoint mints
-    * base = stored-max + 1 → its folds correctly continue the store. */
-  private[graft] def runBase(spark: SparkSession, ckpt: String,
-                             store: String): Long = {
-    val marker = new org.apache.hadoop.fs.Path(s"$ckpt/graft-labelq-base")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      try in.readLong() finally in.close()
-    } else {
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      val base =
-        if (fs.exists(storeP))
-          spark.read.parquet(store).agg(max(col("version"))).head()
-            .getLong(0) + 1L
-        else 0L
-      fs.mkdirs(marker.getParent)
-      val outS = fs.create(marker, false)
-      try outS.writeLong(base) finally outS.close()
-      base
-    }
-  }
 
   /** Start the monitor on a streaming events frame: per micro-batch,
     * fold counts into `store` and overwrite `scoreOut` with the one-row
     * scorecard (overwrite is naturally idempotent). */
   def run(spark: SparkSession, events: DataFrame, store: String,
           scoreOut: String, ckpt: String): StreamingQuery = {
-    val base = runBase(spark, ckpt, store)
+    val base = KeyedUpsertSink.versionBase(spark, ckpt, store)
     events.writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (b: DataFrame, id: Long) =>
-        fold(spark, store, CurationPack.ratingCountsOf(b), base + id)
+        KeyedUpsertSink.addCounts(spark, store, CurationPack.ratingCountsOf(b),
+          Seq("item_id", "label"), base + id)
         CurationPack.fleissScorecard(
-            spark.read.parquet(store).select("item_id", "label", "c"))
+            KeyedUpsertSink.read(spark, store).get.select("item_id", "label", "c"))
           .localCheckpoint(true)
           .write.mode(SaveMode.Overwrite).parquet(scoreOut)
       }.start()

@@ -2,7 +2,8 @@ package graft.jobs
 
 import graft.Tables
 import graft.functions.{Hashes, Hll}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.sources.KeyedUpsertSink
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted-sketch maintenance — the daily form of q110's overlap
@@ -10,8 +11,8 @@ import org.apache.spark.sql.functions._
   * "how much do sources overlap?": it keeps per-source deterministic-HLL
   * register tables (|sources|×256 rows) and FOLDS each ingest delta into
   * them — registers are closed under per-bucket max ([[Hll]]), so
-  * fold(standing, delta) is exactly rebuild(standing ∪ delta), which
-  * SketchJobSpec asserts byte-for-byte. Every overlap/cardinality
+  * folding a delta into the store is exactly rebuild(standing ∪ delta),
+  * which SketchJobSpec asserts byte-for-byte. Every overlap/cardinality
   * question after that is pure sketch algebra over the tiny table.
   *
   * The register build is one map-side-partial pass over the delta's span
@@ -40,33 +41,20 @@ object SketchJob {
       .groupBy(col("source"), col("bucket")).agg(max(col("rho")).as("reg"))
   }
 
-  /** Fold a delta's registers into the standing table (per-bucket max —
-    * the sketch-union algebra; either side may be empty). */
-  def fold(standing: DataFrame, delta: DataFrame): DataFrame =
-    standing.unionByName(delta)
-      .groupBy(col("source"), col("bucket")).agg(max(col("reg")).as("reg"))
-
   /** Per-source cardinality estimates off a register table — no corpus
     * access. */
   def estimates(regs: DataFrame): DataFrame =
     Hll.estimate(regs, Seq("source"), "est_spans").orderBy(col("source"))
 
-  /** Maintain `<storePath>`: create it from `docs` if absent, else fold
-    * `docs`' registers in. Returns the post-fold register table. */
+  /** Fold `docs`' registers into the store at `storePath` (created on
+    * first use) and return the post-fold register table. The fold is the
+    * keyed upsert with `reg` as the version: highest version wins is the
+    * per-bucket max, and the store is crash-safe and idempotent under a
+    * replayed delta (a tie keeps the existing row). */
   def maintain(spark: SparkSession, docs: DataFrame, storePath: String): DataFrame = {
-    val delta = buildRegisters(docs)
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (fs.exists(new org.apache.hadoop.fs.Path(storePath)))
-        fold(spark.read.parquet(storePath), delta)
-      else delta
-    // the table is |sources|×256 rows — rewrite-in-place is the cheap,
-    // idempotent move (localCheckpoint severs the self-read lineage
-    // before the overwrite)
-    val out = merged.localCheckpoint(true)
-    out.write.mode(SaveMode.Overwrite).parquet(storePath)
-    out
+    KeyedUpsertSink.upsert(spark, storePath, buildRegisters(docs),
+      Seq("source", "bucket"), "reg")
+    KeyedUpsertSink.read(spark, storePath).get
   }
 
   def main(args: Array[String]): Unit = {

@@ -142,14 +142,9 @@ object CurateStream {
                                keepers: DataFrame, cap: Long,
                                version: Long): DataFrame = {
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(stateStore)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st =
-      if (fs.exists(new org.apache.hadoop.fs.Path(stateStore)))
-        spark.read.parquet(stateStore)
-          .select(col("source"), col("file_idx"), col("fill"))
-      else spark.emptyDataset[(String, Long, Long)]
-        .toDF("source", "file_idx", "fill")
+    val st = KeyedUpsertSink.read(spark, stateStore)
+      .map(_.select(col("source"), col("file_idx"), col("fill")))
+      .getOrElse(spark.emptyDataset[(String, Long, Long)].toDF("source", "file_idx", "fill"))
     val folded = keepers.select(col("source"), col("doc_id"), col("n_chars"))
       .join(st, Seq("source"), "left")
       .select(col("source"), col("doc_id"), col("n_chars"),
@@ -187,7 +182,7 @@ object CurateStream {
                     verdictOut: String, shardOut: String, stateStore: String,
                     ckpt: String,
                     cap: Long = CurationPack.SHARD_CAP): StreamingQuery = {
-    val base = graft.jobs.LabelQualityJob.runBase(spark, ckpt, stateStore)
+    val base = KeyedUpsertSink.versionBase(spark, ckpt, stateStore)
     dupTags(docs).toDF().writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (b: DataFrame, id: Long) =>

@@ -33,58 +33,14 @@ object OnlineClassifier {
   /** Recover the newest weights from the durable store (None on a cold
     * start; a corrupt store logs and falls back to cold — the same
     * visibility rule as the clustering bootstrap). Only the max-version
-    * ROW reaches the driver: the store retains one row per trained batch
-    * over the job's lifetime, so collecting it whole would make driver
-    * memory/startup cost grow without bound. */
-  def bootstrap(spark: SparkSession, outDir: String, nx: Int): Option[(Long, Vector[Long])] = {
-    val path = new org.apache.hadoop.fs.Path(s"$outDir/weights")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) None
-    else scala.util.Try {
-      val df = spark.read.parquet(path.toString)
-      val vRow = df.agg(max(col("version"))).head()
-      if (vRow.isNullAt(0)) None
-      else {
-        val v = vRow.getLong(0)
-        val r = df.filter(col("version") === v).head()
-        Some((v, Vector.tabulate(nx)(j => r.getAs[Long](s"w$j"))))
-      }
-    } match {
-      case scala.util.Success(m) => m
-      case scala.util.Failure(e) =>
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"weight bootstrap from $path failed; starting from zero", e)
-        None
+    * ROW reaches the driver ([[KeyedUpsertSink.latest]]): the store retains
+    * one row per trained batch over the job's lifetime, so collecting it
+    * whole would make driver memory/startup cost grow without bound. */
+  def bootstrap(spark: SparkSession, outDir: String, nx: Int): Option[(Long, Vector[Long])] =
+    KeyedUpsertSink.latest(spark, s"$outDir/weights", "version").map { df =>
+      val r = df.head()
+      (r.getAs[Long]("version"), Vector.tabulate(nx)(j => r.getAs[Long](s"w$j")))
     }
-  }
-
-  /** Version base bound to the CHECKPOINT's lifetime via a marker file
-    * (LabelQualityJob.runBase pattern). A base re-read from the store on
-    * every start is NOT replay-safe: foreachBatch is at-least-once, and a
-    * same-checkpoint replay would mint a version past the stored max and
-    * retrain on weights that already include the batch (double-training).
-    * With the marker, a replay recomputes the SAME version — the run()
-    * guard then skips it — while a fresh checkpoint against a surviving
-    * store mints base = stored max, so training continues monotonically. */
-  private def runBase(spark: SparkSession, ckpt: String, store: String): Long = {
-    val marker = new org.apache.hadoop.fs.Path(s"$ckpt/graft-classifier-base")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      try in.readLong() finally in.close()
-    } else {
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      val base =
-        if (fs.exists(storeP)) {
-          val v = spark.read.parquet(store).agg(max(col("version"))).head()
-          if (v.isNullAt(0)) -1L else v.getLong(0)
-        } else -1L
-      fs.mkdirs(marker.getParent)
-      val out = fs.create(marker, false)
-      try out.writeLong(base) finally out.close()
-      base
-    }
-  }
 
   /** Start the training query over a streaming feature relation (columns
     * y ∈ {+1,−1} and x0..x{nx-1}, all BIGINT — the
@@ -93,14 +49,14 @@ object OnlineClassifier {
   def run(spark: SparkSession, feats: DataFrame, nx: Int, outDir: String,
           checkpointDir: String, latest: WRef,
           epochsPerBatch: Int = 1): StreamingQuery = {
-    // base+1+batchId stays monotonic across restarts in every case (same
-    // checkpoint resumes batchId past the base; a fresh one starts past
-    // the surviving store's max).
-    val base = runBase(spark, checkpointDir, s"$outDir/weights")
+    // base+batchId stays monotonic across restarts in every case, and a
+    // same-checkpoint replay recomputes its first delivery's version
+    // (KeyedUpsertSink.versionBase).
+    val base = KeyedUpsertSink.versionBase(spark, checkpointDir, s"$outDir/weights")
     feats.writeStream.outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val version = base + 1L + batchId
+        val version = base + batchId
         // Replay guard (exactly-once model CONTENT, not just monotonic
         // versions): a same-checkpoint replay recomputes the same version,
         // and the live/bootstrapped ref already holds it — retraining
@@ -114,7 +70,6 @@ object OnlineClassifier {
             .trainPerceptronFrom(batch, start, nx, epochsPerBatch)
             .collect().head // 1 row of nx longs — model-sized by design
           val ws = Vector.tabulate(nx)(j => row.getLong(j))
-          val version = base + 1L + batchId
           latest.set(Some((version, ws)))
           val update = s.range(1).select(
             lit(version).as("version") +:

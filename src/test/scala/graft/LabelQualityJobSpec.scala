@@ -2,6 +2,7 @@ package graft
 
 import graft.jobs.LabelQualityJob
 import graft.operators.CurationPack
+import graft.sources.KeyedUpsertSink
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -80,6 +81,16 @@ class LabelQualityJobSpec extends GraftSuite {
       .orderBy(col("item_id"), col("label")).collect()
     assert(got.sameElements(want),
       "run 2's folds must outrank run 1's rows and extend the counts")
+
+    // a store whose first upsert had no rows holds a zero-row table: its
+    // base is 0, as for a missing store
+    import spark.implicits._
+    val empty = s"$base/empty"
+    KeyedUpsertSink.upsert(spark, empty,
+      Seq.empty[(Long, String, Long, Long)].toDF("item_id", "label", "c", "version"),
+      Seq("item_id", "label"), "version")
+    assert(spark.read.parquet(empty).count() == 0L)
+    assert(KeyedUpsertSink.versionBase(spark, s"$base/ckpt_empty", empty) == 0L)
   }
 
   test("a replayed fold is a no-op: the version tie keeps the single-delivery counts") {
@@ -88,14 +99,19 @@ class LabelQualityJobSpec extends GraftSuite {
     val store = s"$base/store"
     val delta = Seq((1L, "view", 2L), (2L, "click", 1L))
       .toDF("item_id", "label", "c")
-    LabelQualityJob.fold(spark, store, delta, batchId = 0L)
-    LabelQualityJob.fold(spark, store, delta, batchId = 0L) // replay
+    def addCounts(version: Long): Unit =
+      KeyedUpsertSink.addCounts(spark, store, delta, Seq("item_id", "label"), version)
+    addCounts(0L)
+    addCounts(0L) // replay
     val got = spark.read.parquet(store)
       .select(col("item_id"), col("label"), col("c"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(got == Set((1L, "view", 2L), (2L, "click", 1L)),
       "replayed batch must not double the counts")
-    LabelQualityJob.fold(spark, store, delta, batchId = 1L) // a real new batch
+    // a crash between the upsert's two renames: the standing counts are
+    // whole in store__tmp and must still be added to
+    Files.move(java.nio.file.Path.of(store), java.nio.file.Path.of(store + "__tmp"))
+    addCounts(1L) // a real new batch
     val got2 = spark.read.parquet(store)
       .select(col("item_id"), col("label"), col("c"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet

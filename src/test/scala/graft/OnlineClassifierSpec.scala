@@ -48,6 +48,10 @@ class OnlineClassifierSpec extends GraftSuite {
     val after2 = refEpoch(refEpoch(Vector(0L, 0L), b1), b2)
     assert(ref1.get().map(_._2).contains(after2))
 
+    // the crash came between the upsert's two renames: the store is whole
+    // in weights__tmp only
+    java.nio.file.Files.move(java.nio.file.Path.of(s"$out/weights"),
+      java.nio.file.Path.of(s"$out/weights__tmp"))
     // restart: a FRESH ref bootstraps from the store, training continues
     val in2 = MemoryStream[(Long, Long)]
     val ref2 = OnlineClassifier.newWRef
@@ -90,7 +94,7 @@ class OnlineClassifierSpec extends GraftSuite {
     val after2 = refEpoch(refEpoch(Vector(0L, 0L), b1), b2)
     assert(ref1.get().map(_._2).contains(after2))
 
-    // crash-restart simulation: SAME checkpoint (the marker binds base=-1),
+    // crash-restart simulation: SAME checkpoint (the marker binds base=0),
     // a bootstrapped ref at stored max version 1, and an at-least-once
     // source that REDELIVERS b1 and b2 (batchIds 0,1 -> versions 0,1 <= 1)
     // before the genuinely new b3 (batchId 2 -> version 2). The replayed
@@ -98,8 +102,8 @@ class OnlineClassifierSpec extends GraftSuite {
     val ckpt2 = tmp("graft_oc3_ckpt2")
     val fs = new org.apache.hadoop.fs.Path(ckpt2)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mk = fs.create(new org.apache.hadoop.fs.Path(s"$ckpt2/graft-classifier-base"), false)
-    try mk.writeLong(-1L) finally mk.close()
+    val mk = fs.create(new org.apache.hadoop.fs.Path(s"$ckpt2/graft-version-base"), false)
+    try mk.writeLong(0L) finally mk.close()
     val in2 = MemoryStream[(Long, Long)]
     val ref2 = OnlineClassifier.newWRef
     ref2.set(OnlineClassifier.bootstrap(spark, out, NX))

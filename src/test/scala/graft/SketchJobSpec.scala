@@ -1,6 +1,7 @@
 package graft
 
 import graft.jobs.SketchJob
+import graft.sources.KeyedUpsertSink
 import org.apache.spark.sql.functions._
 
 /** Persisted-sketch maintenance (SketchJob): the register table must be a
@@ -19,7 +20,9 @@ class SketchJobSpec extends GraftSuite {
     val isB = graft.functions.Hashes.base32(col("doc_id").cast("string")) % 5 === 0
     val a = SketchJob.buildRegisters(docs.filter(!isB))
     val b = SketchJob.buildRegisters(docs.filter(isB))
-    val folded = asSet(SketchJob.fold(a, b))
+    val store = java.nio.file.Files.createTempDirectory("graft_sketch_fold").toString + "/regs"
+    Seq(a, b).foreach(KeyedUpsertSink.upsert(spark, store, _, Seq("source", "bucket"), "reg"))
+    val folded = asSet(KeyedUpsertSink.read(spark, store).get)
     val full = asSet(SketchJob.buildRegisters(docs))
     assert(folded.nonEmpty && folded == full,
       s"fold drifted from rebuild: ${folded.size} vs ${full.size} registers")

@@ -41,6 +41,12 @@ class StreamingSinksSpec extends GraftSuite {
     // the crash: the merged table is complete in out__tmp, out is gone
     Files.move(dir, tmp)
     assert(Files.exists(tmp.resolve("_SUCCESS")) && !Files.exists(dir))
+    // a reader sees the merged table in out__tmp and renames nothing
+    assert(KeyedUpsertSink.read(spark, dir.toString)
+      .map(_.orderBy("post_id").as[(Long, Long, Long)].collect().toList)
+      .contains(List((1L, 100L, 5L), (2L, 100L, 7L))))
+    assert(!Files.exists(dir) && Files.exists(tmp))
+    assert(KeyedUpsertSink.read(spark, base.resolve("none").toString).isEmpty)
     KeyedUpsertSink.upsert(spark, dir.toString, Seq((1L, 200L, 9L)).toDF("post_id", "window_end", "n"),
       Seq("post_id"), "window_end")
     assert(rows == List((1L, 200L, 9L), (2L, 100L, 7L)))
