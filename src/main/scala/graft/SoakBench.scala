@@ -24,10 +24,8 @@ import scala.collection.mutable
   *     reference's optional RocksDB checkpointing, application.conf:106-114).
   *
   * Usage: SPARK_GRAFT_SF_DIR=… [SPARK_GRAFT_STATE=rocksdb]
-  *        sbt "runMain graft.SoakBench [speedup] [singlegroup]"
-  * (Task 1 soaks on the default distributed frontier+archive resolver;
-  * `singlegroup` selects the reference-faithful fallback.) Prints one
-  * JSON line per job plus a summary line. */
+  *        sbt "runMain graft.SoakBench [speedup]"
+  * Prints one JSON line per job plus a summary line. */
 object SoakBench {
 
   private final case class Sample(batchId: Long, inputRows: Long,
@@ -75,11 +73,8 @@ object SoakBench {
     def replayed = spark.readStream.format(classOf[graft.sources.ReplaySource].getName)
       .option("path", sfDir).option("speedup", speedup.toString).load()
 
-    // scale-out is the runResolved default since r10; `singlegroup` soaks
-    // the reference-faithful fallback ("scaleout" stays as explicit alias)
-    val scaleOut = !args.lift(1).contains("singlegroup")
     val t0 = System.nanoTime()
-    val q1 = PostStatisticsJob.runResolved(spark, replayed, o1, c1, scaleOut = scaleOut)
+    val q1 = PostStatisticsJob.runResolved(spark, replayed, o1, c1)
     val q2 = RecommendationsJob.run(spark, replayed, sfDir, o2, c2)
     val (m3, cl3) = ActivityDetectionJob.run(spark, replayed, None, o3, c3)
     val jobs = Seq("task1_post_stats" -> q1, "task2_recommendations" -> q2,
@@ -128,7 +123,7 @@ object SoakBench {
         s""""commit_ms_p50":${pct(commits, 0.5)},"commit_ms_p95":${pct(commits, 0.95)},""" +
         s""""batch_ms_p95":${pct(ss.map(_.batchMs), 0.95)}}""")
     }
-    println(f"""{"measure":"soak","backend":"$backend","task1":"${if (scaleOut) "scaleout" else "single-group"}","sf_dir":"$sfDir","speedup":$speedup,""" +
+    println(f"""{"measure":"soak","backend":"$backend","sf_dir":"$sfDir","speedup":$speedup,""" +
       f""""events":$totalEvents,"span_sec":$spanSec,"ideal_wall_s":${spanSec / speedup}%.1f,""" +
       f""""wall_s":$wallS%.1f,"task1_windows":$windows1,"task2_windows":$windows2,""" +
       f""""task3_models":$models3}""")

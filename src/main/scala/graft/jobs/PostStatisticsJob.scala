@@ -51,33 +51,23 @@ object PostStatisticsJob {
     *
     * Spark assembly: watermark → derive the edge relation (q45's
     * deterministic parent rule: 'click' events are replies) →
-    * [[graft.streaming.ReplyTreeOp.resolveEvicting]] (roots resolve to
-    * themselves, replies transitively; dangling replies evict at the
-    * watermark like the reference's side-output drop) → the resolved
-    * stream carries each event's own payload, so the SAME slidingStats
-    * transform runs keyed by `root_id` — two chained stateful operators,
+    * [[graft.streaming.ReplyTreeOp.resolveScaleOut]] (roots resolve to
+    * themselves, replies transitively; dangling replies drop at the
+    * watermark like the reference's side-output drop; the resolved map is
+    * hash-partitioned across state partitions, with the same resolved and
+    * dropped sets as the single-group `resolveEvicting`,
+    * ScaleOutReplyTreeSpec) → the resolved stream carries each event's own
+    * payload, so the SAME slidingStats transform runs keyed by `root_id`,
     * exactly the reference's process-function pipeline shape.
     *
-    * Scale: the DEFAULT resolver is the scale-out frontier +
-    * distributed-archive chain (`ReplyTreeOp.resolveScaleOut` — resolved
-    * mapping state hash-partitioned across state partitions; promoted to
-    * default in r10 after both-backend soaks showed wall parity and
-    * identical final state, SCALE.md "scale-out resolver" rows).
-    * `scaleOut = false` selects the reference-faithful single-group
-    * resolver — the shape that mirrors the reference's one replicated
-    * mapping, useful as a differential-testing fallback; the downstream
-    * window agg and upsert shuffle on (window, root) as in [[run]].
-    *
-    * NOTE (r10 behavior change): the default flipped to `scaleOut = true`,
-    * which also changes emission from continuous update-mode upserts to
-    * append-on-window-close — a short or bounded stream can emit NOTHING
-    * under the default until its windows close at the watermark. Callers
-    * that need the old continuous-upsert behavior (e.g. bounded replay
-    * tests — RecoverySpec does this) must pass `scaleOut = false`
-    * explicitly. */
+    * A query holding several flatMapGroupsWithState operators must run in
+    * append mode, so each (window, root) is written once, when the
+    * watermark closes the window — the reference's own firing semantics
+    * (Flink event-time windows fire on watermark passage). A bounded
+    * stream therefore emits only the windows its final watermark has
+    * closed. */
   def runResolved(spark: SparkSession, events: DataFrame, outDir: String,
-                  checkpointDir: String, watermark: String = "1 hour",
-                  scaleOut: Boolean = true): StreamingQuery = {
+                  checkpointDir: String, watermark: String = "1 hour"): StreamingQuery = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val edges = events.withWatermark("ts", watermark)
@@ -88,32 +78,22 @@ object PostStatisticsJob {
           .otherwise(lit(null).cast("long")).as("parent_id"),
         col("user_id"), col("event_type"))
       .as[graft.streaming.EdgeEventT]
-    // scaleOut swaps the single-group resolver for the frontier +
-    // distributed-archive chain (ReplyTreeOp.resolveScaleOut): same
-    // resolved/dropped sets (ScaleOutReplyTreeSpec), resolved-map state
-    // hash-partitioned instead of replicated into one group
-    val tree =
-      if (scaleOut) graft.streaming.ReplyTreeOp.resolveScaleOut(edges)
-      else graft.streaming.ReplyTreeOp.resolveEvicting(edges)
     // RE-DECLARE the watermark on the resolver's output: the simulation
     // does not propagate the input watermark through a fMGWS (its output
     // event times are arbitrary), so without this node the downstream
     // aggregation's eviction watermark stays frozen at 0 and its state
     // grows monotonically — unbounded under sustained replay (caught by
-    // the SoakBench plateau metric; pinned in StatePlateauSpec). For the
-    // single-group resolver the same delay keeps the one-trigger-behind
-    // loss window unchanged (a drained child is never behind the previous
-    // batch's watermark — it would have been evicted). The scale-out
-    // resolver's probe rows, by contrast, fire EXACTLY when the watermark
-    // passes them, i.e. at-or-behind it — an equal downstream delay would
-    // drop every slow-path row from the statistics, so the stats window
-    // gets double the delay (covers any probe lag up to one batch of
+    // the SoakBench plateau metric; pinned in StatePlateauSpec). The
+    // resolver's probe rows fire EXACTLY when the watermark passes them,
+    // i.e. at-or-behind it — an equal downstream delay would drop every
+    // slow-path row from the statistics, so the stats window gets double
+    // the delay (covers any probe lag up to one batch of
     // event-time stride; beyond that is the documented allowed-lateness
     // drop).
-    val resolved = tree
+    val resolved = graft.streaming.ReplyTreeOp.resolveScaleOut(edges)
       .filter(!col("dropped"))
       .select(col("ts"), col("root_id"), col("event_type"))
-      .withWatermark("ts", if (scaleOut) doubled(watermark) else watermark)
+      .withWatermark("ts", doubled(watermark))
     // Spark rejects stateful-after-stateful by default because the upstream
     // operator may emit rows behind the global watermark. Here that is the
     // INTENDED semantics and the loss window is already bounded: the
@@ -123,15 +103,9 @@ object PostStatisticsJob {
     // lateness (BuildReplyTreeProcessFunction's watermark eviction +
     // side output). Scope the opt-out to this query's startup
     // (StreamOps.startUnchecked).
-    // Output cadence: the single-group chain upserts continuously (update
-    // mode). A query holding MULTIPLE flatMapGroupsWithStates must itself
-    // run in append mode (planner rule), so the scale-out chain emits each
-    // window once, when the watermark closes it — which is the reference's
-    // own firing semantics (Flink event-time windows fire on watermark
-    // passage); windows still open at end-of-input stay unemitted.
     StreamOps.startUnchecked(spark) {
       StreamOps.slidingStatsBy(resolved, "root_id")
-        .writeStream.outputMode(if (scaleOut) "append" else "update")
+        .writeStream.outputMode("append")
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, _: Long) =>
           KeyedUpsertSink.upsert(batch.sparkSession, outDir, batch,
@@ -150,9 +124,7 @@ object PostStatisticsJob {
   }
 
   /** CLI: PostStatisticsJob <sfDir> <outDir> <checkpointDir> [speedup] [runSeconds] [mode]
-    * — mode `resolved` runs the full reply-resolved chain on the default
-    * scale-out resolver; `resolved-singlegroup` selects the
-    * reference-faithful fallback. */
+    * — mode `resolved` runs the full reply-resolved chain ([[runResolved]]). */
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, ckpt) = (args(0), args(1), args(2))
     val speedup = args.lift(3).getOrElse("10000")
@@ -162,8 +134,6 @@ object PostStatisticsJob {
     val q = args.lift(5) match {
       case Some("resolved") =>
         runResolved(spark, events, outDir, ckpt)
-      case Some("resolved-singlegroup") =>
-        runResolved(spark, events, outDir, ckpt, scaleOut = false)
       case _ => run(spark, events, outDir, ckpt)
     }
     Jobs.await(q, runSec)

@@ -51,7 +51,7 @@ object CurationPack {
   private val BATCH_DOCS  = 8     // docs per pad-to-longest batch (q122)
   private val PREFIX_BLOCK = 64L  // doc_id-range width of a prefix-sum block (q109)
   private val RATE_DENOM  = 10000 // rebalance keep-rate granularity (bp)
-  private val SPAN        = 6     // span-dedup width (tokens)
+  private[graft] val SPAN = 6     // span-dedup width (tokens; q77, q85)
   private val PCT_EPOCHS  = 5     // q114 batch-perceptron training epochs
   private val QUALITY_T   = 0.62  // q119 keep threshold on q36's score
   private val N_TILE      = 4     // q124 curriculum stages (quality quartiles)
@@ -194,10 +194,11 @@ object CurationPack {
 
   /** Deterministic eval-split membership: base32(md5(doc_id)) mod 5 == 0 —
     * the q64 stateless-hash predicate, so the split is identical across
-    * engines, retries, and scale factors. */
-  private def isTest: Column =
+    * engines, retries, and scale factors. q85 decontaminates against this
+    * same split. */
+  private[graft] def isTest: Column =
     Hashes.base32(col("doc_id").cast("string")) % TEST_MOD === 0
-  private val sqlIsTest =
+  private[graft] val sqlIsTest =
     s"${Hashes.sqlBase32("doc_id::VARCHAR")} % $TEST_MOD = 0"
 
   val queries: Map[String, Q] = Map(

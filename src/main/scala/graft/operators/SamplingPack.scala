@@ -5,6 +5,7 @@ import graft.functions.{FreqSketch, Hashes}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import CurationPack.{SPAN, isTest, sqlIsTest}
 
 /** Corpus statistics & sampling operators — the frequency/probability layer
   * of a training-data pipeline: heavy hitters, weighted reservoir sampling,
@@ -46,8 +47,6 @@ object SamplingPack {
   private val LP_SCALE  = 1000000L // micro-nat quantization (q83)
   private val LM_KEEP_T = -8.0    // avg-logprob keep threshold (q83)
   private val RATE_DENOM = 10000  // keep-rate granularity, basis points (q84)
-  private val TEST_MOD  = 5       // q55's eval-split modulus (q85)
-  private val SPAN      = 6       // q77's span width, tokens (q85)
   private val BLOOM_FPP = 0.01    // q85 prune-stage false-positive rate
   private val MG_K      = 8       // Misra-Gries counter budget (q86)
   private val MARKER_K  = 20      // per-language marker vocabulary (q95)
@@ -111,13 +110,6 @@ object SamplingPack {
       .groupBy(col("doc_id"), col("lang"), col("source"))
       .agg(count(lit(1)).as("n_tokens"),
         sum(col("lr_micro")).cast("long").as("w_micro"))
-
-  /** q55's deterministic eval-split membership (same constant, so q85's
-    * decontamination is consistent with q55's). */
-  private def isTest: Column =
-    Hashes.base32(col("doc_id").cast("string")) % TEST_MOD === 0
-  private val sqlIsTest =
-    s"${Hashes.sqlBase32("doc_id::VARCHAR")} % $TEST_MOD = 0"
 
   /** (doc_id, h) span-hash rows: consecutive SPAN-token spans fingerprinted
     * with the 60-bit hash (q77's span definition, hashed — at scale the

@@ -9,16 +9,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * pure-graph callers) ride along so a resolved event can feed downstream
   * per-root statistics without a stream-stream re-join — the reference's
   * comment payload travels through its tree builder the same way
-  * (BuildReplyTreeProcessFunction emits whole enriched comments). `ts`
-  * carries the exact µs event time; `tsec` stays the resolver's causality
-  * clock. */
+  * (BuildReplyTreeProcessFunction emits whole enriched comments). `tsec`
+  * is the event time in epoch milliseconds — the resolver's causality and
+  * deadline clock; `ts` carries the same instant as a timestamp. */
 final case class EdgeEvent(event_id: Long, tsec: Long, parent_id: Option[Long],
                            user_id: Long = 0L, event_type: String = "",
                            ts: java.sql.Timestamp = null)
-
-/** A resolved event: its transitive root, chain depth, whole-chain
-  * causality flag. */
-final case class ResolvedEvent(event_id: Long, root_id: Long, depth: Int, causal: Boolean)
 
 /** Resolver state: resolved id → (root, depth, causal, tsec); pending
   * parent id → waiting children. */
@@ -59,6 +55,83 @@ final case class TreeFlow(kind: Int, event_id: Long, parent_id: Long,
 final case class ArchiveEntry(root_id: Long, depth: Int, causal: Boolean,
                               tsec: Long)
 
+/** The reply-tree resolution step, written once: a pure fold over
+  * [[TreeState]] shared by [[ReplyTreeOp.resolveEvicting]] and
+  * [[ReplyTreeOp.frontier]], which differ only in what they do with
+  * overdue replies. An entry is (root, depth, causal, tsec). */
+private[graft] object TreeFold {
+  type Entry = (Long, Int, Boolean, Long)
+
+  val empty: TreeState = TreeState(Map.empty, Map.empty)
+
+  def edge(e: EdgeEventT): EdgeEvent =
+    EdgeEvent(e.event_id, e.ts.getTime, e.parent_id, e.user_id, e.event_type, e.ts)
+
+  /** Add a micro-batch in event-id order. A root settles; a reply whose
+    * parent is resolved settles and then drains its waiting subtree
+    * (children in event-id order), carrying the causality check (child
+    * tsec >= parent tsec) down the chain — the reference's
+    * getDescendants:367-393; any other reply parks under its parent id.
+    * Returns each settlement as (event, entry), in emission order. */
+  def add(st: TreeState, events: Seq[EdgeEvent]): (TreeState, Seq[(EdgeEvent, Entry)]) = {
+    val out = Vector.newBuilder[(EdgeEvent, Entry)]
+
+    def settle(s: TreeState, e: EdgeEvent, parent: Option[Entry]): TreeState = {
+      val entry = parent match {
+        case None => (e.event_id, 0, true, e.tsec)
+        case Some((root, depth, causal, ptsec)) =>
+          (root, depth + 1, causal && e.tsec >= ptsec, e.tsec)
+      }
+      out += e -> entry
+      drain(s.copy(resolved = s.resolved + (e.event_id -> entry)), e.event_id, entry)
+    }
+
+    def drain(s: TreeState, id: Long, p: Entry): TreeState =
+      s.pending.get(id).fold(s) { kids =>
+        kids.sortBy(_.event_id)
+          .foldLeft(s.copy(pending = s.pending - id))(settle(_, _, Some(p)))
+      }
+
+    val next = events.sortBy(_.event_id).foldLeft(st) { (s, e) =>
+      e.parent_id match {
+        case Some(pid) if !s.resolved.contains(pid) =>
+          s.copy(pending = s.pending + (pid -> (s.pending.getOrElse(pid, Nil) :+ e)))
+        case parent => settle(s, e, parent.map(s.resolved))
+      }
+    }
+    (next, out.result())
+  }
+
+  /** Remove the pending replies with `tsec <= wm`; returns them as
+    * (parent id, event) in (parent id, event id) order. */
+  def takeOverdue(st: TreeState, wm: Long): (TreeState, Seq[(Long, EdgeEvent)]) = {
+    val hit = st.pending.filter(_._2.exists(_.tsec <= wm))
+    if (hit.isEmpty) (st, Nil)
+    else {
+      val due = hit.toSeq.sortBy(_._1).flatMap { case (pid, kids) =>
+        kids.filter(_.tsec <= wm).sortBy(_.event_id).map(pid -> _)
+      }
+      val pending = hit.foldLeft(st.pending) { case (m, (pid, kids)) =>
+        val rest = kids.filter(_.tsec > wm)
+        if (rest.isEmpty) m - pid else m + (pid -> rest)
+      }
+      (st.copy(pending = pending), due)
+    }
+  }
+
+  /** Remove the transitive waiting subtree of `id`; returns it in
+    * pre-order, siblings by event id. */
+  def takeSubtree(st: TreeState, id: Long): (TreeState, Seq[EdgeEvent]) =
+    st.pending.get(id).fold((st, Seq.empty[EdgeEvent])) { kids =>
+      kids.sortBy(_.event_id)
+        .foldLeft((st.copy(pending = st.pending - id), Vector.empty[EdgeEvent])) {
+          case ((s, acc), k) =>
+            val (s1, sub) = takeSubtree(s, k.event_id)
+            (s1, (acc :+ k) ++ sub)
+        }
+    }
+}
+
 /** Streaming reply-tree resolution — SURVEY §7.4 Plan A (reference:
   * streams/BuildReplyTreeProcessFunction.scala:28-409). Events arrive in
   * any order across micro-batches; a reply whose parent is unknown parks in
@@ -86,65 +159,18 @@ final case class ArchiveEntry(root_id: Long, depth: Int, causal: Boolean,
   * (no cycles in a streaming plan). Two distributed answers exist:
   * [[resolveScaleOut]] unrolls the feedback a bounded number of times
   * (frontier + chained archive hops — the resolved map lives in
-  * hash-partitioned keyed state), and the per-micro-batch fixpoint against
-  * a persisted mapping store partitioned by comment id — PipelineSpec's
-  * end-to-end resolution job (`foreachBatch` + GraphPack fixpoint +
-  * KeyedUpsertSink) — remains the unbounded-depth form. THIS operator is
+  * hash-partitioned keyed state), and a per-micro-batch fixpoint against
+  * a persisted mapping store partitioned by comment id (`foreachBatch` +
+  * the GraphPack fixpoint + KeyedUpsertSink, not built) would be the
+  * unbounded-depth form. THIS operator is
   * the reference-faithful in-graph form (the reference replicates its
   * mapping state to every worker too,
   * BuildReplyTreeProcessFunction.scala:207-214).
   */
 object ReplyTreeOp {
 
-  def resolve(events: Dataset[EdgeEvent]): Dataset[ResolvedEvent] = {
-    implicit val stateEnc = Encoders.product[TreeState]
-    implicit val outEnc = Encoders.product[ResolvedEvent]
-    implicit val keyEnc = Encoders.scalaInt
-    events.groupByKey(_ => 0)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: Int, it: Iterator[EdgeEvent], state: GroupState[TreeState]) => {
-          var st = state.getOption.getOrElse(TreeState(Map.empty, Map.empty))
-          val out = scala.collection.mutable.ArrayBuffer.empty[ResolvedEvent]
-
-          // resolve `e` against parent entry `p`, then drain descendants
-          def settle(e: EdgeEvent, p: (Long, Int, Boolean, Long)): Unit = {
-            val entry = (p._1, p._2 + 1, p._3 && e.tsec >= p._4, e.tsec)
-            st = st.copy(resolved = st.resolved + (e.event_id -> entry))
-            out += ResolvedEvent(e.event_id, entry._1, entry._2, entry._3)
-            drain(e.event_id)
-          }
-
-          // recursively resolve children waiting on `parentId`
-          def drain(parentId: Long): Unit =
-            st.pending.get(parentId).foreach { children =>
-              st = st.copy(pending = st.pending - parentId)
-              val p = st.resolved(parentId)
-              // deterministic order: children settle by event id
-              children.sortBy(_.event_id).foreach(c => settle(c, p))
-            }
-
-          it.toSeq.sortBy(_.event_id).foreach { e =>
-            e.parent_id match {
-              case None =>
-                st = st.copy(resolved =
-                  st.resolved + (e.event_id -> (e.event_id, 0, true, e.tsec)))
-                out += ResolvedEvent(e.event_id, e.event_id, 0, causal = true)
-                drain(e.event_id)
-              case Some(pid) =>
-                st.resolved.get(pid) match {
-                  case Some(p) => settle(e, p)
-                  case None =>
-                    st = st.copy(pending = st.pending +
-                      (pid -> (st.pending.getOrElse(pid, Nil) :+ e)))
-                }
-            }
-          }
-          state.update(st)
-          out.iterator
-        })
-  }
-
-  /** [[resolve]] + watermark-based dangling-reply eviction (reference:
+  /** The evicting resolver: the [[TreeFold]] step plus watermark-based
+    * dangling-reply eviction (reference:
     * BuildReplyTreeProcessFunction.evictDanglingReplies:288-317 — a pending
     * reply whose event time the watermark has passed will never find its
     * parent: drop it AND its transitive waiting children — getWithChildren
@@ -164,82 +190,37 @@ object ReplyTreeOp {
     events.groupByKey(_ => 0)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         (_: Int, it: Iterator[EdgeEventT], state: GroupState[TreeState]) => {
-          var st = state.getOption.getOrElse(TreeState(Map.empty, Map.empty))
-          val out = scala.collection.mutable.ArrayBuffer.empty[TreeOut]
           val wm = state.getCurrentWatermarkMs()
-
-          def settle(e: EdgeEvent, p: (Long, Int, Boolean, Long)): Unit = {
-            val entry = (p._1, p._2 + 1, p._3 && e.tsec >= p._4, e.tsec)
-            st = st.copy(resolved = st.resolved + (e.event_id -> entry))
-            out += TreeOut(e.event_id, entry._1, entry._2, entry._3,
-              dropped = false, e.ts, e.user_id, e.event_type)
-            drain(e.event_id)
-          }
-
-          def drain(parentId: Long): Unit =
-            st.pending.get(parentId).foreach { children =>
-              st = st.copy(pending = st.pending - parentId)
-              val p = st.resolved(parentId)
-              children.sortBy(_.event_id).foreach(c => settle(c, p))
-            }
-
-          // drop a lost reply and, transitively, everything waiting on it
-          // (reference getWithChildren: children of a dropped reply are
-          // dropped regardless of their own timestamps)
-          val droppedIds = scala.collection.mutable.Set.empty[Long]
-          def dropWithChildren(e: EdgeEvent): Unit = if (droppedIds.add(e.event_id)) {
-            out += TreeOut(e.event_id, -1L, -1, causal = false, dropped = true,
-              e.ts, e.user_id, e.event_type)
-            st.pending.get(e.event_id).foreach { kids =>
-              st = st.copy(pending = st.pending - e.event_id)
-              kids.sortBy(_.event_id).foreach(dropWithChildren)
-            }
-          }
-
-          def evict(): Unit = {
-            val lost = st.pending.toSeq.sortBy(_._1).flatMap { case (pid, kids) =>
-              kids.filter(_.tsec <= wm).sortBy(_.event_id).map(pid -> _)
-            }
-            lost.foreach { case (pid, e) =>
-              if (!droppedIds.contains(e.event_id)) {
-                val rest = st.pending.getOrElse(pid, Nil)
-                  .filterNot(_.event_id == e.event_id)
-                st = st.copy(pending =
-                  if (rest.isEmpty) st.pending - pid else st.pending + (pid -> rest))
-                dropWithChildren(e)
-              }
-            }
-          }
-
-          evict() // watermark advanced since the last invocation
-          if (!state.hasTimedOut) {
-            it.toSeq.sortBy(_.event_id).foreach { et =>
-              val e = EdgeEvent(et.event_id, et.ts.getTime, et.parent_id,
-                et.user_id, et.event_type, et.ts)
-              e.parent_id match {
-                case None =>
-                  st = st.copy(resolved =
-                    st.resolved + (e.event_id -> (e.event_id, 0, true, e.tsec)))
-                  out += TreeOut(e.event_id, e.event_id, 0, causal = true,
-                    dropped = false, e.ts, e.user_id, e.event_type)
-                  drain(e.event_id)
-                case Some(pid) =>
-                  st.resolved.get(pid) match {
-                    case Some(p) => settle(e, p)
-                    case None =>
-                      st = st.copy(pending = st.pending +
-                        (pid -> (st.pending.getOrElse(pid, Nil) :+ e)))
-                  }
-              }
-            }
-          }
+          // watermark advanced since the last invocation
+          val (st0, lost) = dropOverdue(state.getOption.getOrElse(TreeFold.empty), wm)
+          val (st, settled) =
+            if (state.hasTimedOut) (st0, Nil) else TreeFold.add(st0, it.map(TreeFold.edge).toSeq)
           state.update(st)
           // re-arm: evict as soon as the watermark passes the oldest
           // pending reply (nothing pending -> no timer needed)
           st.pending.valuesIterator.flatten.map(_.tsec).minOption.foreach(t =>
             state.setTimeoutTimestamp(math.max(t + 1, wm + 1)))
-          out.iterator
+          lost.iterator.map(e => TreeOut(e.event_id, -1L, -1, causal = false,
+            dropped = true, e.ts, e.user_id, e.event_type)) ++
+            settled.iterator.map { case (e, (root, depth, causal, _)) =>
+              TreeOut(e.event_id, root, depth, causal, dropped = false,
+                e.ts, e.user_id, e.event_type)
+            }
         })
+  }
+
+  /** [[resolveEvicting]]'s overdue policy: take every pending reply the
+    * watermark has passed, each followed by its transitive waiting subtree
+    * (reference getWithChildren: children of a dropped reply are dropped
+    * regardless of their own timestamps). */
+  private[graft] def dropOverdue(st: TreeState, wm: Long): (TreeState, Seq[EdgeEvent]) = {
+    val (st1, due) = TreeFold.takeOverdue(st, wm)
+    val (st2, lost) = due.foldLeft((st1, Vector.empty[EdgeEvent])) {
+      case ((s, acc), (_, e)) =>
+        val (s1, sub) = TreeFold.takeSubtree(s, e.event_id)
+        (s1, (acc :+ e) ++ sub)
+    }
+    (st2, lost.distinctBy(_.event_id))
   }
 
   /** SCALE-OUT streaming resolution (SURVEY §7.4's sketch): the unbounded
@@ -275,9 +256,8 @@ object ReplyTreeOp {
     * necro-revival chain (each generation arriving > horizon after its
     * parent) resolves at hop k+1, so chains deeper than `hops` such
     * generations drop. Fast-path generations (within the horizon) are
-    * unlimited. At 100 TB, `hops` covers the p99.9 revival depth and the
-    * per-micro-batch fixpoint job (PipelineSpec) remains the unbounded
-    * answer.
+    * unlimited. At 100 TB, `hops` covers the p99.9 revival depth and a
+    * per-micro-batch fixpoint job would be the unbounded answer.
     *
     * Callers must disable
     * `spark.sql.streaming.statefulOperator.checkCorrectness.enabled` at
@@ -308,75 +288,22 @@ object ReplyTreeOp {
     events.groupByKey(_ => 0)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         (_: Int, it: Iterator[EdgeEventT], state: GroupState[TreeState]) => {
-          var st = state.getOption.getOrElse(TreeState(Map.empty, Map.empty))
-          val out = scala.collection.mutable.ArrayBuffer.empty[TreeFlow]
           val wm = state.getCurrentWatermarkMs()
-
-          def settle(e: EdgeEvent, p: (Long, Int, Boolean, Long)): Unit = {
-            val entry = (p._1, p._2 + 1, p._3 && e.tsec >= p._4, e.tsec)
-            st = st.copy(resolved = st.resolved + (e.event_id -> entry))
-            out += TreeFlow(0, e.event_id, e.parent_id.getOrElse(-1L),
-              entry._1, entry._2, entry._3, e.tsec, reg = true,
-              dropped = false, e.ts, e.user_id, e.event_type)
-            drain(e.event_id)
-          }
-
-          def drain(parentId: Long): Unit =
-            st.pending.get(parentId).foreach { children =>
-              st = st.copy(pending = st.pending - parentId)
-              val p = st.resolved(parentId)
-              children.sortBy(_.event_id).foreach(c => settle(c, p))
-            }
-
           // overdue pending replies become probes — the same deadline at
           // which resolveEvicting drops them, but here the archive gets
           // the last word. NOT transitive: children of a probed reply hit
           // their own deadlines later and probe for it by id.
-          def probeOverdue(): Unit = {
-            val due = st.pending.toSeq.sortBy(_._1).flatMap { case (pid, kids) =>
-              kids.filter(_.tsec <= wm).sortBy(_.event_id).map(pid -> _)
-            }
-            due.foreach { case (pid, e) =>
-              val rest = st.pending.getOrElse(pid, Nil)
-                .filterNot(_.event_id == e.event_id)
-              st = st.copy(pending =
-                if (rest.isEmpty) st.pending - pid else st.pending + (pid -> rest))
-              out += TreeFlow(1, e.event_id, pid, -1L, -1, causal = false,
-                e.tsec, reg = false, dropped = false, e.ts, e.user_id, e.event_type)
-            }
-          }
-
-          probeOverdue() // watermark advanced since the last invocation
-          if (!state.hasTimedOut) {
-            it.toSeq.sortBy(_.event_id).foreach { et =>
-              val e = EdgeEvent(et.event_id, et.ts.getTime, et.parent_id,
-                et.user_id, et.event_type, et.ts)
-              e.parent_id match {
-                case None =>
-                  st = st.copy(resolved =
-                    st.resolved + (e.event_id -> (e.event_id, 0, true, e.tsec)))
-                  out += TreeFlow(0, e.event_id, -1L, e.event_id, 0,
-                    causal = true, e.tsec, reg = true, dropped = false,
-                    e.ts, e.user_id, e.event_type)
-                  drain(e.event_id)
-                case Some(pid) =>
-                  st.resolved.get(pid) match {
-                    case Some(p) => settle(e, p)
-                    case None =>
-                      st = st.copy(pending = st.pending +
-                        (pid -> (st.pending.getOrElse(pid, Nil) :+ e)))
-                  }
-              }
-            }
-          }
+          val (st0, due) = TreeFold.takeOverdue(
+            state.getOption.getOrElse(TreeFold.empty), wm)
+          val (st1, settled) =
+            if (state.hasTimedOut) (st0, Nil) else TreeFold.add(st0, it.map(TreeFold.edge).toSeq)
           // horizon eviction: entries the watermark has outrun by more
           // than the horizon can no longer serve a fast-path child — any
           // later child probes the archive at its own deadline instead
-          val stale = st.resolved.iterator
+          val stale = st1.resolved.iterator
             .filter { case (_, (_, _, _, t)) => t + horizonMs <= wm }
             .map(_._1).toSeq
-          if (stale.nonEmpty)
-            st = st.copy(resolved = st.resolved -- stale)
+          val st = if (stale.isEmpty) st1 else st1.copy(resolved = st1.resolved -- stale)
           state.update(st)
           // re-arm for the earliest future obligation: a pending reply's
           // probe deadline or a recent entry's horizon expiry — state
@@ -384,7 +311,14 @@ object ReplyTreeOp {
           (st.pending.valuesIterator.flatten.map(_.tsec) ++
             st.resolved.valuesIterator.map(_._4 + horizonMs)).minOption
             .foreach(t => state.setTimeoutTimestamp(math.max(t + 1, wm + 1)))
-          out.iterator
+          due.iterator.map { case (pid, e) =>
+            TreeFlow(1, e.event_id, pid, -1L, -1, causal = false, e.tsec,
+              reg = false, dropped = false, e.ts, e.user_id, e.event_type)
+          } ++ settled.iterator.map { case (e, (root, depth, causal, _)) =>
+            TreeFlow(0, e.event_id, e.parent_id.getOrElse(-1L), root, depth,
+              causal, e.tsec, reg = true, dropped = false, e.ts, e.user_id,
+              e.event_type)
+          }
         })
   }
 

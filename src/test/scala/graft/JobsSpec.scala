@@ -61,39 +61,16 @@ class JobsSpec extends GraftSuite {
       "incremental upserts did not converge to the batch twin")
   }
 
-  test("PostStatisticsJob.runResolved(single-group): per-root stats equal the q45+q21 batch composition") {
+  test("PostStatisticsJob.runResolved (default scale-out): distributed-resolver chain equals the same batch twin") {
     // the reference's full Task-1 chain: comments → reply-tree resolution
     // → per-POST sliding statistics (ActivePostStatisticsJob.scala:48-66),
-    // on the reference-faithful SINGLE-GROUP fallback resolver (the
-    // scale-out resolver is the default since r10 — capstone test below).
-    // Twin: the batch fixpoint (q45's resolveRoots) joined back to the
-    // events, through the SAME slidingStats transform keyed by root_id.
-    import org.apache.spark.sql.functions._
-    val out = tmp("psjr_out"); val ckpt = tmp("psjr_ckpt")
-    val q = PostStatisticsJob.runResolved(spark, replayed, out, ckpt, scaleOut = false)
-    try q.processAllAvailable() finally q.stop()
-    val got = spark.read.parquet(out)
-    val resolved = graft.operators.GraphPack.resolveRoots(spark, sf)
-      .select(col("event_id"), col("root_id"))
-    val want = graft.operators.WindowPack.slidingStats(
-      Tables.events(spark, sf).join(resolved, "event_id")
-        .select(col("ts"), col("root_id"), col("event_type")),
-      exactDistinct = false, key = "root_id")
-    assert(got.count() == want.count() && got.count() > 0)
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
-      "per-root upserted statistics diverge from the q45+q21 batch twin")
-    // the chain is genuinely per-POST: replies contributed to their roots
-    // (some root must carry clicks it did not emit itself)
-    assert(got.agg(sum(col("n_click"))).head().getLong(0) > 0)
-  }
-
-  test("PostStatisticsJob.runResolved (default scale-out): distributed-resolver chain equals the same batch twin") {
-    // the full Task-1 chain with the DEFAULT frontier+archive resolver —
-    // six stateful operators in one query — must land on exactly the
-    // composition the single-group chain produces. The scale-out chain
-    // emits in APPEND mode (a multi-fMGWS query's planner requirement =
-    // the reference's fire-on-close semantics), so the comparison is over
-    // the FINALIZED windows: those the final watermark closed.
+    // on the frontier+archive resolver, with the window aggregation in the
+    // same query. Twin: the batch fixpoint (q45's resolveRoots) joined back to
+    // the events, through the SAME slidingStats transform keyed by
+    // root_id. The chain emits in APPEND mode (a multi-fMGWS query's
+    // planner requirement = the reference's fire-on-close semantics), so
+    // the comparison is over the FINALIZED windows: those the final
+    // watermark closed.
     import org.apache.spark.sql.functions._
     val out = tmp("psjs_out"); val ckpt = tmp("psjs_ckpt")
     val q = PostStatisticsJob.runResolved(spark, replayed, out, ckpt)
@@ -114,6 +91,8 @@ class JobsSpec extends GraftSuite {
       s"got ${got.count()} vs want ${want.count()} finalized windows")
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "scale-out chained job diverged from the batch twin on finalized windows")
+    // the chain is genuinely per-POST: replies contributed to their roots
+    assert(got.agg(sum(col("n_click"))).head().getLong(0) > 0)
   }
 
   test("all three analytic jobs run CONCURRENTLY in one session and converge (the reference's sustained-jobs anchor)") {

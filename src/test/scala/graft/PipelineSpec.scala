@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.KeyedUpsertSink
-import graft.streaming.{EdgeEvent, ReplyTreeOp}
+import graft.streaming.{EdgeEventT, ReplyTreeOp, TreeOut}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -36,17 +36,21 @@ class PipelineSpec extends GraftSuite {
 
     // ---- job 1: resolution → mapping store ----
     val edges = Tables.events(spark, sf)
-      .select(col("event_id"), unix_timestamp(col("ts")).as("tsec"),
+      .select(col("event_id"), col("ts"),
         when(col("event_type") === "click",
           col("event_id") - 1 - (regexp_extract(col("props"), "(\\d+)", 1).cast("long") % 4))
           .otherwise(lit(null)).as("parent_id"))
-      .collect().map(r => EdgeEvent(r.getLong(0), r.getLong(1),
+      .collect().map(r => EdgeEventT(r.getLong(0), r.getTimestamp(1),
         if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSeq
 
-    val stream1 = MemoryStream[EdgeEvent]
-    val job1 = ReplyTreeOp.resolve(stream1.toDS()).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.streaming.ResolvedEvent], _: Long) =>
-        batch.toDF().join(eventsInfo, "event_id") // enrich with ts/type (stream-static)
+    // a watermark delay longer than the input's event-time span: nothing
+    // evicts, so every reply waits for its parent
+    val stream1 = MemoryStream[EdgeEventT]
+    val job1 = ReplyTreeOp.resolveEvicting(stream1.toDS().withWatermark("ts", "3650 days"))
+      .writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[TreeOut], _: Long) =>
+        batch.filter(!col("dropped")).select("event_id", "root_id")
+          .join(eventsInfo, "event_id") // enrich with ts/type (stream-static)
           .select("event_id", "root_id", "ts", "event_type")
           .write.mode("append").parquet(mappingDir)
       }.start()

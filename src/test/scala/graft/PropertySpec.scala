@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.KMeans
-import graft.streaming.ControlParams
+import graft.streaming.{ControlParams, EdgeEvent, ReplyTreeOp, TreeFold}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
@@ -190,6 +190,73 @@ class PropertySpec extends AnyFunSuite {
           out
         }.toSeq
         st == stA && chunked == oneShot
+    })
+  }
+
+  /** A random forest over ids 0 until n: node i is a root or replies to an
+    * earlier node, at a random event time in [0, times). */
+  private def forest(n: Int, times: Int, rnd: scala.util.Random): IndexedSeq[EdgeEvent] =
+    (0 until n).map { i =>
+      val parent = if (i == 0 || rnd.nextInt(4) == 0) None else Some(rnd.nextInt(i).toLong)
+      EdgeEvent(i.toLong, rnd.nextInt(times).toLong, parent)
+    }
+
+  /** `events` in a random arrival order, cut into random micro-batches. */
+  private def chunked(events: Seq[EdgeEvent], rnd: scala.util.Random): List[Seq[EdgeEvent]] = {
+    var rest = rnd.shuffle(events).toList
+    val out = List.newBuilder[Seq[EdgeEvent]]
+    while (rest.nonEmpty) {
+      val k = 1 + rnd.nextInt(rest.length)
+      out += rest.take(k); rest = rest.drop(k)
+    }
+    out.result()
+  }
+
+  test("reply-tree step: any arrival order and chunking settles every node once, at the local fixpoint") {
+    // event times in [0, 10): parent/child ties are common, so the
+    // causality check's boundary (child tsec >= parent tsec) is exercised
+    check(Prop.forAll(Gen.choose(1, 40), Gen.long) { (n, seed) =>
+      val rnd = new scala.util.Random(seed)
+      val nodes = forest(n, 10, rnd)
+      // parents precede children in id, so one forward pass is the fixpoint
+      val expect = nodes.foldLeft(Map.empty[Long, (Long, Int, Boolean)]) { (m, e) =>
+        m + (e.event_id -> e.parent_id.fold((e.event_id, 0, true)) { p =>
+          val (root, depth, causal) = m(p)
+          (root, depth + 1, causal && e.tsec >= nodes(p.toInt).tsec)
+        })
+      }
+      val (st, settled) = chunked(nodes, rnd)
+        .foldLeft((TreeFold.empty, Vector.empty[(Long, (Long, Int, Boolean))])) {
+          case ((s, acc), batch) =>
+            val (s1, out) = TreeFold.add(s, batch)
+            (s1, acc ++ out.map { case (e, (r, d, c, _)) => e.event_id -> ((r, d, c)) })
+        }
+      settled.length == n && settled.toMap == expect && st.pending.isEmpty
+    })
+  }
+
+  test("reply-tree eviction: withheld parents drop exactly their transitive subtrees") {
+    check(Prop.forAll(Gen.choose(1, 40), Gen.long) { (n, seed) =>
+      val rnd = new scala.util.Random(seed)
+      val nodes = forest(n, 1000, rnd)
+      val withheld = nodes.map(_.event_id).filter(_ => rnd.nextInt(5) == 0).toSet
+      val input = nodes.filterNot(e => withheld(e.event_id))
+      val ids = input.map(_.event_id).toSet
+      // a node is lost iff its ancestor chain reaches a withheld node
+      val lost = nodes.foldLeft(Set.empty[Long]) { (s, e) =>
+        if (e.parent_id.exists(p => withheld(p) || s(p))) s + e.event_id else s
+      } -- withheld
+      val st = chunked(input, rnd).foldLeft(TreeFold.empty)(TreeFold.add(_, _)._1)
+      // the watermark passes every orphan (a reply to a withheld node) but
+      // not necessarily their descendants, which must drop with them
+      val wm = input.filter(_.parent_id.exists(withheld)).map(_.tsec).maxOption
+        .getOrElse(-1L)
+      val (after, dropped) = ReplyTreeOp.dropOverdue(st, wm)
+      val droppedIds = dropped.map(_.event_id)
+      val resolved = after.resolved.keySet
+      droppedIds.distinct.length == droppedIds.length &&
+        droppedIds.toSet == lost && resolved == ids -- lost &&
+        (resolved ++ droppedIds) == ids && after.pending.isEmpty
     })
   }
 }

@@ -31,12 +31,13 @@ class RecoverySpec extends GraftSuite {
   }
 
   test("runResolved chain resumes from checkpoint: BOTH stateful operators recover") {
-    // The full Task-1 chain holds two stateful operators in one query
-    // (reply-tree resolver + sliding window agg). A reply arriving AFTER
-    // the restart whose parent resolved BEFORE it can only resolve if the
-    // resolver's state recovered; its window contribution can only be
-    // correct if the agg state recovered too. props="0" makes the q45
-    // parent rule parent = event_id - 1 (clicks chain off the previous id).
+    // The full Task-1 chain holds several stateful operators in one query
+    // (the reply-tree resolver's frontier and archive hops + sliding
+    // window agg). A reply arriving AFTER the restart whose parent
+    // resolved BEFORE it can only resolve if the resolver's state
+    // recovered; its window contribution can only be correct if the agg
+    // state recovered too. props="0" makes the q45 parent rule
+    // parent = event_id - 1 (clicks chain off the previous id).
     import graft.jobs.PostStatisticsJob
     import spark.implicits._
     val base = Files.createTempDirectory("graft_rec_resolved").toString
@@ -50,35 +51,40 @@ class RecoverySpec extends GraftSuite {
     // run 1: roots 100-104 + the chain's first reply 105 (parent 104)
     val partA = Seq(ev(100, "view"), ev(101, "view"), ev(102, "purchase"),
       ev(103, "view"), ev(104, "view"), ev(105, "click"))
-    // run 2: replies 106 (parent 105 — resolved pre-restart) and 107
-    val partB = Seq(ev(106, "click"), ev(107, "click"))
+    // run 2: replies 106 (parent 105 — resolved pre-restart) and 107, plus
+    // a root two days later: its watermark closes every window of the
+    // 107-second span, which the chain emits in append mode
+    val partB = Seq(ev(106, "click"), ev(107, "click"),
+      (200L, new java.sql.Timestamp(1700000000000L + 2L * 86400 * 1000), 0L,
+        "view", 1.0, "0"))
 
     def runOnce(c: Seq[(Long, java.sql.Timestamp, Long, String, Double, String)]): Unit = {
       // chunk fully written before the query starts (no mid-write listing
       // races; the chain converges under any batch split, but the test
       // should exercise the intended two-batch restart shape)
       c.toDF(cols: _*).write.mode("append").parquet(in)
-      // single-group explicitly: this test's 107-second event span never
-      // crosses the doubled watermark, so the default scale-out chain
-      // (append mode, fires on window close) would emit nothing — the
-      // update-mode upsert is what lets the twin compare ALL windows.
-      // Scale-out restart coverage lives in ScaleOutReplyTreeSpec.
       val q = PostStatisticsJob.runResolved(spark,
-        spark.readStream.schema(sch).parquet(in), out, ckpt, scaleOut = false)
+        spark.readStream.schema(sch).parquet(in), out, ckpt)
       try q.processAllAvailable() finally q.stop() // "crash" between chunks
     }
     runOnce(partA); runOnce(partB)
 
-    // twin: the batch fixpoint + per-root sliding stats over ALL events
+    // twin: the batch fixpoint + per-root sliding stats over ALL events,
+    // on the FINALIZED windows: those whose end is at or behind the final
+    // downstream watermark (max event time − the doubled 1h delay)
     (partA ++ partB).toDF(cols: _*).write.parquet(s"$twinDir/events.parquet")
     val resolved = graft.operators.GraphPack.resolveRoots(spark, twinDir)
       .select(col("event_id"), col("root_id"))
+    val wmSec = Tables.events(spark, twinDir)
+      .agg(max(unix_timestamp(col("ts")))).head().getLong(0) - 2 * 3600
     val want = graft.operators.WindowPack.slidingStats(
       Tables.events(spark, twinDir).join(resolved, "event_id")
         .select(col("ts"), col("root_id"), col("event_type")),
       exactDistinct = false, key = "root_id")
+      .filter(col("wstart") + 12 * 3600 <= wmSec)
     val got = spark.read.parquet(out)
-    assert(got.count() == want.count() && got.count() > 0)
+    assert(got.count() == want.count() && got.count() > 0,
+      s"got ${got.count()} vs want ${want.count()} finalized windows")
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "restarted chained job diverged from the batch twin")
     // the post-restart replies really landed on root 104's statistics

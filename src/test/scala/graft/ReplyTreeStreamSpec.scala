@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.GraphPack
-import graft.streaming.{EdgeEvent, ReplyTreeOp}
+import graft.streaming.{EdgeEventT, ReplyTreeOp}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -11,14 +11,16 @@ import org.apache.spark.sql.functions._
   * under adversarial arrival orders. */
 class ReplyTreeStreamSpec extends GraftSuite {
 
-  private lazy val edges: Seq[EdgeEvent] = {
+  private def t(ms: Long) = new java.sql.Timestamp(ms)
+
+  private lazy val edges: Seq[EdgeEventT] = {
     Tables.events(spark, sf)
       .select(col("event_id"), unix_timestamp(col("ts")).as("tsec"),
         when(col("event_type") === "click",
           col("event_id") - 1 - (regexp_extract(col("props"), "(\\d+)", 1).cast("long") % 4))
           .otherwise(lit(null)).as("parent_id"))
       .collect().map { r =>
-        EdgeEvent(r.getLong(0), r.getLong(1),
+        EdgeEventT(r.getLong(0), t(r.getLong(1) * 1000L),
           if (r.isNullAt(2)) None else Some(r.getLong(2)))
       }.toSeq
   }
@@ -27,12 +29,19 @@ class ReplyTreeStreamSpec extends GraftSuite {
     GraphPack.queries("q45_reply_tree_roots")(spark, sf).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getInt(2), r.getBoolean(3)))).toMap
 
-  private def runStreaming(feed: Seq[Seq[EdgeEvent]], name: String): Map[Long, (Long, Int, Boolean)] = {
+  /** The evicting resolver's resolved rows into memory table `name`. The
+    * watermark delay is longer than any input's event-time span, so
+    * nothing evicts: every reply waits for its parent. */
+  private def startResolved(stream: MemoryStream[EdgeEventT], name: String) =
+    ReplyTreeOp.resolveEvicting(stream.toDS().withWatermark("ts", "3650 days"))
+      .filter(!col("dropped"))
+      .writeStream.format("memory").queryName(name).outputMode("append").start()
+
+  private def runStreaming(feed: Seq[Seq[EdgeEventT]], name: String): Map[Long, (Long, Int, Boolean)] = {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val stream = MemoryStream[EdgeEvent]
-    val q = ReplyTreeOp.resolve(stream.toDS()).writeStream
-      .format("memory").queryName(name).outputMode("append").start()
+    val stream = MemoryStream[EdgeEventT]
+    val q = startResolved(stream, name)
     try {
       feed.foreach { c => stream.addData(c); q.processAllAvailable() }
       spark.table(name).collect()
@@ -63,7 +72,7 @@ class ReplyTreeStreamSpec extends GraftSuite {
     // its parent -> dropped (with transitive children) to the side output.
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val stream = MemoryStream[graft.streaming.EdgeEventT]
+    val stream = MemoryStream[EdgeEventT]
     // 2h watermark delay: lets the test hold C1's event time AHEAD of the
     // watermark at X's eviction, so C1 can only drop TRANSITIVELY
     val q = ReplyTreeOp.resolveEvicting(
@@ -71,10 +80,8 @@ class ReplyTreeStreamSpec extends GraftSuite {
       .writeStream.format("memory").queryName("rt_evict")
       .outputMode("append").start()
     try {
-      val maxSec = edges.map(_.tsec).max
-      val asT = edges.map(e => graft.streaming.EdgeEventT(
-        e.event_id, new java.sql.Timestamp(e.tsec * 1000L), e.parent_id))
-      asT.grouped(asT.length / 3 + 1)
+      val maxSec = edges.map(_.ts.getTime / 1000L).max
+      edges.grouped(edges.length / 3 + 1)
         .foreach { c => stream.addData(c); q.processAllAvailable() }
       // at sf0.001 every natural event resolves, so inject a dangling
       // chain: X waits on a parent that never comes, C1 waits on X with an
@@ -83,21 +90,21 @@ class ReplyTreeStreamSpec extends GraftSuite {
       // its own timestamp
       val xId = 5000001L; val c1Id = 5000002L
       stream.addData(
-        graft.streaming.EdgeEventT(xId,
+        EdgeEventT(xId,
           new java.sql.Timestamp((maxSec + 10) * 1000L), Some(-999L)),
-        graft.streaming.EdgeEventT(c1Id,
+        EdgeEventT(c1Id,
           new java.sql.Timestamp((maxSec + 5000) * 1000L), Some(xId)))
       q.processAllAvailable()
       // nudge 1 -> watermark = maxSec+200: past X (+10), NOT past C1
       // (+5000); nudge 2 -> watermark = maxSec+7400: past everything
       val nudgeId = 10000000L
-      stream.addData(graft.streaming.EdgeEventT(
+      stream.addData(EdgeEventT(
         nudgeId, new java.sql.Timestamp((maxSec + 7400) * 1000L), None))
       q.processAllAvailable()
       val afterNudge1 = spark.table("rt_evict").collect()
       assert(afterNudge1.exists(r => r.getLong(0) == c1Id && r.getBoolean(4)),
         "C1 must drop transitively with X, ahead of its own event time")
-      stream.addData(graft.streaming.EdgeEventT(
+      stream.addData(EdgeEventT(
         nudgeId + 1, new java.sql.Timestamp((maxSec + 14600) * 1000L), None))
       q.processAllAvailable()
 
@@ -122,7 +129,7 @@ class ReplyTreeStreamSpec extends GraftSuite {
       // pending really is gone: a late-arriving parent of a dropped reply
       // must resolve nothing (the reply was evicted, not parked)
       val before = spark.table("rt_evict").count()
-      stream.addData(graft.streaming.EdgeEventT(
+      stream.addData(EdgeEventT(
         xId, new java.sql.Timestamp((maxSec + 14700) * 1000L), None))
       q.processAllAvailable()
       val after = spark.table("rt_evict").collect()
@@ -144,7 +151,9 @@ class ReplyTreeStreamSpec extends GraftSuite {
       val nodes = (0L until n).map { i =>
         val parent = if (i == 0 || rnd.nextInt(4) == 0) None
                      else Some(rnd.nextLong(i)) // any earlier node
-        EdgeEvent(i, rnd.nextInt(1000).toLong, parent)
+        // event times from 1 s: a reply at the initial watermark (0)
+        // would already be overdue
+        EdgeEventT(i, t((1 + rnd.nextInt(1000)) * 1000L), parent)
       }
       // local fixpoint: ids ascend from roots, so one forward pass settles
       val expect = scala.collection.mutable.Map.empty[Long, (Long, Int, Boolean)]
@@ -153,14 +162,13 @@ class ReplyTreeStreamSpec extends GraftSuite {
           case None => expect(e.event_id) = (e.event_id, 0, true)
           case Some(p) =>
             val (r, d, c) = expect(p)
-            val pts = nodes(p.toInt).tsec
-            expect(e.event_id) = (r, d + 1, c && e.tsec >= pts)
+            val pts = nodes(p.toInt).ts.getTime
+            expect(e.event_id) = (r, d + 1, c && e.ts.getTime >= pts)
         }
       }
       val arrival = rnd.shuffle(nodes)
-      val stream = MemoryStream[EdgeEvent]
-      val q = ReplyTreeOp.resolve(stream.toDS()).writeStream
-        .format("memory").queryName(s"rt_prop_$sample").outputMode("append").start()
+      val stream = MemoryStream[EdgeEventT]
+      val q = startResolved(stream, s"rt_prop_$sample")
       try {
         var rest = arrival.toList
         while (rest.nonEmpty) {
@@ -179,9 +187,8 @@ class ReplyTreeStreamSpec extends GraftSuite {
   test("each event is emitted exactly once across micro-batches") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val stream = MemoryStream[EdgeEvent]
-    val q = ReplyTreeOp.resolve(stream.toDS()).writeStream
-      .format("memory").queryName("rt_once").outputMode("append").start()
+    val stream = MemoryStream[EdgeEventT]
+    val q = startResolved(stream, "rt_once")
     try {
       edges.reverse.grouped(edges.length / 4 + 1)
         .foreach { c => stream.addData(c); q.processAllAvailable() }
