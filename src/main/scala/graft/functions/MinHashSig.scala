@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   * exploded rows — disappears from the plan entirely. At 100 TB that is
   * the difference between a map-only signature pass and shuffling the
   * exploded token stream. (For element sets arriving as rows, use
-  * [[MinHash.signature]] or the bounded-state [[MinHashAggregator]].)
+  * [[MinHash.signature]].)
   *
   * Hash parity contract (same as [[Hashes]], single source of truth via
   * [[Hashes.family]]): x = first 4 md5 bytes unsigned (== Spark

@@ -7,47 +7,37 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The reference's Task 1 as a runnable streaming main (reference:
   * jobs/activeposts/ActivePostStatisticsJob.scala:20-92 — consume the
-  * replayed event streams, compute 12 h / 30 min sliding per-key
-  * statistics, and continuously upsert them into the result store keyed
-  * so that newer statistics never lose to older ones).
+  * replayed event streams, resolve each comment to its root post, compute
+  * 12 h / 30 min sliding per-post statistics, and continuously upsert them
+  * into the result store keyed so that newer statistics never lose to
+  * older ones).
   *
-  * Spark assembly: scaled replay source (S1/S3) → watermark →
-  * [[StreamOps.slidingStats]] (the SAME transform batch query q21's
-  * family uses — batch/stream parity by construction) in update mode →
-  * per-micro-batch [[KeyedUpsertSink]] merge keyed by (wstart, user_id).
+  * Spark assembly: scaled replay source (S1/S3) → watermark → reply-tree
+  * resolution → [[StreamOps.slidingStats]] keyed by `root_id` (the SAME
+  * transform batch query q21's family uses — batch/stream parity by
+  * construction) in append mode → per-micro-batch [[KeyedUpsertSink]]
+  * merge keyed by (wstart, root_id).
   *
   * Ordering (the reference's W11 concern — it partitions its Kafka topic
   * by post id so ES sees per-post order, ActivePostStatisticsJob.scala
-  * :69-80): here `n_events` is the upsert VERSION — it is monotonically
-  * non-decreasing per (window, user) as events accumulate, so replayed or
+  * :69-80): here `n_events` is the upsert VERSION, so replayed or
   * reordered micro-batches can never overwrite newer statistics with
   * older ones, and re-running a batch is idempotent (W10).
   *
-  * Scale: state is the sliding-window aggregation's (bounded by the
-  * watermark); the upsert is one shuffle on the key per micro-batch. In
-  * production the sink is a Delta/Iceberg MERGE (KeyedUpsertSink's
-  * documented swap point) and the trigger interval amortizes it.
+  * Scale: state is the resolver's and the sliding-window aggregation's
+  * (both bounded by the watermark); the upsert is one shuffle on the key
+  * per micro-batch. In production the sink is a Delta/Iceberg MERGE
+  * (KeyedUpsertSink's documented swap point) and the trigger interval
+  * amortizes it.
   */
 object PostStatisticsJob {
-
-  /** Compose the job over an arbitrary (streaming) events frame —
-    * injectable for tests; `main` wires the replay source. */
-  def run(spark: SparkSession, events: DataFrame, outDir: String,
-          checkpointDir: String, watermark: String = "1 hour"): StreamingQuery =
-    StreamOps.slidingStats(events.withWatermark("ts", watermark))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        KeyedUpsertSink.upsert(batch.sparkSession, outDir, batch,
-          Seq("wstart", "user_id"), "n_events")
-      }
-      .start()
 
   /** The reference's FULL Task-1 chain (ActivePostStatisticsJob.scala:48-66):
     * the comment stream is first resolved to its transitive root post by
     * the reply-tree builder, the resolved events rejoin the root events,
     * and the sliding statistics are computed PER ROOT POST — so a reply
     * deep in a thread counts toward its post's statistics, not its own id.
+    * Injectable for tests; `main` wires the replay source.
     *
     * Spark assembly: watermark → derive the edge relation (q45's
     * deterministic parent rule: 'click' events are replies) →
@@ -104,7 +94,7 @@ object PostStatisticsJob {
     // side output). Scope the opt-out to this query's startup
     // (StreamOps.startUnchecked).
     StreamOps.startUnchecked(spark) {
-      StreamOps.slidingStatsBy(resolved, "root_id")
+      StreamOps.slidingStats(resolved, "root_id")
         .writeStream.outputMode("append")
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -123,19 +113,14 @@ object PostStatisticsJob {
     case _ => w
   }
 
-  /** CLI: PostStatisticsJob <sfDir> <outDir> <checkpointDir> [speedup] [runSeconds] [mode]
-    * — mode `resolved` runs the full reply-resolved chain ([[runResolved]]). */
+  /** CLI: PostStatisticsJob <sfDir> <outDir> <checkpointDir> [speedup] [runSeconds]
+    * — runs the per-post chain ([[runResolved]]). */
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, ckpt) = (args(0), args(1), args(2))
     val speedup = args.lift(3).getOrElse("10000")
     val runSec = args.lift(4).map(_.toLong).getOrElse(Long.MaxValue)
     val spark = graft.Sessions.local("post-statistics")
-    val events = Jobs.replayEvents(spark, sfDir, speedup)
-    val q = args.lift(5) match {
-      case Some("resolved") =>
-        runResolved(spark, events, outDir, ckpt)
-      case _ => run(spark, events, outDir, ckpt)
-    }
+    val q = runResolved(spark, Jobs.replayEvents(spark, sfDir, speedup), outDir, ckpt)
     Jobs.await(q, runSec)
     q.stop(); spark.stop()
   }

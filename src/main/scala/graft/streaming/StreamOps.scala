@@ -72,11 +72,6 @@ final case class ModelRow(version: Int, n_points: Int, centroids: Seq[Seq[Double
                           weights: Seq[Double], labels: Seq[String] = Nil,
                           avg_shift: Double = 0.0, k_diff: Int = 0)
 
-/** Clustering window state (reference: ListState buffer + previous model,
-  * KMeansClusterFunction.scala:112-196). */
-final case class ClusterState(buffer: Seq[Seq[Double]], centroids: Seq[Seq[Double]],
-                              weights: Seq[Double], version: Int)
-
 /** Input element for the full clustering window: a feature point
   * (`ctrl` empty) or a raw control-stream line (`point` empty) — the
   * reference's broadcast parameter channel merged into the keyed stream,
@@ -104,32 +99,12 @@ object StreamOps {
   /** A1 sliding per-key statistics on a (possibly streaming) events frame —
     * the reference's flagship operator. Delegates to the same transform the
     * batch query q21 uses, with the streaming-legal (and 100 TB-scale)
-    * approx distinct count. */
-  def slidingStats(events: DataFrame): DataFrame =
-    graft.operators.WindowPack.slidingStats(events, exactDistinct = false)
-
-  /** [[slidingStats]] keyed by an arbitrary column — the per-ROOT-POST
-    * form the full Task-1 chain aggregates after reply resolution
-    * (reference: post id, ActivePostStatisticsJob.scala:48-66). */
-  def slidingStatsBy(events: DataFrame, key: String): DataFrame =
+    * approx distinct count. `key` is `user_id` for the per-user form and
+    * `root_id` for the per-ROOT-POST form the full Task-1 chain aggregates
+    * after reply resolution (reference: post id,
+    * ActivePostStatisticsJob.scala:48-66). */
+  def slidingStats(events: DataFrame, key: String = "user_id"): DataFrame =
     graft.operators.WindowPack.slidingStats(events, exactDistinct = false, key = key)
-
-  /** Windowed distinct-user counts as DataSketches HLL — the
-    * production-grade streaming sketch (lgK=12, ~1.6% error). Sketch
-    * state is fixed-size per (window, type) group regardless of
-    * cardinality (vs collect_set's linear state), and the stored
-    * register state is a max-merge, so partial sketches from any partition
-    * or micro-batch order converge to the same state — the property that
-    * makes the estimate reaggregatable across a 1000-executor topology.
-    * [[sketchDistinctDetRegs]] is the cross-engine-DETERMINISTIC sibling
-    * (q79's exact construction). */
-  def sketchDistinct(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "4 hours"), col("event_type"))
-      .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"), lit(12)))
-        .as("est_users"))
-      .select(unix_timestamp(col("window.start")).as("wstart"),
-        col("event_type"), col("est_users"))
 
   /** Windowed register state of q79's DETERMINISTIC HyperLogLog — the
     * same md5-derived bucket/rho coordinates as the batch query and its
@@ -517,95 +492,21 @@ object StreamOps {
         col("n"), col("sample"))
   }
 
-  /** Session funnel under Structured Streaming — q91's streaming twin.
-    * One session_window aggregation collects the stage events; the
-    * ordered view→click→purchase minima are then per-row array folds
-    * (filter/transform/array_min) over the session's own events, so the
-    * funnel ordering logic runs AFTER the stateful agg on finalized (or
-    * complete-mode current) sessions — state is exactly session_window's,
-    * nothing custom. Per-session flags; batch and stream share this
-    * transform, and StreamingSpec reconciles its totals with q91's
-    * lag-gap cohort counts. */
-  def funnelSessions(events: DataFrame, gap: String = "30 minutes"): DataFrame =
-    events
-      .groupBy(session_window(col("ts"), gap).as("w"), col("user_id"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        min(when(col("event_type") === "view", col("ts"))).as("t_view"),
-        sort_array(collect_list(when(col("event_type").isin("click", "purchase"),
-          struct(col("ts").as("ets"), col("event_type").as("ety"))))).as("evs"))
-      .withColumn("t_click", array_min(expr(
-        "transform(filter(evs, e -> e.ety = 'click' AND t_view IS NOT NULL" +
-          " AND e.ets >= t_view), e -> e.ets)")))
-      .withColumn("t_purchase", array_min(expr(
-        "transform(filter(evs, e -> e.ety = 'purchase' AND t_click IS NOT NULL" +
-          " AND e.ets >= t_click), e -> e.ets)")))
-      .select(col("user_id"), unix_timestamp(col("w.start")).as("sess_start"),
-        col("n_events"), col("t_view").isNotNull.as("reached_view"),
-        col("t_click").isNotNull.as("reached_click"),
-        col("t_purchase").isNotNull.as("reached_purchase"))
-
-  /** Streaming exact dedup by content fingerprint within the watermark
-    * horizon — streaming ingest dedup for a training-data pipeline; state
-    * is bounded by the watermark (expired keys are dropped). */
-  def dedup(events: DataFrame, watermark: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicates("user_id", "event_type", "value")
-
   /** J11 as-of enrichment: append to each purchase the value of the user's
     * most recent prior view, 0.0 if none or staler than `maxAgeSec`
     * (reference: AggregateFeaturesFunction.scala:22-66 — last-value state
     * with staleness cutoff; like the reference, semantics are
     * arrival-order-dependent across micro-batches: state is updated as
     * events arrive; within a batch we sort by (ts, event_id)).
-    */
-  def asOfEnrich(events: Dataset[Ev], maxAgeSec: Long = 21600L): Dataset[EnrichedPurchase] = {
-    implicit val stateEnc = Encoders.product[AsOfState]
-    implicit val outEnc = Encoders.product[EnrichedPurchase]
-    implicit val keyEnc = Encoders.scalaLong
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (user: Long, it: Iterator[Ev], state: GroupState[AsOfState]) => {
-          val (last, out) = asOfFold(user, state.getOption, it.toSeq, maxAgeSec)
-          last.foreach(state.update)
-          out.iterator
-        })
-  }
-
-  /** The per-user as-of transition behind [[asOfEnrich]] and
-    * [[asOfEnrichTtl]]: replay a batch in (ts, event_id) order through the
-    * user's last view; each purchase takes that view's value, or 0.0 when
-    * there is none or it is staler than `maxAgeSec`. Returns the new last
-    * view and the enriched purchases. */
-  private def asOfFold(user: Long, last0: Option[AsOfState], evs: Seq[Ev],
-                       maxAgeSec: Long): (Option[AsOfState], Seq[EnrichedPurchase]) = {
-    var last = last0
-    val out = scala.collection.mutable.ArrayBuffer.empty[EnrichedPurchase]
-    evs.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-      e.event_type match {
-        case "view" =>
-          last = Some(AsOfState(e.ts.getTime, e.value))
-        case "purchase" =>
-          val prior = last match {
-            case Some(AsOfState(vts, vv))
-              if e.ts.getTime - vts <= maxAgeSec * 1000 => vv
-            case _ => 0.0
-          }
-          out += EnrichedPurchase(e.event_id, user, e.value, prior)
-        case _ => ()
-      }
-    }
-    (last, out.toSeq)
-  }
-
-  /** [[asOfEnrich]] with event-time state eviction (W6/W7): a user's
-    * last-view state carries an event-time timer at viewTs + maxAge — once
-    * the watermark passes it the state is dropped (reference: state TTL +
-    * event-time timers, FlinkUtils.scala:80-87, AggregateFeaturesFunction
-    * .scala:57-65). Because the staleness cutoff already ignores views
-    * older than maxAge, eviction changes NO output — it bounds state: the
-    * store holds only users with a view inside the watermark horizon
-    * (asserted on numRowsTotal in StreamingSpec).
+    *
+    * State eviction (W6/W7): a user's last-view state carries an
+    * event-time timer at viewTs + maxAge — once the watermark passes it
+    * the state is dropped (reference: state TTL + event-time timers,
+    * FlinkUtils.scala:80-87, AggregateFeaturesFunction.scala:57-65).
+    * Because the staleness cutoff already ignores views older than
+    * maxAge, eviction changes NO output — it bounds state: the store holds
+    * only users with a view inside the watermark horizon (asserted on
+    * numRowsTotal in StreamingSpec).
     * Input must carry a watermark on `ts`.
     */
   def asOfEnrichTtl(events: Dataset[Ev], maxAgeSec: Long = 21600L): Dataset[EnrichedPurchase] = {
@@ -619,7 +520,22 @@ object StreamOps {
             state.remove() // watermark passed viewTs + maxAge: evict
             Iterator.empty
           } else {
-            val (last, out) = asOfFold(user, state.getOption, it.toSeq, maxAgeSec)
+            var last = state.getOption
+            val out = scala.collection.mutable.ArrayBuffer.empty[EnrichedPurchase]
+            it.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
+              e.event_type match {
+                case "view" =>
+                  last = Some(AsOfState(e.ts.getTime, e.value))
+                case "purchase" =>
+                  val prior = last match {
+                    case Some(AsOfState(vts, vv))
+                      if e.ts.getTime - vts <= maxAgeSec * 1000 => vv
+                    case _ => 0.0
+                  }
+                  out += EnrichedPurchase(e.event_id, user, e.value, prior)
+                case _ => ()
+              }
+            }
             last.foreach { s =>
               state.update(s)
               state.setTimeoutTimestamp(s.viewTs + maxAgeSec * 1000)
@@ -629,54 +545,7 @@ object StreamOps {
         })
   }
 
-  /** A6 count-bounded clustering window: buffer feature vectors in state;
-    * when the buffer reaches `maxCount`, run seeded K-means (bootstrapped
-    * from the previous model's centroids — reference: KMeansClusterFunction
-    * "seeded by previous centroids"), decay-merge with the previous model
-    * (F15), emit the new model, clear the buffer. Runs in ONE state group —
-    * the same single-task semantics the reference enforces with
-    * parallelism 1 (UnusualActivityDetectionJob.scala:367,376).
-    * This is the timer-less count-trigger CORE; [[clusterWindows]] is the
-    * full reference operator (event-time window end, min-count extension,
-    * max-count early fire, runtime re-parameterization).
-    */
-  def countBoundedCluster(points: Dataset[Seq[Double]], k: Int, maxCount: Int,
-                          decay: Double = 0.2): Dataset[ModelRow] = {
-    implicit val stateEnc = Encoders.product[ClusterState]
-    implicit val outEnc = Encoders.product[ModelRow]
-    implicit val keyEnc = Encoders.scalaInt
-    points.groupByKey(_ => 0)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: Int, it: Iterator[Seq[Double]], state: GroupState[ClusterState]) => {
-          var st = state.getOption.getOrElse(ClusterState(Nil, Nil, Nil, 0))
-          var buf = st.buffer ++ it.map(_.toSeq).toSeq
-          val out = scala.collection.mutable.ArrayBuffer.empty[ModelRow]
-          while (buf.length >= maxCount) {
-            val (window, rest) = buf.splitAt(maxCount)
-            val pts = window.map(_.toVector)
-            val init =
-              if (st.centroids.isEmpty) KMeans.bootstrap(pts, k, seed = 137L)
-              else st.centroids.map(_.toVector).toVector
-            val clustered = KMeans.cluster(pts, init)
-            val merged =
-              if (st.centroids.isEmpty) clustered
-              else KMeans.Model(st.centroids.indices.map(i =>
-                KMeans.Cluster(i, st.centroids(i).toVector, st.weights(i))).toVector)
-                .update(clustered, decay)
-            val version = st.version + 1
-            out += ModelRow(version, pts.length,
-              merged.clusters.map(_.centroid.toSeq),
-              merged.clusters.map(_.weight))
-            st = ClusterState(Nil, merged.clusters.map(_.centroid.toSeq),
-              merged.clusters.map(_.weight), version)
-            buf = rest
-          }
-          state.update(st.copy(buffer = buf))
-          out.iterator
-        })
-  }
-
-  /** A6/W4/W8 in full — the reference's clustering window operator
+  /** A6/W4/W8 — the reference's clustering window operator
     * (KMeansClusterFunction.scala:112-196) on `flatMapGroupsWithState`
     * with event-time timeouts:
     *

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** End-to-end Task 3 (reference: UnusualActivityDetectionJob, SURVEY §3.3):
-  * featurized text stream → count-bounded K-means window (model stream) →
+  * featurized text stream → K-means clustering window (model stream) →
   * classification of the SAME event stream against the latest model — the
   * reference's broadcast-model join J14 realized as the SURVEY §7.3 plan:
   * "foreachBatch: load current model (driver var), classify". Events
@@ -27,9 +27,14 @@ class ActivityPipelineSpec extends GraftSuite {
 
     @volatile var currentModel: Option[(Int, KMeans.Model)] = None
 
-    // job 1: model stream (single state group, count trigger at 100)
-    val pointStream = MemoryStream[Seq[Double]]
-    val modelQ = StreamOps.countBoundedCluster(pointStream.toDS(), k = 3, maxCount = 100)
+    // job 1: model stream (single state group, count trigger at 100, a
+    // window that never ends). Points carry strictly increasing times from
+    // 1 s (t = 0 equals the initial watermark and would drop as late), so
+    // the operator's (ts, point) order is the document order
+    val pointStream = MemoryStream[graft.streaming.ClusterIn]
+    val modelQ = StreamOps.clusterWindows(
+        pointStream.toDS().withWatermark("ts", "0 seconds"), k = 3, decay = 0.2,
+        windowSizeMs = 3650L * 24 * 3600 * 1000, minCount = 0, maxCount = 100)
       .writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[graft.streaming.ModelRow], _: Long) =>
         batch.orderBy(col("version")).collect().lastOption.foreach { m =>
@@ -57,9 +62,11 @@ class ActivityPipelineSpec extends GraftSuite {
       }.start()
 
     try {
-      val chunks = feats.grouped(120).toSeq
-      chunks.foreach { c =>
-        pointStream.addData(c.map(_._2)); modelQ.processAllAvailable()
+      val points = feats.zipWithIndex.map { case ((_, p), i) =>
+        graft.streaming.ClusterIn(new java.sql.Timestamp((i + 1) * 1000L), p, "")
+      }
+      feats.grouped(120).zip(points.grouped(120)).foreach { case (c, pc) =>
+        pointStream.addData(pc.toSeq); modelQ.processAllAvailable()
         docStream.addData(c.map(t => (t._1, t._2))); classifyQ.processAllAvailable()
       }
     } finally { modelQ.stop(); classifyQ.stop() }

@@ -53,6 +53,14 @@ class FunnelStreamSpec extends GraftSuite {
         s"${got.length} streamed sessions vs ${want.length} batch sessions")
       assert(got.sameElements(want))
       assert(want.exists(_._4 >= 1), "data exercises at least the view stage")
+      // the streamed sessions reconcile with q91's cohort totals: sessions,
+      // and sessions that reached view, click and purchase
+      val q91 = WindowPack.queries("q91_funnel")(spark, sf).collect()
+      def tot(i: Int) = q91.map(_.getLong(i)).sum
+      assert(got.length.toLong === tot(1))
+      assert(got.count(_._4 >= 1).toLong === tot(2))
+      assert(got.count(_._4 >= 2).toLong === tot(3))
+      assert(got.count(_._4 == 3).toLong === tot(4))
     } finally q.stop()
   }
 

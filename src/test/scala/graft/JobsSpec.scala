@@ -22,41 +22,38 @@ class JobsSpec extends GraftSuite {
     spark.readStream.format(fmt)
       .option("path", sf).option("speedup", "1e15").load()
 
-  test("PostStatisticsJob: replayed stream upserts to exactly the batch sliding stats") {
-    val out = tmp("psj_out"); val ckpt = tmp("psj_ckpt")
-    val q = PostStatisticsJob.run(spark, replayed, out, ckpt)
-    try q.processAllAvailable() finally q.stop()
-    val got = spark.read.parquet(out)
-    val want = graft.operators.WindowPack.slidingStats(
-      Tables.events(spark, sf), exactDistinct = false)
-    assert(got.count() == want.count())
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
-      "upserted statistics diverge from the batch twin")
-  }
-
   test("PostStatisticsJob: multi-batch arrival converges to the batch answer (monotonic upsert)") {
+    // event-ordered micro-batches through the per-post chain, then one root
+    // two days on: its doubled watermark closes every window of the sf
+    // span, so the store must hold exactly the q45 + q21 batch twin
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val out = tmp("psj2_out"); val ckpt = tmp("psj2_ckpt")
     val rows = Tables.events(spark, sf)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .as[(Long, java.sql.Timestamp, Long, String, Double)]
-      .collect().sortBy(r => (r._2.getTime, r._1))
-    val stream = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val q = PostStatisticsJob.run(spark,
-      stream.toDF().toDF("event_id", "ts", "user_id", "event_type", "value"),
+      .select("event_id", "ts", "user_id", "event_type", "value", "props")
+      .as[(Long, java.sql.Timestamp, Long, String, Double, String)].collect().sortBy(r => (r._2.getTime, r._1))
+    val stream = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double, String)]
+    val q = PostStatisticsJob.runResolved(spark,
+      stream.toDF().toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
       out, ckpt)
     try {
-      // event-time-ordered chunks: each micro-batch UPDATES open windows;
-      // the monotonic n_events version must converge to the batch totals
       rows.grouped(math.max(1, rows.length / 3)).foreach { c =>
         stream.addData(c.toIndexedSeq); q.processAllAvailable()
       }
+      val last = rows.last
+      stream.addData((rows.map(_._1).max + 1,
+        new java.sql.Timestamp(last._2.getTime + 2L * 86400 * 1000), 0L, "view", 0.0, "0"))
+      q.processAllAvailable()
     } finally q.stop()
     val got = spark.read.parquet(out)
+    val resolved = graft.operators.GraphPack.resolveRoots(spark, sf)
+      .select(col("event_id"), col("root_id"))
     val want = graft.operators.WindowPack.slidingStats(
-      Tables.events(spark, sf), exactDistinct = false)
-    assert(got.count() == want.count())
+      Tables.events(spark, sf).join(resolved, "event_id")
+        .select(col("ts"), col("root_id"), col("event_type")),
+      exactDistinct = false, key = "root_id")
+    assert(got.count() == want.count() && got.count() > 0,
+      s"got ${got.count()} vs want ${want.count()} windows")
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "incremental upserts did not converge to the batch twin")
   }

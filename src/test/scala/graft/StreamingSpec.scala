@@ -7,9 +7,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Structured-Streaming behavior: batch/stream parity for shared
-  * transforms, stateful as-of enrichment, streaming dedup, count-bounded
-  * clustering — the reference's streaming semantics (SURVEY §2.9) driven
-  * through MemoryStream micro-batches. */
+  * transforms, stateful as-of enrichment, the clustering window — the
+  * reference's streaming semantics (SURVEY §2.9) driven through
+  * MemoryStream micro-batches. */
 class StreamingSpec extends GraftSuite {
 
   private def eventsTyped = {
@@ -78,40 +78,6 @@ class StreamingSpec extends GraftSuite {
     } finally q.stop()
   }
 
-  test("sketch distinct: streaming HLL windows equal the batch sketch and exact counts") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val all = eventsTyped
-    val stream = MemoryStream[Ev]
-    val q = StreamOps.sketchDistinct(stream.toDF())
-      .writeStream.format("memory").queryName("sketch_parity")
-      .outputMode("complete").start()
-    try {
-      val chunks = all.grouped(math.max(1, all.length / 3 + 1)).toSeq
-      chunks.foreach { c => stream.addData(c.reverse); q.processAllAvailable() }
-      val streamed = spark.table("sketch_parity")
-        .orderBy(col("wstart"), col("event_type")).collect()
-      // same transform in batch: HLL register merge is a max — any
-      // partition/micro-batch arrival order converges to the same state
-      val batch = StreamOps.sketchDistinct(Tables.events(spark, sf))
-        .orderBy(col("wstart"), col("event_type")).collect()
-      assert(streamed.length == batch.length)
-      assert(streamed.sameElements(batch))
-      // and the estimates track the exact distinct counts (tiny per-window
-      // cardinalities: the sketch is still in its exact list mode)
-      val exact = Tables.events(spark, sf)
-        .groupBy(window(col("ts"), "4 hours"), col("event_type"))
-        .agg(countDistinct(col("user_id")).as("n"))
-        .select(unix_timestamp(col("window.start")).as("wstart"),
-          col("event_type"), col("n"))
-        .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
-      streamed.foreach { r =>
-        val key = (r.getLong(0), r.getString(1))
-        assert(r.getLong(2) == exact(key), s"window $key estimate drifted")
-      }
-    } finally q.stop()
-  }
-
   test("weighted reservoir: streamed window sample equals batch and the brute-force top-k") {
     // Efraimidis–Spirakis keys are a pure function of the data (hash
     // uniforms, no RNG state), so the streamed reservoir must equal BOTH a
@@ -177,6 +143,25 @@ class StreamingSpec extends GraftSuite {
       assert(streamed.length == batch.length && streamed.nonEmpty)
       assert(streamed.sameElements(batch),
         "streamed deterministic-HLL registers diverged from batch")
+      // the streamed registers fold through Hll.estimate to within q79's
+      // m=256 error bound of the exact per-window distinct counts
+      val exact = Tables.events(spark, sf)
+        .groupBy(window(col("ts"), "4 hours"), col("event_type"))
+        .agg(countDistinct(col("user_id")).as("n"))
+        .select(unix_timestamp(col("window.start")).as("wstart"),
+          col("event_type"), col("n"))
+        .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
+      val est = graft.functions.Hll.estimate(spark.table("det_hll_parity"),
+          Seq("wstart", "event_type"), "est_users")
+        .collect().map(r => (r.getLong(0), r.getString(1)) ->
+          (r.getAs[Long]("m_used"), r.getAs[Long]("est_users"))).toMap
+      assert(est.keySet == exact.keySet)
+      exact.foreach { case (key, n) =>
+        val (mUsed, e) = est(key)
+        assert(math.abs(e - n) <= math.max(2L, (0.20 * n).toLong),
+          s"window $key: est $e vs exact $n")
+        assert(mUsed <= math.min(256L, n))
+      }
     } finally q.stop()
   }
 
@@ -210,44 +195,6 @@ class StreamingSpec extends GraftSuite {
           assert(cands.contains(t), s"window $w lost heavy hitter $t")
         }
       }
-    } finally q.stop()
-  }
-
-  test("streaming dedup drops repeated (user, type, value) rows across micro-batches") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val sample = eventsTyped.take(100)
-    val stream = MemoryStream[Ev]
-    val q = StreamOps.dedup(stream.toDF()).writeStream
-      .format("memory").queryName("dedup_out").outputMode("append").start()
-    try {
-      stream.addData(sample); q.processAllAvailable()
-      stream.addData(sample); q.processAllAvailable() // exact replay
-      val n = spark.table("dedup_out").count()
-      val expected = sample.map(e => (e.user_id, e.event_type, e.value)).distinct.length
-      assert(n == expected, s"got $n, expected $expected")
-    } finally q.stop()
-  }
-
-  test("as-of enrichment matches the batch as-of join when fed in event order") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val all = eventsTyped
-    val stream = MemoryStream[Ev]
-    val q = StreamOps.asOfEnrich(stream.toDS()).writeStream
-      .format("memory").queryName("asof_out").outputMode("append").start()
-    try {
-      all.grouped(math.max(1, all.length / 4 + 1))
-        .foreach { c => stream.addData(c); q.processAllAvailable() }
-      val streamed = spark.table("asof_out")
-        .select(col("event_id"), round(col("prior_view_value"), 2).as("pv"))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val batch = WindowPack.queries("q23_asof_join")(spark, sf)
-        .select(col("event_id"), col("prior_view_value"))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(streamed.keySet == batch.keySet)
-      val diffs = batch.collect { case (id, v) if streamed(id) != v => (id, v, streamed(id)) }
-      assert(diffs.isEmpty, s"${diffs.size} mismatches, first: ${diffs.take(3)}")
     } finally q.stop()
   }
 
@@ -305,35 +252,7 @@ class StreamingSpec extends GraftSuite {
     } finally q.stop()
   }
 
-  test("funnel sessions: stream equals batch and reconciles with q91's cohorts") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val all = eventsTyped
-    val stream = MemoryStream[Ev]
-    val q = StreamOps.funnelSessions(stream.toDF())
-      .writeStream.format("memory").queryName("funnel_parity")
-      .outputMode("complete").start()
-    try {
-      all.grouped(math.max(1, all.length / 3 + 1))
-        .foreach { c => stream.addData(c.reverse); q.processAllAvailable() }
-      val streamed = spark.table("funnel_parity")
-        .orderBy(col("user_id"), col("sess_start")).collect()
-      val batch = StreamOps.funnelSessions(Tables.events(spark, sf))
-        .orderBy(col("user_id"), col("sess_start")).collect()
-      assert(streamed.sameElements(batch), "stream/batch funnel drift")
-      // cross-implementation reconciliation: session_window + array folds
-      // must agree with q91's lag-gap + chained-window form in aggregate
-      val q91 = graft.operators.WindowPack.queries("q91_funnel")(spark, sf)
-        .collect()
-      def tot(i: Int) = q91.map(_.getLong(i)).sum
-      assert(batch.length.toLong === tot(1))
-      assert(batch.count(_.getBoolean(3)).toLong === tot(2))
-      assert(batch.count(_.getBoolean(4)).toLong === tot(3))
-      assert(batch.count(_.getBoolean(5)).toLong === tot(4))
-    } finally q.stop()
-  }
-
-  test("as-of with event-time TTL: same output as the untimed op, state evicted by watermark (W6/W7)") {
+  test("as-of with event-time TTL: same output as the batch as-of join, state evicted by watermark (W6/W7)") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val all = eventsTyped
@@ -349,8 +268,8 @@ class StreamingSpec extends GraftSuite {
         new java.sql.Timestamp(all.last.ts.getTime + 365L * 86400 * 1000), 1L, "signup", 0.0)
       stream.addData(sentinel); q.processAllAvailable()
       stream.addData(sentinel.copy(event_id = 999999998L)); q.processAllAvailable()
-      // output parity with the untimed operator (staleness rule already
-      // ignores anything the TTL would have evicted)
+      // output parity with the batch as-of join (the staleness rule
+      // already ignores anything the TTL would have evicted)
       val ttl = spark.table("asof_ttl_out").collect()
         .map(r => r.getLong(0) -> r.getDouble(3)).toMap
       val batch = WindowPack.queries("q23_asof_join")(spark, sf)
@@ -405,17 +324,26 @@ class StreamingSpec extends GraftSuite {
   }
 
   test("count-bounded clustering fires deterministically at the count trigger") {
+    // the clustering window with a window that never ends: only the early
+    // fire at maxCount emits. Points carry strictly increasing times from
+    // 1 s (t = 0 equals the initial watermark and would drop as late), so
+    // the operator's (ts, point) order is the input order
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val pts: Seq[Seq[Double]] = (0 until 250).map { i =>
       Seq((i % 10).toDouble, (i % 7).toDouble)
     }
-    val stream = MemoryStream[Seq[Double]]
-    val q = StreamOps.countBoundedCluster(stream.toDS(), k = 3, maxCount = 100)
+    val in = pts.zipWithIndex.map { case (p, i) =>
+      graft.streaming.ClusterIn(new java.sql.Timestamp((i + 1) * 1000L), p, "")
+    }
+    val stream = MemoryStream[graft.streaming.ClusterIn]
+    val q = StreamOps.clusterWindows(
+        stream.toDS().withWatermark("ts", "0 seconds"), k = 3, decay = 0.2,
+        windowSizeMs = 3650L * 24 * 3600 * 1000, minCount = 0, maxCount = 100)
       .writeStream.format("memory").queryName("cluster_out").outputMode("append").start()
     try {
-      stream.addData(pts.take(150)); q.processAllAvailable()   // fires v1, buffers 50
-      stream.addData(pts.drop(150)); q.processAllAvailable()   // fires v2, buffers 50
+      stream.addData(in.take(150)); q.processAllAvailable()   // fires v1, buffers 50
+      stream.addData(in.drop(150)); q.processAllAvailable()   // fires v2, buffers 50
       val rows = spark.table("cluster_out").orderBy("version").collect()
       assert(rows.length == 2)
       assert(rows.map(_.getInt(0)).toSeq == Seq(1, 2))
