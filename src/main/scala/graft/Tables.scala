@@ -11,10 +11,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * deployment would use (columnar scan + predicate pushdown + column pruning).
   */
 object Tables {
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // events.parquet carries TIMESTAMP(NANOS) which Spark 4 rejects by
-    // default; read nanos as Long and normalize in events() below.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // default; read nanos as Long and normalize in events() below. Set
+    // once per session: a conf write on every load is a wasted call.
+    if (spark.conf.get(NanosAsLong, "false") != "true")
+      spark.conf.set(NanosAsLong, "true")
     spark.read.parquet(s"$dir/$name.parquet")
   }
 

@@ -86,15 +86,6 @@ object WindowPack {
         max(col("t_purchase")).as("tp"))
   }
 
-  /** A3 windowed collect-set transform (see slidingStats note). */
-  def windowedCollectSet(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "4 hours").as("w"), col("user_id"))
-      .agg(array_join(sort_array(collect_set(col("event_type"))), ",").as("types"),
-        count(lit(1)).as("n"))
-      .select(unix_timestamp(col("w.start")).as("wstart"), col("user_id"),
-        col("types"), col("n"))
-
   val queries: Map[String, Q] = Map(
     // W3 tumbling window aggregation (reference A2 family:
     // UnusualActivityDetectionJob.scala:274-293 keyed sliding count — the

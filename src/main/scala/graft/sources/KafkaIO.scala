@@ -1,10 +1,9 @@
 package graft.sources
 
 import graft.streaming.Ev
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.sql.types._
 
 /** Kafka wiring for the engine's event streams — the reference's S2
   * consumer / K1 producer surface (reference:
@@ -14,12 +13,13 @@ import org.apache.spark.sql.types._
   * The connector (`spark-sql-kafka-0-10`) binds at RUNTIME via
   * `format("kafka")`, so this module compiles and ships without it; a
   * deployment adds the connector jar (`--packages
-  * org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>`). Two wire
-  * codecs: JSON (debuggable default) and BINARY AVRO, wire-compatible with
-  * the reference's topics (raw datum bytes, epoch-millis dates —
-  * utils/avro/AvroUtils.scala:36-55, Avro4sSerializationSchema.scala:30-47).
-  * Everything below the `load()` — the codec columns and the key layout —
-  * is plain Catalyst and is unit-tested without a broker (KafkaCodecSpec).
+  * org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>`). The one
+  * wire format is the reference's: a raw binary Avro datum per record,
+  * dates as epoch millis (utils/avro/AvroUtils.scala:36-55,
+  * Avro4sSerializationSchema.scala:30-47), encoded and decoded by the
+  * avro core library that ships with Spark. Everything below the `load()`
+  * — the codec columns and the key layout — is plain Catalyst and is
+  * unit-tested without a broker (KafkaCodecSpec).
   *
   * Reference semantics preserved:
   *  - earliest start + `read_committed` isolation
@@ -32,59 +32,10 @@ import org.apache.spark.sql.types._
   */
 object KafkaIO {
 
-  /** Wire schema of one event (epoch-millis timestamp — the reference
-    * serializes dates as epoch millis, utils/avro/AvroUtils.scala:36-55). */
-  val wireSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType, nullable = false),
-    StructField("ts_ms", LongType, nullable = false),
-    StructField("user_id", LongType, nullable = false),
-    StructField("event_type", StringType, nullable = false),
-    StructField("value", DoubleType, nullable = false)))
-
-  /** Event → JSON wire value (the `to_json` half of the codec). */
-  def encode(ev: Column*): Column = to_json(struct(ev: _*))
-
-  /** Columns encoding an [[Ev]]-shaped frame onto the wire: key = user_id
-    * (per-user partition ordering), value = JSON of the wire schema. */
-  def wireColumns(df: DataFrame): DataFrame =
-    df.select(
-      col("user_id").cast("string").as("key"),
-      encode(
-        col("event_id"),
-        unix_millis(col("ts")).as("ts_ms"),
-        col("user_id"), col("event_type"), col("value")).as("value"))
-
-  /** Wire value → typed [[Ev]] columns (the `from_json` half). Malformed
-    * rows surface as null-field structs under `from_json`'s PERMISSIVE
-    * mode and are dropped by the required-field filter — the reference
-    * routes deserialization failures to a side output
-    * (streams/package.scala:287-298); callers wanting that behavior split
-    * on the same predicate before this projection. */
-  def decoded(raw: DataFrame): DataFrame =
-    raw.select(from_json(col("value").cast("string"), wireSchema).as("p"))
-      .filter(wireSchema.fieldNames
-        .map(f => col(s"p.$f").isNotNull).reduce(_ && _))
-      .select(col("p.event_id").as("event_id"),
-        timestamp_millis(col("p.ts_ms")).as("ts"),
-        col("p.user_id").as("user_id"),
-        col("p.event_type").as("event_type"),
-        col("p.value").as("value"))
-
-  def decodedTyped(raw: DataFrame): Dataset[Ev] = {
-    val s = raw.sparkSession
-    import s.implicits._
-    decoded(raw).as[Ev]
-  }
-
   // ──────────────────────────── Avro wire codec ───────────────────────────
-  // The reference serializes all Kafka traffic as BINARY Avro with dates as
-  // epoch millis (utils/avro/AvroUtils.scala:36-55 registers DateTime <->
-  // timestamp-millis; Avro4sSerializationSchema.scala:30-47 writes the raw
-  // binary datum, no container header). Two interchangeable codec engines,
-  // selected at RUNTIME by classpath ([[avroModuleFns]]): the spark-avro
-  // module's codegen'd `to_avro`/`from_avro` when present, else a UDF
-  // kernel over the avro core library (always on Spark's classpath) — the
-  // wire bytes are identical, so producers and consumers can mix engines.
+  // AvroUtils registers DateTime <-> timestamp-millis; Avro4s writes the
+  // raw binary datum with no container header. The codec below is a UDF
+  // kernel over the avro core library, always on Spark's classpath.
 
   /** Avro schema of one wire event — `ts_ms` carries the reference's
     * timestamp-millis logical type (epoch millis on the wire). */
@@ -119,8 +70,7 @@ object KafkaIO {
       bos.toByteArray
     }
 
-    /** null on malformed bytes — the dead-letter split point, like the
-      * JSON codec's PERMISSIVE null-field rows. */
+    /** null on malformed bytes — the dead-letter split point. */
     def decode(bytes: Array[Byte]): WireEv =
       try {
         val dec = org.apache.avro.io.DecoderFactory.get().binaryDecoder(bytes, null)
@@ -142,80 +92,28 @@ object KafkaIO {
       AvroKernel.encode(e, t, u, ty, v))
   private lazy val avroDecodeUdf = udf((b: Array[Byte]) => AvroKernel.decode(b))
 
-  /** [[avroSchemaJson]] with `ts_ms` as a PLAIN long (no logical type) —
-    * the schema handed to the spark-avro module functions. Logical types
-    * are annotations over the same binary encoding, so the wire bytes are
-    * identical; the plain form keeps the decoded struct's `ts_ms` a long
-    * (from_avro maps timestamp-millis to TimestampType, which would fork
-    * the downstream projection). */
-  val avroWireSchemaPlain: String =
-    """{"type":"record","name":"Ev","namespace":"graft","fields":[
-      |{"name":"event_id","type":"long"},
-      |{"name":"ts_ms","type":"long"},
-      |{"name":"user_id","type":"long"},
-      |{"name":"event_type","type":"string"},
-      |{"name":"value","type":"double"}]}""".stripMargin
-
-  /** Codegen'd `to_avro`/`from_avro` column builders when the OPTIONAL
-    * spark-avro module is on the classpath; None → the avro-core UDF
-    * kernel above is the codec (this sandbox ships only avro-core). Both
-    * paths produce the same raw binary datum — the schema is forced
-    * explicitly in both directions so catalyst nullability can't widen a
-    * field to a union (which WOULD change the wire bytes), and decode
-    * runs PERMISSIVE so malformed datums surface as null rows (the same
-    * dead-letter split as the kernel path). KafkaCodecSpec pins byte
-    * compatibility against avro-core either way. */
-  private[sources] lazy val avroModuleFns: Option[(Column => Column, Column => Column)] =
-    try {
-      val m = Class.forName("org.apache.spark.sql.avro.functions$")
-      val inst = m.getField("MODULE$").get(null)
-      val to = m.getMethod("to_avro", classOf[Column], classOf[String])
-      val opts = new java.util.HashMap[String, String]()
-      opts.put("mode", "PERMISSIVE")
-      val from = m.getMethod("from_avro", classOf[Column], classOf[String],
-        classOf[java.util.Map[String, String]])
-      // Spark ships the functions STUB in spark-sql-api even without the
-      // module (usage then fails analysis with
-      // AVRO_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE) — the IMPLEMENTATION
-      // expression class only exists in the spark-avro jar, so probe that
-      Class.forName("org.apache.spark.sql.avro.CatalystDataToAvro")
-      Some((
-        (c: Column) => to.invoke(inst, c, avroWireSchemaPlain).asInstanceOf[Column],
-        (c: Column) => from.invoke(inst, c, avroWireSchemaPlain, opts).asInstanceOf[Column]))
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** True when the spark-avro module's codegen'd codec is in use. */
-  def avroModulePresent: Boolean = avroModuleFns.isDefined
-
-  /** [[wireColumns]] with the Avro binary codec: key = user_id, value =
-    * raw Avro datum bytes (wire-compatible with the reference's topics). */
-  def avroWireColumns(df: DataFrame): DataFrame = {
-    val enc = avroModuleFns match {
-      case Some((toAvro, _)) => (cs: Seq[Column]) => toAvro(struct(cs: _*))
-      case None              => (cs: Seq[Column]) => avroEncodeUdf(cs: _*)
-    }
+  /** Columns encoding an [[Ev]]-shaped frame onto the wire: key = user_id
+    * (per-user partition ordering), value = raw Avro datum bytes
+    * (wire-compatible with the reference's topics). */
+  def avroWireColumns(df: DataFrame): DataFrame =
     df.select(
       col("user_id").cast("string").as("key"),
-      enc(Seq(
+      avroEncodeUdf(
         col("event_id"), unix_millis(col("ts")).as("ts_ms"),
-        col("user_id"), col("event_type"), col("value"))).as("value"))
-  }
+        col("user_id"), col("event_type"), col("value")).as("value"))
 
-  /** [[decoded]] for Avro wire values: malformed datums decode to null
-    * and drop here — the side-output split point. */
-  def avroDecoded(raw: DataFrame): DataFrame = {
-    val dec = avroModuleFns match {
-      case Some((_, fromAvro)) => fromAvro
-      case None                => (c: Column) => avroDecodeUdf(c)
-    }
-    raw.select(dec(col("value")).as("p"))
-      .filter(col("p").isNotNull && col("p.event_type").isNotNull)
+  /** Wire value → typed [[Ev]] columns. Malformed datums decode to null
+    * and drop here — the reference routes deserialization failures to a
+    * side output (streams/package.scala:287-298); callers wanting that
+    * behavior split on the same predicate before this projection. */
+  def avroDecoded(raw: DataFrame): DataFrame =
+    raw.select(avroDecodeUdf(col("value")).as("p"))
+      .filter(col("p").isNotNull)
       .select(col("p.event_id").as("event_id"),
         timestamp_millis(col("p.ts_ms")).as("ts"),
         col("p.user_id").as("user_id"),
         col("p.event_type").as("event_type"),
         col("p.value").as("value"))
-  }
 
   def avroDecodedTyped(raw: DataFrame): Dataset[Ev] = {
     val s = raw.sparkSession
@@ -223,27 +121,23 @@ object KafkaIO {
     avroDecoded(raw).as[Ev]
   }
 
-  /** S2: streaming consumer — earliest offsets, read-committed isolation;
-    * `codec` = "json" | "avro" (the reference's wire format). */
-  def readEvents(spark: SparkSession, servers: String, topic: String,
-                 codec: String = "json"): DataFrame = {
-    val raw = spark.readStream.format("kafka")
+  /** S2: streaming consumer — earliest offsets, read-committed isolation,
+    * Avro wire values. */
+  def readEvents(spark: SparkSession, servers: String, topic: String): DataFrame =
+    avroDecoded(spark.readStream.format("kafka")
       .option("kafka.bootstrap.servers", servers)
       .option("subscribe", topic)
       .option("startingOffsets", "earliest")
       .option("kafka.isolation.level", "read_committed")
-      .load()
-    if (codec == "avro") avroDecoded(raw) else decoded(raw)
-  }
+      .load())
 
   /** K1: streaming producer — keyed for per-entity partition ordering;
     * exactly-once end-to-end = checkpoint + the idempotent keyed upsert
     * downstream (W10/W11), the same contract the reference reaches with
     * transactional writes + deterministic doc ids. */
   def writeEvents(events: DataFrame, servers: String, topic: String,
-                  checkpoint: String,
-                  codec: String = "json"): DataStreamWriter[org.apache.spark.sql.Row] =
-    (if (codec == "avro") avroWireColumns(events) else wireColumns(events))
+                  checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
+    avroWireColumns(events)
       .writeStream
       .format("kafka")
       .option("kafka.bootstrap.servers", servers)

@@ -37,7 +37,7 @@ import scala.jdk.CollectionConverters._
   *
   * Scale design: the driver holds the event-time bounds and the file
   * length (read once from the parquet footer/filesystem) — never the
-  * events. Each micro-batch plans `splits` partitions as byte ranges of
+  * events. Each micro-batch plans 8 partitions as byte ranges of
   * the file and the EXECUTOR readers scan their row groups (assigned by
   * range-midpoint, the standard Hadoop split rule — each row group
   * decodes exactly once) with the ts-range predicate pushed into the
@@ -47,8 +47,7 @@ import scala.jdk.CollectionConverters._
   * ts-sorted (PrepJob-style) so each batch's range prunes to a few row
   * groups instead of re-scanning the file.
   *
-  * Options: `path` (an sf dir with events.parquet), `speedup` (double),
-  * `splits` (readers per micro-batch, default 8).
+  * Options: `path` (an sf dir with events.parquet), `speedup` (double).
   */
 class ReplaySource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-replay"
@@ -57,8 +56,7 @@ class ReplaySource extends TableProvider with DataSourceRegister {
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table =
     new ReplayTable(properties.get("path"),
-      Option(properties.get("speedup")).map(_.toDouble).getOrElse(10000.0),
-      Option(properties.get("splits")).map(_.toInt).getOrElse(8))
+      Option(properties.get("speedup")).map(_.toDouble).getOrElse(10000.0))
 }
 
 object ReplaySource {
@@ -276,7 +274,7 @@ private final class EvReadSupport
     }
 }
 
-final class ReplayTable(path: String, speedup: Double, splits: Int)
+final class ReplayTable(path: String, speedup: Double)
   extends Table with SupportsRead {
   override def name(): String = s"graft-replay($path, x$speedup)"
   override def schema(): StructType = ReplaySource.schema
@@ -287,7 +285,7 @@ final class ReplayTable(path: String, speedup: Double, splits: Int)
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = ReplaySource.schema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new ReplayMicroBatchStream(path, speedup, splits)
+          new ReplayMicroBatchStream(path, speedup)
       }
     }
 }
@@ -297,8 +295,9 @@ final case class ReplayOffset(frontierMicros: Long) extends Offset {
   override def json(): String = frontierMicros.toString
 }
 
-final class ReplayMicroBatchStream(path: String, speedup: Double, splits: Int)
+final class ReplayMicroBatchStream(path: String, speedup: Double)
   extends MicroBatchStream {
+  private val splits = 8 // readers per micro-batch
   private lazy val bounds: (Long, Long, Long) = ReplaySource.tsBounds(path)
   // highest checkpointed frontier seen BEFORE the scaled clock starts —
   // on a restart the engine replays the offset log through

@@ -1,6 +1,9 @@
 package graft.streaming
 
 import graft.functions.KMeans
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.LoggerContext
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -390,17 +393,28 @@ object StreamOps {
     * agg-after-fMGWS chain argued safe by construction) don't hit an
     * opaque AnalysisException or hand-roll the conf save/restore. The
     * flag only gates ANALYSIS: it is restored immediately after `start`
-    * returns and does not affect the running query. */
+    * returns and does not affect the running query. With the rule off,
+    * the checker still logs the skipped error and the whole plan as one
+    * WARN of over a hundred lines; its logger is held at ERROR for the
+    * same scope. */
   def startUnchecked[T](spark: SparkSession)(start: => T): T = {
     val key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
     val prev = spark.conf.getOption(key)
+    val own = LoggerContext.getContext(false).getConfiguration.getLoggerConfig(Checker)
+    val prevLevel: Level = if (own.getName == Checker) own.getLevel else null // null: inherit
     spark.conf.set(key, "false")
+    Configurator.setLevel(Checker, Level.ERROR)
     try start
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+    finally {
+      Configurator.setLevel(Checker, prevLevel)
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None    => spark.conf.unset(key)
+      }
     }
   }
+
+  private val Checker = "org.apache.spark.sql.catalyst.analysis.UnsupportedOperationChecker"
 
   /** Shared watermark-gated session machinery behind [[sessionFunnel]]
     * and [[sessionTransitions]]: per-user event buffer, 30-min-gap split

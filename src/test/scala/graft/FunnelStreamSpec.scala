@@ -212,6 +212,16 @@ class FunnelStreamSpec extends GraftSuite {
     } finally q.stop()
   }
 
+  test("startUnchecked quiets the operation checker's logger only while it runs") {
+    val logger = org.apache.logging.log4j.LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.UnsupportedOperationChecker")
+    val before = logger.getLevel
+    assert(before != org.apache.logging.log4j.Level.ERROR)
+    assert(StreamOps.startUnchecked(spark)(logger.getLevel)
+      == org.apache.logging.log4j.Level.ERROR)
+    assert(logger.getLevel == before)
+  }
+
   test("session transitions survive a checkpoint restart with a pending buffered session") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_trans_rec").toString

@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 
 /** The Kafka wiring's codec and key layout, tested without a broker: the
   * `format("kafka")` load/sink binds at runtime, but every column
-  * expression between it and the engine — JSON encode, decode, key
+  * expression between it and the engine — Avro encode, decode, key
   * choice, millisecond timestamps — is plain Catalyst and must round-trip
-  * exactly (the reference's serialization determinism contract,
-  * utils/avro/Avro4sSerializationSchema.scala:30-47, in JSON form). */
+  * exactly, in the reference's wire format: the raw binary Avro datum
+  * (utils/avro/Avro4sSerializationSchema.scala:30-47). */
 class KafkaCodecSpec extends GraftSuite {
   import spark.implicits._
 
@@ -18,26 +18,10 @@ class KafkaCodecSpec extends GraftSuite {
     Ev(2L, java.sql.Timestamp.valueOf("2024-01-02 23:59:59.999"), 8L, "purchase", -0.25),
     Ev(3L, java.sql.Timestamp.valueOf("2024-06-15 00:00:00"), 7L, "click", 0.0))
 
-  test("wire round-trip: encode -> decode is the identity on events") {
-    val wire = KafkaIO.wireColumns(evs.toDF())
-    assert(wire.columns.toSeq == Seq("key", "value"))
-    val back = KafkaIO.decodedTyped(wire.select(col("key"), col("value")))
-      .collect().sortBy(_.event_id)
-    assert(back.toSeq == evs.sortBy(_.event_id),
-      s"round-trip drift: ${back.toSeq} vs $evs")
-  }
-
   test("key is the partitioning entity id (per-user ordering on the wire)") {
-    val keys = KafkaIO.wireColumns(evs.toDF())
+    val keys = KafkaIO.avroWireColumns(evs.toDF())
       .select(col("key")).collect().map(_.getString(0)).sorted.toSeq
     assert(keys == Seq("7", "7", "8"))
-  }
-
-  test("corrupt wire rows are dropped, not crashed on (side-output split point)") {
-    val raw = Seq("""{"event_id":9,"ts_ms":1700000000000,"user_id":1,"event_type":"view","value":2.0}""",
-      "not json at all", """{"half": true}""").toDF("value")
-    val out = KafkaIO.decoded(raw).collect()
-    assert(out.length == 1 && out.head.getLong(0) == 9L)
   }
 
   test("avro wire round-trip: encode -> decode is the identity, millis preserved") {
@@ -56,7 +40,7 @@ class KafkaCodecSpec extends GraftSuite {
     // ts as epoch millis (reference AvroUtils date codec) and NO container
     // header (Avro4sSerializationSchema writes the raw datum)
     val bytes = KafkaIO.avroWireColumns(evs.take(1).toDF())
-      .select(org.apache.spark.sql.functions.col("value"))
+      .select(col("value"))
       .head().getAs[Array[Byte]](0)
     val schema = new org.apache.avro.Schema.Parser().parse(KafkaIO.avroSchemaJson)
     assert(schema.getField("ts_ms").schema().getLogicalType.getName
@@ -78,29 +62,10 @@ class KafkaCodecSpec extends GraftSuite {
 
   test("corrupt avro datums are dropped, not crashed on (side-output split point)") {
     val good = KafkaIO.avroWireColumns(evs.take(1).toDF())
-      .select(org.apache.spark.sql.functions.col("value"))
+      .select(col("value"))
       .head().getAs[Array[Byte]](0)
     val raw = Seq(good, Array[Byte](-1, -1, -1), Array.emptyByteArray).toDF("value")
     val out = KafkaIO.avroDecoded(raw).collect()
     assert(out.length == 1 && out.head.getLong(0) == 1L)
-  }
-
-  test("codec engine selection matches the classpath (module adopted iff present)") {
-    // the codegen'd to_avro/from_avro engine binds only when the OPTIONAL
-    // spark-avro module is on the classpath; either way the byte-compat
-    // and round-trip tests above pin the same wire format, so the engines
-    // are interchangeable per side
-    // the functions STUB ships in spark-sql-api even without the module
-    // (and fails analysis when used); the implementation expression class
-    // exists only in the spark-avro jar — the selection probes that
-    val moduleUsable =
-      try { Class.forName("org.apache.spark.sql.avro.CatalystDataToAvro"); true }
-      catch { case _: ClassNotFoundException => false }
-    assert(KafkaIO.avroModulePresent == moduleUsable)
-    // the plain wire schema differs from the logical one ONLY by the
-    // timestamp annotation (same binary encoding)
-    assert(KafkaIO.avroWireSchemaPlain ==
-      KafkaIO.avroSchemaJson.replace(
-        """{"type":"long","logicalType":"timestamp-millis"}""", "\"long\""))
   }
 }

@@ -78,7 +78,7 @@ class ReplaySourceSpec extends GraftSuite {
   test("large-input smoke: 10x corpus replays completely through executor-side reads") {
     val big = "/root/testdata/sf0.01"
     val q = spark.readStream.format(fmt)
-      .option("path", big).option("speedup", "1e15").option("splits", "8").load()
+      .option("path", big).option("speedup", "1e15").load()
       .writeStream.format("memory").queryName("replay_big").start()
     try {
       q.processAllAvailable()
@@ -156,13 +156,13 @@ class ReplaySourceSpec extends GraftSuite {
     val mid = (loTs + hiTs) / 2
     // speedup 1.0: without resume-seeding the frontier would sit at ~minTs
     // for (mid - loTs) real microseconds — i.e. effectively forever here
-    val stream = new graft.sources.ReplayMicroBatchStream(sf, 1.0, 4)
+    val stream = new graft.sources.ReplayMicroBatchStream(sf, 1.0)
     stream.deserializeOffset(mid.toString)
     val off = stream.latestOffset().asInstanceOf[graft.sources.ReplayOffset]
     assert(off.frontierMicros >= mid,
       s"resumed frontier ${off.frontierMicros} regressed below checkpointed $mid")
     // and a fresh stream (no restored offset) still starts at the beginning
-    val fresh = new graft.sources.ReplayMicroBatchStream(sf, 1.0, 4)
+    val fresh = new graft.sources.ReplayMicroBatchStream(sf, 1.0)
     val f0 = fresh.latestOffset().asInstanceOf[graft.sources.ReplayOffset]
     assert(f0.frontierMicros < mid, "fresh stream should start near minTs")
   }
