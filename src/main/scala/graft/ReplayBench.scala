@@ -60,8 +60,7 @@ object ReplayBench {
       println(f"""{"measure":"$name","events":$totalEvents,"wall_s":$secs%.3f,"events_per_s":${(totalEvents / secs).toLong},"peak_batch_rows_per_s":${peakRate.toLong}}""")
     }
 
-    def replay() = spark.readStream.format("graft-replay")
-      .option("path", sfDir).option("speedup", "1e15").load()
+    def replay() = graft.sources.ReplaySource.stream(spark, sfDir, "1e15")
 
     // warmup: pays one-time session/codegen/stream-machinery init so the
     // timed drains measure ingest, as the reference's warm-Kafka read does

@@ -1,7 +1,7 @@
 package graft
 
 import graft.jobs.{ActivityDetectionJob, PostStatisticsJob, RecommendationsJob}
-import graft.sources.KeyedUpsertSink
+import graft.sources.{KeyedUpsertSink, ReplaySource}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -70,8 +70,7 @@ object SoakBench {
     val o2 = tmp("soak2_out"); val c2 = tmp("soak2_ckpt")
     val o3 = tmp("soak3_out"); val c3 = tmp("soak3_ckpt")
 
-    def replayed = spark.readStream.format(classOf[graft.sources.ReplaySource].getName)
-      .option("path", sfDir).option("speedup", speedup.toString).load()
+    def replayed = ReplaySource.stream(spark, sfDir, speedup.toString)
 
     val t0 = System.nanoTime()
     val q1 = PostStatisticsJob.runResolved(spark, replayed, o1, c1)

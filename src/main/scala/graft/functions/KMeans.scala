@@ -1,5 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{expr, least, lit, when}
+
 /** Seeded Lloyd's K-means with k-repair and decayed model merging — the
   * reference's streaming-clustering core re-derived from its documented
   * semantics (reference: jobs/clustering/KMeansClustering.scala:25-182 —
@@ -21,7 +24,9 @@ object KMeans {
   final case class Cluster(index: Int, centroid: Vector[Double], weight: Double)
 
   final case class Model(clusters: Vector[Cluster]) {
-    /** Nearest-centroid classification (reference: ClusterModel.classify:26). */
+    /** Nearest-centroid classification (reference: ClusterModel.classify:26):
+      * the smallest [[sqDist]], ties going to the first cluster (`minBy`).
+      * [[nearest]] states the same rule over Spark columns. */
     def classify(p: Vector[Double]): Cluster =
       clusters.minBy(c => sqDist(c.centroid, p))
 
@@ -49,6 +54,31 @@ object KMeans {
     while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
     s
   }
+
+  /** [[Model.classify]]'s rule over one column per centroid, for every
+    * distributed classifier (Task 3, q62, the IVF cells, distributed
+    * Lloyd's): the index of the smallest of `ds`, ties going to the lowest
+    * index, and that smallest value. Callers project each `ds` column
+    * under its own name first, so every distance is computed once per row. */
+  def nearest(ds: Seq[Column]): (Column, Column) = {
+    val m = least(ds: _*)
+    val idx = ds.indices.tail.foldLeft(when(ds.head === m, lit(0))) {
+      (acc, i) => acc.when(ds(i) === m, lit(i))
+    }
+    (idx, m)
+  }
+
+  /** [[sqDist]] from literal centroid `c` to the point whose coordinates
+    * are the columns `xs`, summed in dimension order: bit-equal to the
+    * driver-side value and to the DuckDB oracles' difference form. */
+  def sqDist(xs: Seq[Column], c: Vector[Double]): Column =
+    xs.zip(c).map { case (x, ci) => val d = x - ci; d * d }.reduce(_ + _)
+
+  /** `−2·v·c + |c|²` for literal centroid `c` over array column `v`: the
+    * squared distance less |v|², which is constant per row, so its argmin
+    * is the nearest centroid's at one [[VecDot]] per centroid. */
+  def score(v: Column, c: Vector[Double]): Column =
+    VecDot.of(v, expr(c.mkString("array(", "D,", "D)"))) * -2.0 + lit(c.map(x => x * x).sum)
 
   /** Lloyd's iteration to fixpoint from given initial centroids. */
   def cluster(points: Seq[Vector[Double]], initial: Vector[Vector[Double]],

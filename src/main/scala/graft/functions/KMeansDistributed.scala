@@ -10,14 +10,12 @@ import org.apache.spark.sql.functions._
   *
   * Each iteration is one narrow distributed pass + one k-row aggregate:
   *
-  *   - ASSIGN: a codegen'd argmin over centroid LITERALS
-  *     (`-2·v·c + |c|²` — the |v|² term is constant per row, so the
-  *     argmin equals the true squared-distance argmin; the q43/q62 plan
-  *     shape) — no shuffle of the points, no state;
+  *   - ASSIGN: [[KMeans.nearest]] over [[KMeans.score]]s of centroid
+  *     LITERALS (the q43 plan shape) — no shuffle of the points, no state;
   *   - RECOMPUTE: `groupBy(cluster)` with per-dimension sums + counts —
   *     a k×(dim+1) result collected to the driver (a few KB at any input
-  *     size). Empty clusters keep their centroid, ties go to the first
-  *     matching index — the same semantics as [[KMeans.cluster]].
+  *     size). Empty clusters keep their centroid — the same semantics as
+  *     [[KMeans.cluster]].
   *
   * Driver memory holds exactly k centroids; the input is cached across
   * iterations (it is scanned once per iteration). Below the cap the
@@ -30,12 +28,6 @@ import org.apache.spark.sql.functions._
   * in KMeansDistributedSpec).
   */
 object KMeansDistributed {
-
-  /** `-2·v·c + |c|²` for literal centroid `c` over array column `v`. */
-  private def score(c: Vector[Double], v: Column): Column = {
-    val arr = expr(c.mkString("array(", "D,", "D)"))
-    VecDot.of(v, arr) * -2.0 + lit(c.map(x => x * x).sum)
-  }
 
   /** One Lloyd's run over `df`'s array column `v` from `initial`
     * centroids. `df` is cached for the duration of the loop. */
@@ -51,12 +43,8 @@ object KMeansDistributed {
       var it = 0
       var converged = false
       while (!converged && it < maxIterations) {
-        val scores = centroids.zipWithIndex.map { case (c, i) => score(c, col("v")).as(s"s$i") }
-        val minS = least((0 until k).map(i => col(s"s$i")): _*)
-        // first matching index wins — KMeans.cluster's minBy tie-break
-        val cl = (1 until k).foldLeft(when(col("s0") === minS, lit(0))) {
-          (acc, i) => acc.when(col(s"s$i") === minS, lit(i))
-        }
+        val scores = centroids.zipWithIndex.map { case (c, i) => KMeans.score(col("v"), c).as(s"s$i") }
+        val (cl, _) = KMeans.nearest((0 until k).map(i => col(s"s$i")))
         val sums = (0 until dim).map(i => sum(element_at(col("v"), i + 1)).as(s"x$i"))
         val rows = pts.select(col("v") +: scores: _*)
           .withColumn("c", cl)

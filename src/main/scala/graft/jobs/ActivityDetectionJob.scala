@@ -1,7 +1,7 @@
 package graft.jobs
 
 import graft.functions.KMeans
-import graft.sources.KeyedUpsertSink
+import graft.sources.{KeyedUpsertSink, ReplaySource}
 import graft.streaming.{ClusterIn, ModelRow, StreamOps}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,7 +27,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     latest model to the classifier through a [[ModelRef]].
   *  2. CLASSIFY query: the same featurized stream, classified per
   *     micro-batch against the LATEST published model via broadcast
-  *     centroid literals in a codegen'd argmin (J14, the q62 plan shape)
+  *     centroid literals in [[KMeans.nearest]] (J14, the q62 plan shape)
   *     → upsert keyed by event_id, versioned by the classifying model.
   *
   * Events arriving before the first model fires are dropped — the
@@ -72,22 +72,17 @@ object ActivityDetectionJob {
         hour(col("ts")).cast("double")).as("f"))
 
   /** Distributed nearest-centroid classification against model `m` —
-    * centroid literals in a codegen'd argmin, the q62/J14 plan shape. */
+    * [[KMeans.nearest]] over centroid literals, the q62/J14 plan shape. */
   def classifyDf(feats: DataFrame, m: KMeans.Model, version: Int): DataFrame = {
     val dists = m.clusters.map { c =>
-      c.centroid.zipWithIndex.map { case (x, i) =>
-        val d = element_at(col("f"), i + 1) - x; d * d
-      }.reduce(_ + _).as(s"d${c.index}")
+      val f = c.centroid.indices.map(i => element_at(col("f"), i + 1))
+      KMeans.sqDist(f, c.centroid).as(s"d${c.index}")
     }
-    val k = m.clusters.length
-    val minCol = least((0 until k).map(i => col(s"d$i")): _*)
-    val cluster = (1 until k).foldLeft(when(col("d0") === minCol, lit(0))) {
-      (acc, i) => acc.when(col(s"d$i") === minCol, lit(i))
-    }
+    val (cluster, minD) = KMeans.nearest(m.clusters.indices.map(i => col(s"d$i")))
     feats.select(col("event_id") +: col("user_id") +: col("f") +: dists: _*)
       .withColumn("cluster", cluster)
       .select(col("event_id"), col("user_id"), col("cluster"),
-        sqrt(minCol).as("dist"), lit(version).as("model_version"))
+        sqrt(minD).as("dist"), lit(version).as("model_version"))
   }
 
   private def toModel(m: ModelRow): KMeans.Model =
@@ -211,10 +206,9 @@ object ActivityDetectionJob {
     val speedup = args.lift(3).getOrElse("10000")
     val runSec = args.lift(4).map(_.toLong).getOrElse(Long.MaxValue)
     val spark = graft.Sessions.local("activity-detection")
-    val events = Jobs.replayEvents(spark, sfDir, speedup)
+    val events = ReplaySource.stream(spark, sfDir, speedup)
     val ctrl = args.lift(5).map(d => spark.readStream.text(d))
     val (modelQ, classifyQ) = run(spark, events, ctrl, outDir, ckpt)
-    Jobs.await(modelQ, runSec)
-    modelQ.stop(); classifyQ.stop(); spark.stop()
+    try Jobs.await(spark, runSec) finally { modelQ.stop(); classifyQ.stop(); spark.stop() }
   }
 }

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.sources.KeyedUpsertSink
+import graft.sources.{KeyedUpsertSink, ReplaySource}
 import graft.streaming.StreamOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -120,22 +120,19 @@ object PostStatisticsJob {
     val speedup = args.lift(3).getOrElse("10000")
     val runSec = args.lift(4).map(_.toLong).getOrElse(Long.MaxValue)
     val spark = graft.Sessions.local("post-statistics")
-    val q = runResolved(spark, Jobs.replayEvents(spark, sfDir, speedup), outDir, ckpt)
-    Jobs.await(q, runSec)
-    q.stop(); spark.stop()
+    val q = runResolved(spark, ReplaySource.stream(spark, sfDir, speedup), outDir, ckpt)
+    try Jobs.await(spark, runSec) finally { q.stop(); spark.stop() }
   }
 }
 
 /** Shared wiring for the three streaming job mains. */
 private[jobs] object Jobs {
-  /** Wait `runSec` seconds, or forever when the product would overflow
-    * the millisecond clamp (runSeconds omitted = run-forever default). */
-  def await(q: StreamingQuery, runSec: Long): Unit =
-    if (runSec >= Long.MaxValue / 1000L) q.awaitTermination()
-    else q.awaitTermination(runSec * 1000L)
-
-  /** The scaled replay of `<sfDir>/events.parquet` (S1/S3). */
-  def replayEvents(spark: SparkSession, sfDir: String, speedup: String): DataFrame =
-    spark.readStream.format(classOf[graft.sources.ReplaySource].getName)
-      .option("path", sfDir).option("speedup", speedup).load()
+  /** Wait `runSec` seconds on every query of `spark`'s session, or
+    * forever when the product would overflow the millisecond clamp
+    * (runSeconds omitted = run-forever default). The first query to end
+    * ends the wait, and one that failed rethrows its error here
+    * (`awaitAnyTermination`), so a failed job exits non-zero. */
+  def await(spark: SparkSession, runSec: Long): Unit =
+    if (runSec >= Long.MaxValue / 1000L) spark.streams.awaitAnyTermination()
+    else spark.streams.awaitAnyTermination(runSec * 1000L)
 }

@@ -1,7 +1,7 @@
 package graft.jobs
 
 import graft.operators.RecommendationPack
-import graft.sources.KeyedUpsertSink
+import graft.sources.{KeyedUpsertSink, ReplaySource}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -100,9 +100,7 @@ object RecommendationsJob {
     val speedup = args.lift(3).getOrElse("10000")
     val runSec = args.lift(4).map(_.toLong).getOrElse(Long.MaxValue)
     val spark = graft.Sessions.local("recommendations")
-    val events = Jobs.replayEvents(spark, sfDir, speedup)
-    val q = run(spark, events, sfDir, outDir, ckpt)
-    Jobs.await(q, runSec)
-    q.stop(); spark.stop()
+    val q = run(spark, ReplaySource.stream(spark, sfDir, speedup), sfDir, outDir, ckpt)
+    try Jobs.await(spark, runSec) finally { q.stop(); spark.stop() }
   }
 }

@@ -86,22 +86,13 @@ object ActivityPack {
     // nearest-centroid classification (argmin over K codegen'd distances).
     "q62_classified_docs" -> ((s, d) => {
       val m = model(s, d)
-      val dists = m.clusters.map { c =>
-        val Vector(x, y, z) = c.centroid
-        ((col("f0") - x) * (col("f0") - x) + (col("f1") - y) * (col("f1") - y)
-          + (col("f2") - z) * (col("f2") - z)).as(s"d${c.index}")
-      }
-      val withD = featureDf(s, d).select(col("doc_id") +: col("f0") +: col("f1") +: col("f2") +: dists: _*)
-      val minCol = least((0 until K).map(i => col(s"d$i")): _*)
-      // first matching index wins — same tie-break as Scala's minBy /
-      // the reference's ClusterModel.classify
-      val cluster = (1 until K).foldLeft(when(col("d0") === minCol, lit(0))) {
-        (acc, i) => acc.when(col(s"d$i") === minCol, lit(i))
-      }
-      withD
+      val f = Seq(col("f0"), col("f1"), col("f2"))
+      val dists = m.clusters.map(c => KMeans.sqDist(f, c.centroid).as(s"d${c.index}"))
+      val (cluster, minD) = KMeans.nearest((0 until K).map(i => col(s"d$i")))
+      featureDf(s, d).select(col("doc_id") +: (f ++ dists): _*)
         .withColumn("cluster", cluster)
         .select(col("doc_id"), col("cluster"),
-          round(sqrt(minCol), 4).as("dist"))
+          round(sqrt(minD), 4).as("dist"))
         .orderBy(col("doc_id"))
     })
   )

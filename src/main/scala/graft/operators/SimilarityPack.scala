@@ -267,7 +267,7 @@ object SimilarityPack {
     // queries probe their NPROBE nearest cells
     val qscores = assigned.filter(annPanel(col("vec_id")))
       .select(col("vec_id").as("qid") +: col("v").as("qv") +: col("norm").as("qn")
-        +: cents.zipWithIndex.map { case (c, i) => cellScore(c).as(s"cs$i") }: _*)
+        +: cents.zipWithIndex.map { case (c, i) => KMeans.score(col("v"), c).as(s"cs$i") }: _*)
     val probes = qscores.select(col("qid"), col("qv"), col("qn"),
       posexplode(array((0 until IVF_CELLS).map(i => col(s"cs$i")): _*)).as(Seq("cell", "score")))
     val wp = Window.partitionBy(col("qid")).orderBy(col("score"), col("cell"))
@@ -721,19 +721,16 @@ object SimilarityPack {
       .orderBy(col("i"), col("j"))
   }
 
-  /** Every vector assigned to its nearest trained cell by a codegen'd
-    * argmin over centroid literals — one narrow pass, shared by the IVF
-    * search (q43) and semantic dedup (q78). */
+  /** Every vector assigned to its nearest trained cell by
+    * [[KMeans.nearest]] over [[KMeans.score]]s of centroid literals — one
+    * narrow pass, shared by the IVF search (q43) and semantic dedup (q78). */
   private def assignedCells(s: SparkSession, d: String): DataFrame =
     Artifacts.get(s, d, "ann|cells") { buildAssignedCells(s, d).localCheckpoint() }
 
   private def buildAssignedCells(s: SparkSession, d: String): DataFrame = {
     val cents = ivfCentroids(s, d)
-    val scores = cents.zipWithIndex.map { case (c, i) => cellScore(c).as(s"cs$i") }
-    val minScore = least((0 until IVF_CELLS).map(i => col(s"cs$i")): _*)
-    val cellOf = (1 until IVF_CELLS).foldLeft(when(col("cs0") === minScore, lit(0))) {
-      (acc, i) => acc.when(col(s"cs$i") === minScore, lit(i))
-    }
+    val scores = cents.zipWithIndex.map { case (c, i) => KMeans.score(col("v"), c).as(s"cs$i") }
+    val (cellOf, _) = KMeans.nearest((0 until IVF_CELLS).map(i => col(s"cs$i")))
     vecs(s, d)
       .select(col("vec_id") +: col("v") +: col("norm") +: scores: _*)
       .withColumn("cell", cellOf)
@@ -759,14 +756,6 @@ object SimilarityPack {
         .clusters.map(_.centroid)
     }
 
-  /** −2·v·c + |c|² for literal centroid `c` — argmin of this over cells ==
-    * argmin of true squared distance (|v|² is constant per row). */
-  private def cellScore(c: Vector[Double]): Column = {
-    val arr = c.mkString("array(", "D,", "D)")
-    val dot = graft.functions.VecDot.of(col("v"), expr(arr))
-    dot * -2.0 + lit(c.map(x => x * x).sum)
-  }
-
   /** Data-dependent oracle for q43: the trained IVF centroids are embedded
     * as DOUBLE literals (Double.toString round-trips exactly through the
     * DuckDB parser), making the whole probe/assign/rank pipeline
@@ -774,12 +763,12 @@ object SimilarityPack {
     * (SparkEntry.oracleContext). */
   def dynamicOracle(s: SparkSession, d: String): Map[String, String] = {
     val cents = ivfCentroids(s, d)
-    def cellScoreSql(c: Vector[Double]): String = {
+    def scoreSql(c: Vector[Double]): String = {
       val arr = c.map(x => s"($x)::DOUBLE").mkString("[", ",", "]")
       s"(list_dot_product(v, $arr) * -2.0 + (${c.map(x => x * x).sum})::DOUBLE)"
     }
     val csCols = cents.zipWithIndex
-      .map { case (c, i) => s"${cellScoreSql(c)} AS cs$i" }.mkString(",\n    ")
+      .map { case (c, i) => s"${scoreSql(c)} AS cs$i" }.mkString(",\n    ")
     val minCs = (0 until IVF_CELLS).map(i => s"cs$i").mkString("least(", ", ", ")")
     val cellCase = (0 until IVF_CELLS - 1)
       .map(i => s"WHEN cs$i = m THEN $i").mkString("CASE ", " ", s" ELSE ${IVF_CELLS - 1} END")

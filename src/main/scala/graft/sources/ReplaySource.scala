@@ -13,6 +13,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -60,6 +61,12 @@ class ReplaySource extends TableProvider with DataSourceRegister {
 }
 
 object ReplaySource {
+  /** The scaled replay of `<sfDir>/events.parquet` at `speedup`× (S1/S3):
+    * the one way the job mains and the benches open this source. */
+  def stream(spark: SparkSession, sfDir: String, speedup: String): DataFrame =
+    spark.readStream.format(classOf[ReplaySource].getName)
+      .option("path", sfDir).option("speedup", speedup).load()
+
   val schema: StructType = StructType(Seq(
     StructField("event_id", LongType), StructField("ts", TimestampType),
     StructField("user_id", LongType), StructField("event_type", StringType),

@@ -16,6 +16,15 @@ final case class CurDoc(doc_id: Long, lang: String, source: String,
 final case class DupTagged(doc_id: Long, lang: String, source: String,
                            text: String, n_chars: Long, is_dup: Boolean)
 
+/** A keeper bound for shard layout, in its source's fold order. */
+final case class ShardDoc(source: String, doc_id: Long, n_bytes: Long)
+
+/** Per-source writer state: the currently-open file and its fill. */
+final case class ShardState(fileIdx: Long, fill: Long)
+
+/** One shard assignment: which output file this doc lands in. */
+final case class ShardAssign(source: String, doc_id: Long, n_bytes: Long, file_idx: Long)
+
 /** Streaming per-document curation VERDICT — the live form of q119, and
   * the front half of the CurateJob pipeline running on ingest instead of
   * on a materialized corpus: every arriving doc gets its C4-precedence
@@ -38,9 +47,9 @@ final case class DupTagged(doc_id: Long, lang: String, source: String,
   *    micro-batching cannot change their values).
   *  - precedence: [[CurationPack.c4Reason]] — the one shared expression.
   *  - shard layout: the batch's keepers continue each source's greedy
-  *    (fileIdx, fill) recurrence ([[ShardFillStream.foldGroup]] — q127's
-  *    core) from a DURABLE per-source state store, so the live file
-  *    sequence equals the batch q163 layout under ordered ingest.
+  *    (fileIdx, fill) recurrence ([[foldGroup]] — q127's core) from a
+  *    DURABLE per-source state store, so the live file sequence equals
+  *    the batch q163 layout under ordered ingest.
   *
   * Exactly-once: a replayed micro-batch re-enters fMGWS with the same
   * pre-batch state (checkpoint-consistent) and re-emits identical tags;
@@ -133,6 +142,26 @@ object CurateStream {
           Seq("doc_id"), "version")
       }.start()
 
+  /** The greedy shard-fill transition (q127's recurrence): fold one
+    * source's docs, in the order given, through its open-file state —
+    * each doc fills the open file unless it would overflow `cap`, in
+    * which case the next file opens with it. */
+  private[graft] def foldGroup(st0: Option[ShardState], rows: Seq[ShardDoc],
+                               cap: Long): (Option[ShardState], Seq[ShardAssign]) = {
+    var st = st0
+    val out = scala.collection.mutable.ArrayBuffer.empty[ShardAssign]
+    rows.foreach { r =>
+      st = st match {
+        case None => Some(ShardState(0L, r.n_bytes))
+        case Some(ShardState(fi, fill)) =>
+          if (fill + r.n_bytes > cap) Some(ShardState(fi + 1, r.n_bytes))
+          else Some(ShardState(fi, fill + r.n_bytes))
+      }
+      out += ShardAssign(r.source, r.doc_id, r.n_bytes, st.get.fileIdx)
+    }
+    (st, out.toSeq)
+  }
+
   /** Continue each source's greedy (fileIdx, fill) recurrence over one
     * batch's keepers from the durable per-source `stateStore`, returning
     * the batch's (source, doc_id, nb, file_idx) assignments and writing
@@ -157,9 +186,8 @@ object CurateStream {
           case (_, _, _, Some(fi), Some(fill)) => Some(ShardState(fi, fill))
           case _ => None
         }
-        val t0 = new java.sql.Timestamp(0L) // constant ts: order is doc_id
-        val (stOut, assigns) = ShardFillStream.foldGroup(seed,
-          rows.map { case (_, id, nb, _, _) => ShardDoc(src, t0, id, nb) }, cap)
+        val (stOut, assigns) = foldGroup(seed,
+          rows.map { case (_, id, nb, _, _) => ShardDoc(src, id, nb) }, cap)
         assigns.map(a => (a.source, a.doc_id, a.n_bytes, a.file_idx)) ++
           stOut.map(s => (src, -1L, s.fill, s.fileIdx)) // -1 marks the state row
       }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{CurationPack, PipelinePack}
-import graft.streaming.{CurDoc, CurateStream}
+import graft.streaming.{CurDoc, CurateStream, ShardDoc, ShardState}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -148,5 +148,14 @@ class CurateStreamSpec extends GraftSuite {
     val (st2, out2) = CurateStream.foldFp(Some(3L), Seq(doc(1L)))
     assert(st2.contains(3L))
     assert(out2.head.is_dup, "first-seen verdicts never retract")
+  }
+
+  test("an oversized doc occupies its own file and the sequence moves on") {
+    def doc(id: Long, nb: Long) = ShardDoc("s", id, nb)
+    val rows = Seq(doc(1, 900), doc(2, 5000), doc(3, 900), doc(4, 1000))
+    val (st, out) = CurateStream.foldGroup(None, rows, 2000L)
+    assert(out.map(a => a.doc_id -> a.file_idx) ==
+      Seq(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 2L))
+    assert(st.contains(ShardState(2L, 1900L)))
   }
 }

@@ -41,6 +41,35 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  test("nearest-centroid kernel: index equals classify's, ties to the first, in both arithmetic forms") {
+    import org.apache.spark.sql.functions.col
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    // small integer coordinates: every difference, product and sum below is
+    // exact, so both forms see the exact ties that classify's minBy breaks
+    val coord = Gen.choose(-3, 3).map(_.toDouble)
+    val pt = Gen.listOfN(3, coord).map(_.toVector)
+    // k centroids drawn from k-1 distinct points: at least one exact duplicate
+    val centsGen = for {
+      k <- Gen.choose(2, 6)
+      pool <- Gen.listOfN(k - 1, pt)
+      cents <- Gen.listOfN(k, Gen.oneOf(pool))
+    } yield cents.toVector
+    // no shrinking: shrunk doubles leave the exact integer grid
+    check(Prop.forAllNoShrink(centsGen, Gen.listOfN(30, pt)) { (cents, ps) =>
+      val pts = ps.toVector ++ cents
+      val xs = Seq(col("x0"), col("x1"), col("x2"))
+      val ds = cents.zipWithIndex.map { case (c, i) => KMeans.sqDist(xs, c).as(s"d$i") }
+      val ss = cents.zipWithIndex.map { case (c, i) => KMeans.score(col("v"), c).as(s"s$i") }
+      val (byDist, _) = KMeans.nearest(cents.indices.map(i => col(s"d$i")))
+      val (byScore, _) = KMeans.nearest(cents.indices.map(i => col(s"s$i")))
+      val got = pts.map(p => (p(0), p(1), p(2), p)).toDF("x0", "x1", "x2", "v")
+        .select(ds ++ ss: _*).select(byDist, byScore).as[(Int, Int)].collect().toSeq
+      val m = KMeans.Model(cents.zipWithIndex.map { case (c, i) => KMeans.Cluster(i, c, 1.0) })
+      got == pts.map { p => val i = m.classify(p).index; (i, i) }
+    }, n = 50)
+  }
+
   test("decayed update: weight = oldWeight*decay + newWeight; centroid inside the blend segment") {
     check(Prop.forAll(Gen.chooseNum(0.0, 1.0), Gen.chooseNum(0.1, 100.0),
       Gen.chooseNum(0.1, 100.0), pointGen, pointGen) { (decay, ow, nw, oc, nc) =>
@@ -152,14 +181,13 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("shard foldGroup: never overflows the cap (unless a single doc does); files fill greedily") {
-    import graft.streaming.{ShardDoc, ShardFillStream}
-    val t0 = new java.sql.Timestamp(0L)
+    import graft.streaming.{CurateStream, ShardDoc}
     val sizesGen = Gen.nonEmptyListOf(Gen.choose(1L, 40L))
     check(Prop.forAll(sizesGen, Gen.choose(20L, 100L)) { (sizes, cap) =>
       val docs = sizes.zipWithIndex.map { case (nb, i) =>
-        ShardDoc("s", t0, i.toLong, math.min(nb, cap)) // no doc above cap
+        ShardDoc("s", i.toLong, math.min(nb, cap)) // no doc above cap
       }
-      val (_, assigns) = ShardFillStream.foldGroup(None, docs, cap)
+      val (_, assigns) = CurateStream.foldGroup(None, docs, cap)
       val byFile = assigns.groupBy(_.file_idx)
       val fileIds = byFile.keys.toSeq.sorted
       // files are consecutive from 0; every file within cap; and greedy:
@@ -174,18 +202,17 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("shard foldGroup: state carry equals one concatenated fold (re-batching invariance)") {
-    import graft.streaming.{ShardDoc, ShardFillStream, ShardState}
-    val t0 = new java.sql.Timestamp(0L)
+    import graft.streaming.{CurateStream, ShardDoc, ShardState}
     val sizesGen = Gen.nonEmptyListOf(Gen.choose(1L, 40L))
     check(Prop.forAll(sizesGen, Gen.choose(2, 6), Gen.choose(40L, 100L)) {
       (sizes, nB, cap) =>
         val docs = sizes.zipWithIndex.map { case (nb, i) =>
-          ShardDoc("s", t0, i.toLong, nb)
+          ShardDoc("s", i.toLong, nb)
         }
-        val (stA, oneShot) = ShardFillStream.foldGroup(None, docs, cap)
+        val (stA, oneShot) = CurateStream.foldGroup(None, docs, cap)
         var st: Option[ShardState] = None
         val chunked = docs.grouped(math.max(1, docs.length / nB)).flatMap { c =>
-          val (st2, out) = ShardFillStream.foldGroup(st, c, cap)
+          val (st2, out) = CurateStream.foldGroup(st, c, cap)
           st = st2
           out
         }.toSeq
