@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{MinHashSig, VecDot}
+import graft.functions.{MinHashSig, TextLsh, VecDot}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -20,14 +20,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** `minhash_sig(array<string>)` → 64-slot seed-42 signature — the
-    * TextPack configuration; positional (n, seed) overloads would go
-    * through the same builder. */
+  /** `minhash_sig(array<string>)` → the signature of the text MinHasher
+    * ([[graft.functions.TextLsh.minHash]], 64 slots, seed 42). */
   val minhashSigFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     new FunctionIdentifier("minhash_sig"),
     new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
     (children: Seq[Expression]) => children match {
-      case Seq(arr) => MinHashSig(arr, numHashes = 64, seed = 42L)
+      case Seq(arr) => MinHashSig(arr, TextLsh.minHash.numHashes, TextLsh.minHash.seed)
       case other => throw new IllegalArgumentException(
         s"minhash_sig expects 1 argument, got ${other.length}")
     })

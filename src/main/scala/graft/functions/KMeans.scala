@@ -59,8 +59,10 @@ object KMeans {
     * distributed classifier (Task 3, q62, the IVF cells, distributed
     * Lloyd's): the index of the smallest of `ds`, ties going to the lowest
     * index, and that smallest value. Callers project each `ds` column
-    * under its own name first, so every distance is computed once per row. */
-  def nearest(ds: Seq[Column]): (Column, Column) = {
+    * under its own name first, so every distance is computed once per row.
+    * A one-centroid model has no `least` to take (Spark's needs two
+    * arguments): index 0 and its one distance. */
+  def nearest(ds: Seq[Column]): (Column, Column) = if (ds.size == 1) (lit(0), ds.head) else {
     val m = least(ds: _*)
     val idx = ds.indices.tail.foldLeft(when(ds.head === m, lit(0))) {
       (acc, i) => acc.when(ds(i) === m, lit(i))

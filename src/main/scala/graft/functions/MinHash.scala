@@ -3,9 +3,11 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** MinHash signatures + LSH banding over (key, item) row sets — the shared
-  * module behind document dedup (TextPack) and user-similarity
-  * recommendations (RecommendationPack), mirroring the reference's single
+/** THE MinHasher: signatures, LSH band keys and estimated similarity —
+  * the one module behind document dedup (TextPack q32/q112 and the
+  * streaming index [[graft.streaming.DedupStream]]) and user-similarity
+  * recommendations (RecommendationPack q51–q54, the static store, the
+  * online Task 2 recompute and PrepJob), mirroring the reference's single
   * MinHasher used by both batch prep and streaming
   * (reference: jobs/recommendations/RecommendationUtils.scala:14-49;
   * LSH banding: jobs/preparation/LoadStaticDataJob.scala:92-105;
@@ -16,47 +18,65 @@ import org.apache.spark.sql.functions._
   * "same MinHasher config everywhere" invariant (README.md:112) as a
   * cross-engine determinism contract.
   *
-  * Scale: the signature is a groupBy with `numHashes` min-aggregates —
-  * map-side partial aggregation collapses each partition to one row per
-  * key before the shuffle; signatures are `numHashes` longs per key.
+  * Production build: [[sig]], the one-pass [[MinHashSig]] kernel over a
+  * set column (one row per set, map-only), then [[bandsOf]] and [[estSim]]
+  * over the resulting `array<bigint>` signature column.
+  *
+  * Reference build: [[signature]] + [[sigArray]], the relational explode
+  * → `numHashes` min-aggregates → shuffle. No production path uses it; it
+  * is the independent construction MinHashSigSpec, DedupStreamSpec and
+  * JobsSpec compare the kernel against. The DuckDB fragments are the
+  * same relational construction on the oracle side.
   */
 final case class MinHash(numHashes: Int, bands: Int, seed: Long) {
   require(numHashes % bands == 0, "bands must divide numHashes")
   val rowsPerBand: Int = numHashes / bands
   val fam: IndexedSeq[(Long, Long)] = Hashes.family(numHashes, seed)
 
+  /** Signature (`array<bigint>`, `numHashes` slot minima) of an
+    * `array<string>` set column; NULL for an empty set, which has no
+    * minima (callers drop it, as the relational build emits no row). */
+  def sig(set: Column): Column = MinHashSig.of(set, numHashes, seed)
+
+  /** The `bands` LSH band keys of a signature column, as one
+    * `array<string>`: band j's key is its `rowsPerBand` slots joined by
+    * '-' (reference F7, LoadStaticDataJob.scala:92-105). */
+  def bandKeys(sig: Column): Column =
+    array((0 until bands).map(j =>
+      concat_ws("-", (0 until rowsPerBand).map(r => sig.getItem(j * rowsPerBand + r)): _*)): _*)
+
+  /** `(band, bandkey)` generator over a signature column — one row per
+    * band, for `select(key, mh.bandsOf(col("sig")))`. */
+  def bandsOf(sig: Column): Column = posexplode(bandKeys(sig)).as(Seq("band", "bandkey"))
+
+  /** Estimated Jaccard similarity between two signature columns = the
+    * fraction of equal slots (reference: RecommendationUtils.scala:27). */
+  def estSim(a: Column, b: Column): Column =
+    size(filter(zip_with(a, b, (x, y) => x === y), e => e)) / lit(numHashes.toDouble)
+
+  /** [[estSim]] over two signatures held on the driver or in operator
+    * state (the streaming index compares inside its state function). */
+  def estSim(a: Seq[Long], b: Seq[Long]): Double =
+    a.iterator.zip(b.iterator).count { case (x, y) => x == y }.toDouble / numHashes
+
+  // ---- reference build (relational; no production caller) ----
+
   /** Signature table (key, m0..m{n-1}) from (key, item) rows. */
   def signature(items: DataFrame, key: String, item: String): DataFrame =
-    signature(items, Seq(key), item)
-
-  /** Multi-column-key variant — the online recommendation chain keys
-    * signatures by (user, window) so one micro-batch can carry several
-    * fired windows per user (reference: RecommendationsJob.scala:342-356,
-    * where the signature is recomputed per window fire). */
-  def signature(items: DataFrame, keys: Seq[String], item: String): DataFrame =
     items
-      .select(keys.map(col) :+ Hashes.base32(col(item)).as("__x"): _*)
-      .groupBy(keys.map(col): _*)
+      .select(col(key), Hashes.base32(col(item)).as("__x"))
+      .groupBy(col(key))
       .agg(min(Hashes.minhashSlot(col("__x"), fam(0))).as("m0"),
         (1 until numHashes).map(i =>
           min(Hashes.minhashSlot(col("__x"), fam(i))).as(s"m$i")): _*)
 
-  /** Band-key columns (one string per band) over a signature row. */
-  def bandKeys: IndexedSeq[Column] =
-    (0 until bands).map(j =>
-      concat_ws("-", (0 until rowsPerBand).map(r => col(s"m${j * rowsPerBand + r}")): _*))
-
-  /** Estimated Jaccard similarity between two signature-array columns =
-    * fraction of equal slots (reference: RecommendationUtils.scala:27). */
-  def estSim(sigA: String, sigB: String): Column =
-    expr(s"size(filter(zip_with($sigA, $sigB, (x, y) -> x = y), b -> b)) / CAST($numHashes AS DOUBLE)")
-
-  /** The signature columns as one array column. */
+  /** The [[signature]] table's slot columns as one array column. */
   def sigArray: Column = array((0 until numHashes).map(i => col(s"m$i")): _*)
 
   // ---- DuckDB oracle fragments (same constants) ----
 
-  /** SELECT computing the signature from an items CTE `(key, item)`. */
+  /** SELECT computing the signature (key, m0..m{n-1}) from an items CTE
+    * `(key, item)`. */
   def sqlSignature(itemsCte: String, key: String, item: String): String = {
     val mins = fam.zipWithIndex
       .map { case (ab, i) => s"min(${Hashes.sqlMinhashSlot("x", ab)}) AS m$i" }
@@ -75,7 +95,7 @@ final case class MinHash(numHashes: Int, bands: Int, seed: Long) {
       s"SELECT $key, $j AS band, $k AS bandkey FROM $sigCte"
     }.mkString("\n  UNION ALL\n  ")
 
-  /** 64-term equal-slot fraction between aliased signature rows. */
+  /** Equal-slot fraction between aliased signature rows. */
   def sqlEstSim(aliasA: String, aliasB: String): String =
     (0 until numHashes)
       .map(i => s"CASE WHEN $aliasA.m$i = $aliasB.m$i THEN 1 ELSE 0 END")

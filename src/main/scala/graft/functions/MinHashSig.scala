@@ -12,15 +12,15 @@ import org.apache.spark.sql.types._
   * `array<string>` of set elements → `array<long>` of `numHashes` slot
   * minima — in ONE pass over the input array, inside whole-stage codegen.
   *
-  * This is the narrow-plan alternative to the relational signature build
-  * (explode elements → 64 min-aggregates → shuffle, [[MinHash.signature]]):
-  * when the element set already sits in a single row (a document's
-  * shingles), the signature is a per-row scalar computation and the
-  * explode/aggregate machinery — and its SHUFFLE of |corpus| × |set|
-  * exploded rows — disappears from the plan entirely. At 100 TB that is
-  * the difference between a map-only signature pass and shuffling the
-  * exploded token stream. (For element sets arriving as rows, use
-  * [[MinHash.signature]].)
+  * This is THE production signature build: every signature in the
+  * engine comes from it through [[MinHash.sig]] (the text dedup, the
+  * streaming dedup index and Task 2). When element sets arrive as rows,
+  * callers `collect_set` them into one row first (one aggregate with
+  * map-side partial sets) instead of the relational explode → 64
+  * min-aggregates → shuffle build ([[MinHash.signature]]), which stays
+  * only as the independent reference the specs compare this kernel
+  * against. At 100 TB that is the difference between a map-only
+  * signature pass and shuffling the exploded token stream.
   *
   * Hash parity contract (same as [[Hashes]], single source of truth via
   * [[Hashes.family]]): x = first 4 md5 bytes unsigned (== Spark

@@ -4,18 +4,18 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** THE text near-dup configuration — one source of truth for the shingle
-  * width, signature size, band layout, and hash seed shared by the batch
-  * dedup stack (TextPack q31/q32/q105 and their DuckDB oracles) and the
-  * streaming index ([[graft.streaming.DedupStream]]). A document's
-  * signature is bit-identical wherever it is computed BECAUSE both sides
-  * read these constants and this shingle builder; DedupStreamSpec pins the
-  * parity (streaming bandRows signature == TextPack's batch signature). */
+  * width and the [[MinHash]] (signature size, band layout, hash seed)
+  * shared by the batch dedup stack (TextPack q31/q32/q105/q112 and their
+  * DuckDB oracles) and the streaming index ([[graft.streaming.DedupStream]]).
+  * A document's signature and band keys are bit-identical wherever they
+  * are computed BECAUSE both sides build them with [[minHash]] over this
+  * shingle builder; DedupStreamSpec pins the parity (streaming bandRows
+  * signature == the relational reference build, bucket key ==
+  * `<band>-` + [[MinHash.bandKeys]]). */
 object TextLsh {
   val ShingleW: Int = 3    // shingle width (words)
-  val NumHashes: Int = 64
-  val Bands: Int = 16      // 16 bands x 4 rows: s-curve threshold ~0.5
-  val Rows: Int = NumHashes / Bands
-  val Seed: Long = 42L
+  // 64 slots, 16 bands x 4 rows: s-curve threshold ~0.5
+  val minHash: MinHash = MinHash(numHashes = 64, bands = 16, seed = 42L)
 
   /** Distinct [[ShingleW]]-token shingles of a PRE-PROJECTED token-array
     * column (empty when too short). `t` must be an attribute, not the

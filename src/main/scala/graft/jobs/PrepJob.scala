@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   * Tables written (all under `<prefix>_`):
   *   user_features  (user_id, features sorted-csv, n_features) — bucketed
   *                  by user_id                                  [A4/U2]
-  *   user_minhash   (user_id, m0..m63)             — bucketed by user_id
-  *                  — the SAME signature module the online pipeline uses:
-  *                  the reference's batch/stream MinHash determinism
-  *                  contract (README.md:112)                    [F6]
+  *   user_minhash   (user_id, sig array<bigint>)   — bucketed by user_id
+  *                  — the 64-slot signature from the SAME MinHasher the
+  *                  online pipeline uses: the reference's batch/stream
+  *                  MinHash determinism contract (README.md:112) [F6]
   *   lsh_buckets    (band, bandkey, user_id)       — bucketed by bandkey
   *                  (the inverted index, one row per membership) [A5/F7]
   *   last_activity  (user_id, last_ts)             — bucketed by user_id
@@ -47,12 +47,10 @@ object PrepJob {
         count(lit(1)).as("n_features")),
       "user_features", "user_id")
 
-    save(RecommendationPack.sig(spark, sfDir), "user_minhash", "user_id")
+    val sig = RecommendationPack.sig(spark, sfDir)
+    save(sig, "user_minhash", "user_id")
 
-    save(RecommendationPack.sig(spark, sfDir)
-      .select(col("user_id"),
-        posexplode(array(RecommendationPack.bandKeyCols: _*))
-          .as(Seq("band", "bandkey")))
+    save(sig.select(col("user_id"), RecommendationPack.mh.bandsOf(col("sig")))
       .select(col("band"), col("bandkey"), col("user_id")),
       "lsh_buckets", "bandkey")
 

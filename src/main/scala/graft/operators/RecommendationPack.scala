@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.MinHash
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -29,7 +29,7 @@ import org.apache.spark.sql.expressions.Window
 object RecommendationPack {
   type Q = (SparkSession, String) => DataFrame
 
-  private val mh     = MinHash(numHashes = 64, bands = 16, seed = 42L)
+  private[graft] val mh = MinHash(numHashes = 64, bands = 16, seed = 42L)
   private val MIN_SIM = 0.2
   private val TOP_N   = 5
   private val KNOWN_DIST = 2
@@ -50,14 +50,18 @@ object RecommendationPack {
   // it's a config knob, not a semantic difference.
   private val ACTIVE_SEC = 21600L
 
-  /** (user_id, feature) rows WITH duplicates: tag features "T<k mod 20>"
-    * (F4 prefixing, RecommendationUtils.toFeature:95) + event-type
-    * features. Set-semantics consumers either distinct (features()) or
-    * fold into a set-valued agg directly (q51's collect_set). */
+  /** An event's tag feature "T<k mod 20>" (F4 prefixing,
+    * RecommendationUtils.toFeature:95). */
+  private def tagFeature: Column =
+    concat(lit("T"), regexp_extract(col("props"), "(\\d+)", 1).cast("long") % 20)
+
+  /** (user_id, feature) rows WITH duplicates: [[tagFeature]]s + event-type
+    * features "E<type>". Set-semantics consumers either distinct
+    * (features()) or fold into a set-valued agg directly ([[sig]]'s
+    * collect_set). */
   private[graft] def rawFeatures(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-    val tags = ev.select(col("user_id"),
-      concat(lit("T"), regexp_extract(col("props"), "(\\d+)", 1).cast("long") % 20).as("feature"))
+    val tags = ev.select(col("user_id"), tagFeature.as("feature"))
     val types = ev.select(col("user_id"),
       concat(lit("E"), col("event_type")).as("feature"))
     tags.unionByName(types)
@@ -67,33 +71,29 @@ object RecommendationPack {
   private[graft] def features(s: SparkSession, d: String): DataFrame =
     rawFeatures(s, d).distinct()
 
-  /** The STATIC half of a user's features — the tag interests alone,
-    * playing the role of the reference's stored person features
-    * (interests ∪ work ∪ study, LoadStaticDataJob.scala:63-88). The
-    * event-type features are the ACTIVITY half, recomputed per window fire
-    * by the online chain (reference: RecommendationsJob.scala:276-301). */
-  private[graft] def staticFeatures(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d).select(col("user_id"),
-      concat(lit("T"), regexp_extract(col("props"), "(\\d+)", 1).cast("long") % 20).as("feature"))
-      .distinct()
-
   /** Precomputed static store for the online Task-2 chain — the Spark
     * stand-in for the reference's ElasticSearch indexes built by
     * LoadStaticDataJob (per-user static feature sets, LSH buckets over
     * static signatures, and the stored signatures candidates are scored
-    * against, LoadStaticDataJob.scala:92-105). All three frames are cached
-    * and materialized before the stream starts; at 100 TB they are
-    * PrepJob's persisted bucketed tables instead of executor cache. */
+    * against, LoadStaticDataJob.scala:92-105). The static features are the
+    * tag interests alone, playing the role of the reference's stored
+    * person features (interests ∪ work ∪ study, LoadStaticDataJob.scala:63-88);
+    * the event-type features are the ACTIVITY half, recomputed per window
+    * fire by the online chain (reference: RecommendationsJob.scala:276-301).
+    * One aggregate builds the feature sets; signatures and bands are
+    * map-only over it. All three frames are cached and materialized before
+    * the stream starts; at 100 TB they are PrepJob's persisted bucketed
+    * tables instead of executor cache. */
   final case class StaticStore(featureSets: DataFrame, bands: DataFrame, sigs: DataFrame)
 
   private[graft] def staticStore(s: SparkSession, d: String): StaticStore = {
-    val feats = staticFeatures(s, d)
-    val featureSets = feats.groupBy(col("user_id"))
-      .agg(sort_array(collect_list(col("feature"))).as("feats")).cache()
-    val sg = mh.signature(feats, "user_id", "feature")
-    val bands = sg.select(col("user_id"),
-      posexplode(array(mh.bandKeys: _*)).as(Seq("band", "bandkey"))).cache()
-    val sigs = sg.select(col("user_id"), mh.sigArray.as("sig")).cache()
+    val featureSets = Tables.events(s, d)
+      .groupBy(col("user_id"))
+      .agg(sort_array(collect_set(tagFeature)).as("feats"))
+      .cache()
+    val sigs = featureSets.select(col("user_id"), mh.sig(col("feats")).as("sig"))
+      .filter(col("sig").isNotNull).cache()
+    val bands = sigs.select(col("user_id"), mh.bandsOf(col("sig"))).cache()
     featureSets.count(); bands.count(); sigs.count()
     StaticStore(featureSets, bands, sigs)
   }
@@ -118,17 +118,8 @@ object RecommendationPack {
     * user×user product. */
   private[graft] def onlineRecommend(fired: DataFrame, store: StaticStore): DataFrame = {
     val keys = Seq("user_id", "wstart")
-    // single pass over `fired` (no self-union): per fired row, activity
-    // features ("E"+type) ∪ the user's static feature set — array_union
-    // dedups per row, so no distinct shuffle before the signature agg
-    val composite = fired.join(store.featureSets, Seq("user_id"), "left")
-      .select(col("user_id"), col("wstart"),
-        explode(array_union(
-          transform(col("acts"), et => concat(lit("E"), et)),
-          coalesce(col("feats"), array().cast("array<string>")))).as("feature"))
-    val sg = mh.signature(composite, keys, "feature")
-    val bands = sg.select(col("user_id"), col("wstart"),
-      posexplode(array(mh.bandKeys: _*)).as(Seq("band", "bandkey")))
+    val sg = onlineSigs(fired, store)
+    val bands = sg.select(col("user_id"), col("wstart"), mh.bandsOf(col("sig")))
     val cands = bands
       .join(store.bands.select(col("user_id").as("c"), col("band"), col("bandkey")),
         Seq("band", "bandkey"))
@@ -136,10 +127,10 @@ object RecommendationPack {
       .distinct()
       .filter(col("u") =!= col("c") && abs(col("u") - col("c")) > KNOWN_DIST)
     val scored = cands
-      .join(sg.select(col("user_id").as("u"), col("wstart"), mh.sigArray.as("sig_u")),
+      .join(sg.select(col("user_id").as("u"), col("wstart"), col("sig").as("sig_u")),
         Seq("u", "wstart"))
       .join(store.sigs.select(col("user_id").as("c"), col("sig").as("sig_c")), "c")
-      .withColumn("est_sim", round(mh.estSim("sig_u", "sig_c"), 4))
+      .withColumn("est_sim", round(mh.estSim(col("sig_u"), col("sig_c")), 4))
       .filter(col("est_sim") >= MIN_SIM)
     val w = Window.partitionBy(col("u"), col("wstart"))
       .orderBy(col("est_sim").desc, col("c"))
@@ -159,6 +150,18 @@ object RecommendationPack {
       .withColumn("recs", coalesce(col("recs"), array().cast(recsType)))
   }
 
+  /** (user_id, wstart, sig) per fired row: the signature of its activity
+    * features ("E"+type) ∪ the user's static feature set, signed in place —
+    * a map-only pass, no explode and no re-aggregation (array_union dedups
+    * the set). A row with neither has no signature and no row. */
+  private[graft] def onlineSigs(fired: DataFrame, store: StaticStore): DataFrame =
+    fired.join(store.featureSets, Seq("user_id"), "left")
+      .select(col("user_id"), col("wstart"),
+        mh.sig(array_union(
+          transform(col("acts"), et => concat(lit("E"), et)),
+          coalesce(col("feats"), array().cast("array<string>")))).as("sig"))
+      .filter(col("sig").isNotNull)
+
   private val sqlFeatures: String =
     """SELECT DISTINCT user_id, feature FROM (
       |    SELECT user_id,
@@ -168,13 +171,16 @@ object RecommendationPack {
       |    SELECT user_id, 'E' || event_type AS feature FROM events
       |  )""".stripMargin
 
+  /** Per-user signature (user_id, sig) of the full feature set — one
+    * shuffle (collect_set with map-side partial sets; it dedups, so the
+    * feature distinct is not needed) and the map-only kernel. Shared by
+    * q51–q54 and PrepJob's `user_minhash` store. */
   private[graft] def sig(s: SparkSession, d: String): DataFrame =
-    mh.signature(features(s, d), "user_id", "feature")
-
-  /** Band-key columns over a sig() frame — exposed for the feature-store
-    * prep job (PrepJob) so store and online pipeline share one band
-    * construction (the reference's shared-MinHasher invariant). */
-  private[graft] def bandKeyCols: Seq[org.apache.spark.sql.Column] = mh.bandKeys
+    rawFeatures(s, d)
+      .groupBy(col("user_id"))
+      .agg(collect_set(col("feature")).as("feats"))
+      .select(col("user_id"), mh.sig(col("feats")).as("sig"))
+      .filter(col("sig").isNotNull)
 
   val queries: Map[String, Q] = Map(
     // User feature sets (reference: person features A4/U2 — sorted list
@@ -187,31 +193,19 @@ object RecommendationPack {
         .orderBy(col("user_id"))),
 
     // MinHash signatures, canonical comma-joined form (reference F6; stored
-    // Base64 in db/PersonMinHashIndex — canonical string here). Built via
-    // the one-pass [[graft.functions.MinHashSig]] codegen kernel over each
-    // user's collected feature set — one narrow agg + a map-only signature
-    // pass — instead of the 64-min-agg-column relational build (identical
-    // values by the Hashes.family parity contract; ~4× faster, the plan
-    // width was the cost, not the data).
-    "q51_user_minhash" -> ((s, d) => {
-      // rawFeatures, not features(): collect_set dedups, so the upstream
-      // distinct's shuffle is pure waste here — ONE shuffle total (map-side
-      // partial sets), then the map-only signature pass
-      rawFeatures(s, d)
-        .groupBy(col("user_id"))
-        .agg(collect_set(col("feature")).as("feats"))
-        .select(col("user_id"),
-          array_join(graft.functions.MinHashSig.of(col("feats"), mh.numHashes, mh.seed), ",")
-            .as("signature"))
-        .orderBy(col("user_id"))
-    }),
+    // Base64 in db/PersonMinHashIndex — canonical string here), from the
+    // one per-user build [[sig]].
+    "q51_user_minhash" -> ((s, d) =>
+      sig(s, d)
+        .select(col("user_id"), array_join(col("sig"), ",").as("signature"))
+        .orderBy(col("user_id"))),
 
     // LSH bucket inverted index (reference A5: bucket → member list,
     // LoadStaticDataJob.scala:99-105). Only multi-member buckets are
     // emitted (singletons generate no candidates).
     "q52_lsh_buckets" -> ((s, d) =>
       sig(s, d)
-        .select(col("user_id"), posexplode(array(mh.bandKeys: _*)).as(Seq("band", "bandkey")))
+        .select(col("user_id"), mh.bandsOf(col("sig")))
         .groupBy(col("band"), col("bandkey"))
         .agg(array_join(sort_array(collect_list(col("user_id"))), ",").as("users"),
           count(lit(1)).as("n"))
@@ -269,16 +263,15 @@ object RecommendationPack {
     Artifacts.get(s, d, "scored") { buildScored(s, d) }
 
   private def buildScored(s: SparkSession, d: String): DataFrame = {
-    val sg = sig(s, d).cache()
+    val sg = sig(s, d)
     // class id = smallest member user id per distinct signature
-    val userCls = sg.select(col("user_id"), mh.sigArray.as("sig"))
+    val userCls = sg
       .withColumn("cls", min(col("user_id")).over(Window.partitionBy(col("sig"))))
       .select(col("user_id"), col("cls"))
     val repSig = sg.join(
       userCls.filter(col("user_id") === col("cls")).select(col("user_id")), "user_id")
     // band inverted index over class representatives only
-    val clsBands = repSig.select(col("user_id").as("cls"),
-      posexplode(array(mh.bandKeys: _*)).as(Seq("band", "bandkey")))
+    val clsBands = repSig.select(col("user_id").as("cls"), mh.bandsOf(col("sig")))
     // ordered class pairs sharing >= 1 bucket (x = y kept: intra-class
     // user pairs are genuine candidates — identical signatures collide
     // in every band)
@@ -287,9 +280,9 @@ object RecommendationPack {
       .select(col("x.cls").as("ucls"), col("y.cls").as("ccls"))
       .distinct()
     val clsSims = clsPairs
-      .join(repSig.select(col("user_id").as("ucls"), mh.sigArray.as("sig_u")), "ucls")
-      .join(repSig.select(col("user_id").as("ccls"), mh.sigArray.as("sig_c")), "ccls")
-      .withColumn("est_sim", round(mh.estSim("sig_u", "sig_c"), 4))
+      .join(repSig.select(col("user_id").as("ucls"), col("sig").as("sig_u")), "ucls")
+      .join(repSig.select(col("user_id").as("ccls"), col("sig").as("sig_c")), "ccls")
+      .withColumn("est_sim", round(mh.estSim(col("sig_u"), col("sig_c")), 4))
       .filter(col("est_sim") >= MIN_SIM)
       .select(col("ucls"), col("ccls"), col("est_sim"))
     // expand class pairs to user pairs; J6 exclude known. Materialized

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.Hashes
+import graft.functions.{Hashes, TextLsh}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -34,17 +34,11 @@ import org.apache.spark.sql.expressions.Window
 object TextPack {
   type Q = (SparkSession, String) => DataFrame
 
-  // shared config — single source of truth for Spark, oracle SQL, AND the
-  // streaming index lives in graft.functions.TextLsh (the batch/stream
-  // bit-identical-signature contract; parity pinned in DedupStreamSpec)
-  private val W          = graft.functions.TextLsh.ShingleW
-  private val NUM_HASHES = graft.functions.TextLsh.NumHashes
-  private val BANDS      = graft.functions.TextLsh.Bands
-  private val ROWS       = graft.functions.TextLsh.Rows
-  private val SEED       = graft.functions.TextLsh.Seed
+  // the one text MinHasher and shingle width (graft.functions.TextLsh),
+  // shared with the streaming index; parity pinned in DedupStreamSpec
+  private val mh         = TextLsh.minHash
   private val JACC_T     = 0.5
   private val BPE_ROUNDS = 5 // q113: full BPE merge rounds (sequential part)
-  private val fam        = Hashes.family(NUM_HASHES, SEED)
 
   /** q113/q118's shared BPE word state: (w, wc, s) where s is the word's
     * space-joined symbol string padded with spaces, so a literal ' x y '
@@ -161,14 +155,6 @@ object TextPack {
       .select(col("doc_id"), toks.as("t"))
       .select(col("doc_id") +: qualityExprs(col("t")): _*)
 
-  /** Distinct W-token shingles of a pre-projected token-array attribute
-    * ([[graft.functions.TextLsh.shinglesOf]] — see its codegen note). */
-  private def shinglesOf(t: Column): Column =
-    graft.functions.TextLsh.shinglesOf(t)
-
-  /** DuckDB equivalent of [[shinglesOf]] (1-based inclusive slices). */
-  private val sqlShingles: String = graft.functions.TextLsh.sqlShingles
-
   /** The overlap-pair base relation (i, j, shared, ni, nj): doc pairs with
     * ≥1 common shingle, their intersection size, and both set sizes — the
     * one inverted-index self-join EVERY set-similarity score derives from
@@ -214,7 +200,7 @@ object TextPack {
   private[operators] def shingleRows(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"), toks.as("t"))
-      .select(col("doc_id"), explode(shinglesOf(col("t"))).as("shingle"))
+      .select(col("doc_id"), explode(TextLsh.shinglesOf(col("t"))).as("shingle"))
       // cached PRE-PARTITIONED on the posting key (guide §2.4): every
       // consumer joins or groups on `shingle` (pairBase's self-join, q105's
       // batch×corpus posting join, q55's train-distinct + hit join), so the
@@ -273,35 +259,17 @@ object TextPack {
 
   private[operators] val sqlShingleRows: String =
     s"""SELECT doc_id, unnest(s) AS shingle FROM (
-       |    SELECT doc_id, $sqlShingles AS s
+       |    SELECT doc_id, ${TextLsh.sqlShingles} AS s
        |    FROM (SELECT doc_id, str_split(text, ' ') AS t FROM documents))""".stripMargin
 
-  /** MinHash signature table: doc_id, m0..m63 (min of h_i over shingles).
-    *
-    * Built with the native [[graft.functions.MinHashSig]] expression: the
-    * shingle set sits in one row, so the signature is a per-row codegen'd
-    * scalar — a MAP-ONLY pass, no explode and no shuffle (the relational
-    * explode → 64-min-agg build this replaces is [[MinHash.signature]],
-    * still used where elements arrive as rows). Same hash constants, same
-    * output schema, oracle-checked by q32's gate. */
+  /** Per-doc MinHash signature (doc_id, sig) through the one MinHasher:
+    * the shingle set sits in one row, so the signature is a map-only
+    * codegen'd pass — no explode, no shuffle. Oracle-checked by q32. */
   private def sigDf(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"), toks.as("t"))
-      .select(col("doc_id"),
-        graft.functions.MinHashSig.of(shinglesOf(col("t")), NUM_HASHES, SEED).as("sigarr"))
-      .filter(col("sigarr").isNotNull)
-      .select(col("doc_id") +:
-        (0 until NUM_HASHES).map(i => col("sigarr")(i).as(s"m$i")): _*)
-
-  private val sqlSig: String = {
-    val mins = fam.zipWithIndex
-      .map { case (ab, i) => s"min(${Hashes.sqlMinhashSlot("x", ab)}) AS m$i" }
-      .mkString(",\n         ")
-    s"""SELECT doc_id,
-       |         $mins
-       |  FROM (SELECT doc_id, ${Hashes.sqlBase32("shingle")} AS x FROM shx)
-       |  GROUP BY doc_id""".stripMargin
-  }
+      .select(col("doc_id"), mh.sig(TextLsh.shinglesOf(col("t"))).as("sig"))
+      .filter(col("sig").isNotNull)
 
   /** q32's verified near-dup pair relation, unsorted — q32 adds the
     * presentation sort; q112's funnel composes this raw form so no global
@@ -315,28 +283,22 @@ object TextPack {
     Artifacts.get(s, d, "minhash") { buildMinhashNearDupPairs(s, d) }
 
   private def buildMinhashNearDupPairs(s: SparkSession, d: String): DataFrame = {
-    val sig = sigDf(s, d).cache()
-    val bandCols = (0 until BANDS).map(j =>
-      concat_ws("-", (0 until ROWS).map(r => col(s"m${j * ROWS + r}")): _*))
-    val bands = sig.select(col("doc_id"),
-      posexplode(array(bandCols: _*)).as(Seq("band", "key")))
+    val sig = sigDf(s, d)
+    val bands = sig.select(col("doc_id"), mh.bandsOf(col("sig")))
     val cand = bands.as("x")
       .join(bands.as("y"), col("x.band") === col("y.band")
-        && col("x.key") === col("y.key") && col("x.doc_id") < col("y.doc_id"))
+        && col("x.bandkey") === col("y.bandkey") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"))
       .distinct()
-    val sigArr = sig.select(col("doc_id"),
-      array((0 until NUM_HASHES).map(i => col(s"m$i")): _*).as("sig"))
     val shArr = Tables.documents(s, d)
       .select(col("doc_id"), toks.as("t"))
-      .select(col("doc_id"), shinglesOf(col("t")).as("sh"))
+      .select(col("doc_id"), TextLsh.shinglesOf(col("t")).as("sh"))
     cand
-      .join(sigArr.select(col("doc_id").as("i"), col("sig").as("sig_a")), "i")
-      .join(sigArr.select(col("doc_id").as("j"), col("sig").as("sig_b")), "j")
+      .join(sig.select(col("doc_id").as("i"), col("sig").as("sig_a")), "i")
+      .join(sig.select(col("doc_id").as("j"), col("sig").as("sig_b")), "j")
       .join(shArr.select(col("doc_id").as("i"), col("sh").as("sh_a")), "i")
       .join(shArr.select(col("doc_id").as("j"), col("sh").as("sh_b")), "j")
-      .withColumn("est_sim", round(expr(
-        s"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), b -> b)) / CAST($NUM_HASHES AS DOUBLE)"), 4))
+      .withColumn("est_sim", round(mh.estSim(col("sig_a"), col("sig_b")), 4))
       .withColumn("jac", round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
         / size(array_union(col("sh_a"), col("sh_b"))), 4))
       .filter(col("jac") >= JACC_T)
@@ -770,34 +732,25 @@ object TextPack {
        |  WHERE round(shared::DOUBLE / (ci.n + cj.n - shared), 4) >= $JACC_T
        |)""".stripMargin
 
-  private val sqlEstSim: String = (0 until NUM_HASHES)
-    .map(i => s"CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END")
-    .mkString("(", " + ", s")::DOUBLE / ${NUM_HASHES}::DOUBLE")
-
-  private val sqlBands: String = (0 until BANDS).map { j =>
-    val key = (0 until ROWS).map(r => s"m${j * ROWS + r}::VARCHAR").mkString(" || '-' || ")
-    s"SELECT doc_id, $j AS band, $key AS key FROM sig"
-  }.mkString("\n  UNION ALL\n  ")
-
   /** q32's full statement — also composed (as a derived table) into the
     * q112 funnel oracle. */
   private val sqlQ32: String =
     s"""WITH shx AS (
        |  $sqlShingleRows
        |), sig AS (
-       |  $sqlSig
+       |  ${mh.sqlSignature("shx", "doc_id", "shingle")}
        |), bands AS (
-       |  $sqlBands
+       |  ${mh.sqlBands("sig", "doc_id")}
        |), cand AS (
        |  SELECT DISTINCT x.doc_id AS i, y.doc_id AS j
        |  FROM bands x JOIN bands y
-       |    ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id
+       |    ON x.band = y.band AND x.bandkey = y.bandkey AND x.doc_id < y.doc_id
        |), sh AS (
-       |  SELECT doc_id, $sqlShingles AS s
+       |  SELECT doc_id, ${TextLsh.sqlShingles} AS s
        |  FROM (SELECT doc_id, str_split(text, ' ') AS t FROM documents)
        |)
        |SELECT i, j,
-       |  round($sqlEstSim, 4) AS est_sim,
+       |  round(${mh.sqlEstSim("sa", "sb")}, 4) AS est_sim,
        |  round(len(list_intersect(pa.s, pb.s))::DOUBLE
        |        / len(list_distinct(list_concat(pa.s, pb.s))), 4) AS jac
        |FROM cand

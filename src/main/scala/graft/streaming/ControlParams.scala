@@ -28,11 +28,12 @@ object ControlParams {
   /** line → 0..1 parsed params or an error (comments/blank → nothing).
     * Numeric conversions use `toIntOption`: an overflowing `k=99999999999`
     * routes to [[ParseError]] (the dead-letter contract) instead of
-    * throwing inside the stream task. */
+    * throwing inside the stream task. So does `k=0`: a model needs at least
+    * one centroid, and the clustering state function would throw on it. */
   def parse(line: String): Option[Parsed] = line match {
     case CommentRe(_)   => None
     case KRe(v)         =>
-      v.toIntOption.map(K(_)).orElse(Some(ParseError(line, "k out of range")))
+      v.toIntOption.filter(_ >= 1).map(K(_)).orElse(Some(ParseError(line, "k out of range")))
     case DecayRe(v)     =>
       v.toDoubleOption.map(Decay(_)).orElse(Some(ParseError(line, "bad decay")))
     case LabelRe(i, t)  =>

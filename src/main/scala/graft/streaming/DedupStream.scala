@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.functions.{MinHashSig, TextLsh}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import graft.functions.TextLsh
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -25,10 +25,11 @@ final case class DedupCand(doc_id: Long, ts: java.sql.Timestamp, band: Int,
   * dedup): every arriving document is checked against the standing corpus
   * INDEX, never against the corpus itself.
   *
-  * Same construction and constants as TextPack (64-slot signatures from
-  * 3-token shingles via the codegen'd [[MinHashSig]]; 16 bands × 4 rows;
-  * seeded [[Hashes.family]]), so a doc's streaming signature is
-  * bit-identical to its batch one.
+  * Same MinHasher as TextPack ([[TextLsh.minHash]]: 64-slot signatures
+  * from 3-token shingles, 16 bands × 4 rows, seeded [[Hashes.family]]),
+  * so a doc's streaming signature and band keys are bit-identical to its
+  * batch ones. The bucket key is `<band>-` + the band key, so existing
+  * checkpoints of the index stay readable.
   *
   * Scale design: the keyed state is the LSH bucket index — one
   * (canonical doc_id, 64-slot signature) per non-empty bucket, partitioned
@@ -51,15 +52,7 @@ final case class DedupCand(doc_id: Long, ts: java.sql.Timestamp, band: Int,
   * checkpointed index, so verdicts never regress (RecoverySpec pattern).
   */
 object DedupStream {
-  // the ONE shared text-LSH configuration (graft.functions.TextLsh) — the
-  // batch/stream bit-identical-signature contract is by construction, and
-  // DedupStreamSpec pins it against TextPack's batch signature build
-  val NumHashes: Int = TextLsh.NumHashes
-  val Bands: Int     = TextLsh.Bands
-  val Rows: Int      = TextLsh.Rows
-  val Seed: Long     = TextLsh.Seed
-
-  private def shinglesOf(t: Column): Column = TextLsh.shinglesOf(t)
+  private val mh = TextLsh.minHash
 
   /** Stage A (stateless, map-only): signature + band fan-out. Docs too
     * short to shingle produce no rows — they cannot collide. */
@@ -67,15 +60,11 @@ object DedupStream {
     implicit val enc = Encoders.product[BucketDoc]
     docs.toDF()
       .select(col("doc_id"), col("ts"), split(col("text"), " ").as("t"))
-      .select(col("doc_id"), col("ts"),
-        MinHashSig.of(shinglesOf(col("t")), NumHashes, Seed).as("sig"))
-      .filter(col("sig").isNotNull && size(col("sig")) === NumHashes)
-      .select(col("doc_id"), col("ts"), col("sig"),
-        explode(sequence(lit(0), lit(Bands - 1))).as("band"))
-      .select(
-        concat_ws("-", col("band") +:
-          (0 until Rows).map(r => expr(s"sig[int(band) * $Rows + $r]")): _*).as("bkey"),
-        col("band").cast("int").as("band"), col("doc_id"), col("ts"), col("sig"))
+      .select(col("doc_id"), col("ts"), mh.sig(TextLsh.shinglesOf(col("t"))).as("sig"))
+      .filter(col("sig").isNotNull)
+      .select(col("doc_id"), col("ts"), col("sig"), mh.bandsOf(col("sig")))
+      .select(concat_ws("-", col("band"), col("bandkey")).as("bkey"),
+        col("band"), col("doc_id"), col("ts"), col("sig"))
       .as[BucketDoc]
   }
 
@@ -100,9 +89,7 @@ object DedupStream {
           // max/collect_set only. A re-sent CANONICAL doc emits nothing
           // (its -1 row already committed with the batch that set the
           // state; exactly-once sinks keep it).
-          val eq = b.sig.iterator.zip(s0.sig.iterator).count { case (x, y) => x == y }
-          out += DedupCand(b.doc_id, b.ts, b.band, s0.firstDoc,
-            eq.toDouble / NumHashes)
+          out += DedupCand(b.doc_id, b.ts, b.band, s0.firstDoc, mh.estSim(b.sig, s0.sig))
         case _ => () // replayed delivery of the canonical doc itself
       }
     }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.TextLsh
 import graft.streaming.{DedupCand, DedupStream, DocEv}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -38,7 +39,7 @@ class DedupStreamSpec extends GraftSuite {
           Some(DedupCand(b.doc_id, b.ts, b.band, -1L, 0.0))
         case Some((first, fsig)) if first != b.doc_id =>
           val eq = b.sig.iterator.zip(fsig.iterator).count { case (x, y) => x == y }
-          Some(DedupCand(b.doc_id, b.ts, b.band, first, eq.toDouble / DedupStream.NumHashes))
+          Some(DedupCand(b.doc_id, b.ts, b.band, first, eq.toDouble / TextLsh.minHash.numHashes))
         case _ => None
       }
     }.toIndexedSeq
@@ -104,7 +105,7 @@ class DedupStreamSpec extends GraftSuite {
       val matches = got.filter(_.cand_of >= 0)
       assert(matches.nonEmpty && matches.forall(c =>
         c.doc_id == 12L && c.cand_of == 10L && c.est_sim == 1.0))
-      assert(matches.length == DedupStream.Bands) // identical sig: all 16 buckets hit
+      assert(matches.length == TextLsh.minHash.bands) // identical sig: all 16 buckets hit
     } finally q.stop()
   }
 
@@ -135,24 +136,22 @@ class DedupStreamSpec extends GraftSuite {
       .filter(_.cand_of >= 0)
     // doc 12 can only match doc 10 if every bucket's canonical entry was
     // recovered from the checkpoint across the stop/start
-    assert(matches.length == DedupStream.Bands &&
+    assert(matches.length == TextLsh.minHash.bands &&
       matches.forall(c => c.doc_id == 12L && c.cand_of == 10L && c.est_sim == 1.0),
       s"post-restart match set wrong: ${matches.toSeq}")
   }
 
   test("streaming signatures equal the relational MinHash build (shared TextLsh config)") {
     // bandRows computes signatures with the MinHashSig codegen expression;
-    // the batch dedup stack's relational explode→64-min-agg build
-    // (MinHash.signature) is an INDEPENDENT construction of the same
-    // contract — both read graft.functions.TextLsh, so agreeing here pins
+    // the relational explode→64-min-agg build (MinHash.signature) is an
+    // INDEPENDENT construction of the same contract, so agreeing here pins
     // the batch/stream bit-identical-signature claim
-    import graft.functions.{MinHash, TextLsh}
     import spark.implicits._
     val docs = docEvs(60)
     val items = docs.toDS().toDF()
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .select(col("doc_id"), explode(TextLsh.shinglesOf(col("t"))).as("shingle"))
-    val mh = MinHash(TextLsh.NumHashes, TextLsh.Bands, TextLsh.Seed)
+    val mh = TextLsh.minHash
     val expected = mh.signature(items, "doc_id", "shingle")
       .select(col("doc_id"), mh.sigArray.as("sig"))
       .as[(Long, Seq[Long])].collect().toMap
@@ -161,6 +160,27 @@ class DedupStreamSpec extends GraftSuite {
       .as[(Long, Seq[Long])].collect().toMap
     assert(got.nonEmpty && got == expected,
       s"streaming=${got.size} relational=${expected.size} signatures diverge")
+  }
+
+  test("bucket keys are `<band>-` + MinHash's band key of the doc's signature") {
+    // the index's state is keyed by these strings: pinning them to the one
+    // band-key rule (and to its literal layout `<band>-<v0>-<v1>-<v2>-<v3>`)
+    // keeps existing dedup-index checkpoints readable
+    import spark.implicits._
+    val mh = TextLsh.minHash
+    val rows = DedupStream.bandRows(docEvs(60).toDS())
+    val viaMinHash = rows.select(col("doc_id"), posexplode(mh.bandKeys(col("sig"))))
+      .select(col("doc_id"), concat(col("pos").cast("string"), lit("-"), col("col")))
+      .as[(Long, String)].collect().toSet
+    val got = rows.select(col("doc_id"), col("bkey"), col("band"), col("sig"))
+      .as[(Long, String, Int, Seq[Long])].collect()
+    assert(got.nonEmpty && got.map(r => (r._1, r._2)).toSet == viaMinHash)
+    got.foreach { case (_, bkey, band, sig) =>
+      val r = mh.rowsPerBand
+      assert(bkey == (band +: sig.slice(band * r, band * r + r)).mkString("-"))
+    }
+    assert(got.groupBy(_._1).values.forall(_.length == mh.bands),
+      "every doc fans out to every band")
   }
 
   test("bucket-index state distributes across >=2 state partitions, one row per bucket") {

@@ -224,6 +224,36 @@ class JobsSpec extends GraftSuite {
     } finally q.stop()
   }
 
+  test("RecommendationsJob: online signatures are map-only and equal the relational build over the exploded composite") {
+    // the one-MinHasher rule for Task 2: the online chain signs each fired
+    // row's activity ∪ static set in place; the independent reference
+    // explodes that composite to (window key, feature) rows and takes the
+    // relational 64-min aggregate (MinHash.signature) per key
+    import graft.operators.RecommendationPack
+    import spark.implicits._
+    val events = Tables.events(spark, sf)
+    val firedRows = firedTwin(events)
+    val fired = spark.createDataFrame(
+      java.util.Arrays.asList(firedRows.collect(): _*), firedRows.schema)
+    val online = RecommendationPack.onlineSigs(fired, RecommendationPack.staticStore(spark, sf))
+    val key = concat_ws(":", col("user_id"), col("wstart")).as("k")
+    val tags = events.select(col("user_id"), concat(lit("T"),
+      regexp_extract(col("props"), "(\\d+)", 1).cast("long") % 20).as("feature"))
+    val items = fired.select(key, explode(col("acts")).as("et"))
+      .select(col("k"), concat(lit("E"), col("et")).as("feature"))
+      .unionByName(fired.join(tags, "user_id").select(key, col("feature")))
+    val mh = RecommendationPack.mh
+    val want = mh.signature(items, "k", "feature").select(col("k"), mh.sigArray)
+      .as[(String, Seq[Long])].collect().toMap
+    val got = online.select(key, col("sig")).as[(String, Seq[Long])].collect().toMap
+    assert(got.size == fired.count() && got == want,
+      s"online=${got.size} relational=${want.size} signatures diverge")
+    val aggs = online.queryExecution.optimizedPlan.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
+    }
+    assert(aggs.isEmpty, s"online signatures must not aggregate:\n${online.queryExecution.optimizedPlan}")
+  }
+
   /** event_id → feature vector, recomputed in batch for audit asserts. */
   private def featMap(events: org.apache.spark.sql.DataFrame): Map[Long, Vector[Double]] =
     ActivityDetectionJob.featurize(events).collect().map { r =>
@@ -421,5 +451,50 @@ class JobsSpec extends GraftSuite {
           m.classify(feats(r.getAs[Long]("event_id"))).index)
       }
     }
+  }
+
+  test("ActivityDetectionJob.classifyDf: a one-centroid model classifies every event to cluster 0") {
+    val events = Tables.events(spark, sf)
+    val m = KMeans.Model(Vector(KMeans.Cluster(0, Vector(1.0, 0.5, 12.0), 1.0)))
+    val got = ActivityDetectionJob.classifyDf(ActivityDetectionJob.featurize(events), m, 7).collect()
+    val feats = featMap(events)
+    assert(got.length == feats.size && got.nonEmpty)
+    got.foreach { r =>
+      assert(r.getAs[Int]("cluster") == 0 && r.getAs[Int]("model_version") == 7)
+      assert(r.getAs[Double]("dist") ==
+        math.sqrt(KMeans.sqDist(m.clusters.head.centroid, feats(r.getAs[Long]("event_id")))))
+    }
+  }
+
+  test("ActivityDetectionJob: a k=1 control line publishes a one-centroid model that still classifies") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val out = tmp("adjk1_out"); val ckpt = tmp("adjk1_ckpt")
+    val latest = ActivityDetectionJob.newModelRef
+    val evM = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
+    val evC = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
+    val ctrl = MemoryStream[String]
+    def df(m: MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]) =
+      m.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
+    val modelQ = ActivityDetectionJob.modelQuery(spark, df(evM),
+      Some(ctrl.toDF()), out, s"$ckpt/model", latest,
+      k = 3, minCount = 2, maxCount = 8)
+    val classifyQ = ActivityDetectionJob.classifyQuery(spark, df(evC),
+      out, s"$ckpt/classify", latest)
+    def chunk(base: Long): Seq[(Long, java.sql.Timestamp, Long, String, Double)] =
+      (0 until 8).map(i => (base + i, new java.sql.Timestamp((base + i) * 1000L),
+        i.toLong % 3, if (i % 2 == 0) "view" else "click", (i % 5).toDouble))
+    try {
+      evM.addData(chunk(100)); modelQ.processAllAvailable() // fires v1 (k=3)
+      ctrl.addData("k=1"); modelQ.processAllAvailable()
+      evM.addData(chunk(200)); modelQ.processAllAvailable() // fires v2 (k=1)
+      evC.addData(chunk(200)); classifyQ.processAllAvailable() // scored under v2
+      val models = spark.read.parquet(s"$out/models").orderBy("version").collect()
+      assert(models.map(_.getAs[scala.collection.Seq[Any]]("centroids").length).toSeq == Seq(3, 1),
+        "the k=1 control line must re-parameterize the next fire")
+      val got = spark.read.parquet(s"$out/classified").collect()
+      assert(got.length == 8, "chunk 2 classified under the one-centroid model")
+      assert(got.forall(r => r.getAs[Int]("cluster") == 0 && r.getAs[Int]("model_version") == 2))
+    } finally { modelQ.stop(); classifyQ.stop() }
   }
 }

@@ -142,6 +142,8 @@ class PropertySpec extends AnyFunSuite {
     })
     assert(ControlParams.parse("# anything").isEmpty)
     assert(ControlParams.parse("").isEmpty)
+    // a model needs at least one centroid: k=0 is a dead-letter line
+    assert(ControlParams.parse("k=0").exists(_.isInstanceOf[ControlParams.ParseError]))
   }
 
   test("foldFp: canonical is the first-seen batch's min under any batching; verdicts never retract") {
