@@ -1,13 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation utilities for hot keys — the 100 TB contingency the
   * plan-level docs keep citing (SURVEY §4.1 "state-size control", TextPack
   * scale notes). AQE's skew-join handling covers sort-merge joins
-  * automatically; these cover the two shapes AQE does not:
-  * aggregation skew and broadcast-side fan-out skew.
+  * automatically; this covers the shape AQE does not: aggregation skew
+  * (q48).
   *
   * Pattern (MMDS-style two-phase aggregation): salt the hot key with a
   * random shard id, pre-aggregate per (key, shard) — map-side combine
@@ -28,19 +28,4 @@ object Skew {
       .agg(count(lit(1)).as("__n"), sum(col(valueCol)).as("__s"))
       .groupBy(col(key))
       .agg(sum(col("__n")).as("n"), sum(col("__s")).as("sum_value"))
-
-  /** Salted distinct count: exact, two-phase. Phase 1 dedups (key, value)
-    * within shards — the state a single reducer would otherwise hold alone
-    * is spread over `shards` — phase 2 merges shard-distinct sets by size
-    * after a global dedup on (key, value). */
-  def saltedDistinct(df: DataFrame, key: String, valueCol: String,
-                     shards: Int = 32): DataFrame =
-    df
-      .withColumn("__shard", pmod(hash(col(valueCol)), lit(shards)))
-      .select(col(key), col("__shard"), col(valueCol))
-      .distinct() // shuffle on (key, shard, value): hot key spread over shards
-      .groupBy(col(key), col("__shard"))
-      .agg(count(lit(1)).as("__n"))
-      .groupBy(col(key))
-      .agg(sum(col("__n")).as("n_distinct"))
 }

@@ -1,41 +1,28 @@
 package graft.sources
 
 import graft.streaming.Ev
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
-/** Kafka wiring for the engine's event streams — the reference's S2
-  * consumer / K1 producer surface (reference:
-  * utils/kafka/KafkaTopic.scala:52-78, utils/FlinkUtils.scala:190-272)
-  * re-expressed on Spark's Kafka connector.
+/** The reference's Kafka wire format for event records (S2/K1), as Catalyst
+  * columns: a raw binary Avro datum per record with no container header,
+  * dates as epoch millis (reference: utils/avro/AvroUtils.scala:36-55,
+  * Avro4sSerializationSchema.scala:30-47), encoded and decoded by the avro
+  * core library that ships with Spark.
   *
-  * The connector (`spark-sql-kafka-0-10`) binds at RUNTIME via
-  * `format("kafka")`, so this module compiles and ships without it; a
-  * deployment adds the connector jar (`--packages
-  * org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>`). The one
-  * wire format is the reference's: a raw binary Avro datum per record,
-  * dates as epoch millis (utils/avro/AvroUtils.scala:36-55,
-  * Avro4sSerializationSchema.scala:30-47), encoded and decoded by the
-  * avro core library that ships with Spark. Everything below the `load()`
-  * — the codec columns and the key layout — is plain Catalyst and is
-  * unit-tested without a broker (KafkaCodecSpec).
+  * Contract:
+  *  - `avroWireColumns` maps an [[Ev]]-shaped frame to Kafka's
+  *    `(key, value)` columns: key = the user id as a string (the reference
+  *    keys by entity id, so Kafka's default partitioner keeps one entity's
+  *    records ordered within a partition), value = the datum bytes;
+  *  - `avroDecoded` maps a frame with a binary `value` column back to the
+  *    event columns and drops datums that do not decode.
   *
-  * Reference semantics preserved:
-  *  - earliest start + `read_committed` isolation
-  *    (utils/FlinkUtils.scala:264-272);
-  *  - per-key partition ordering on write: key = the entity id, Kafka's
-  *    default partitioner hashes it, so one post's updates stay ordered
-  *    within a partition (utils/kafka/HashPartitioner.scala:11-20 /
-  *    application.conf:236-240) — and the downstream keyed upsert sink is
-  *    order-independent anyway (monotonic-version MERGE, W11).
+  * No Kafka connector is on this build's classpath, so nothing here opens
+  * a topic; the codec is unit-tested without a broker (KafkaCodecSpec,
+  * including a byte check against an independent avro-core writer).
   */
 object KafkaIO {
-
-  // ──────────────────────────── Avro wire codec ───────────────────────────
-  // AvroUtils registers DateTime <-> timestamp-millis; Avro4s writes the
-  // raw binary datum with no container header. The codec below is a UDF
-  // kernel over the avro core library, always on Spark's classpath.
 
   /** Avro schema of one wire event — `ts_ms` carries the reference's
     * timestamp-millis logical type (epoch millis on the wire). */
@@ -120,27 +107,4 @@ object KafkaIO {
     import s.implicits._
     avroDecoded(raw).as[Ev]
   }
-
-  /** S2: streaming consumer — earliest offsets, read-committed isolation,
-    * Avro wire values. */
-  def readEvents(spark: SparkSession, servers: String, topic: String): DataFrame =
-    avroDecoded(spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", servers)
-      .option("subscribe", topic)
-      .option("startingOffsets", "earliest")
-      .option("kafka.isolation.level", "read_committed")
-      .load())
-
-  /** K1: streaming producer — keyed for per-entity partition ordering;
-    * exactly-once end-to-end = checkpoint + the idempotent keyed upsert
-    * downstream (W10/W11), the same contract the reference reaches with
-    * transactional writes + deterministic doc ids. */
-  def writeEvents(events: DataFrame, servers: String, topic: String,
-                  checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    avroWireColumns(events)
-      .writeStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", servers)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpoint)
 }

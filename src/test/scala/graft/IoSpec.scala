@@ -1,49 +1,13 @@
 package graft
 
-import graft.sources.{CsvTables, KeyedUpsertSink}
+import graft.sources.KeyedUpsertSink
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import java.nio.file.Files
 
 class IoSpec extends GraftSuite {
 
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
-
-  test("pipe-CSV round-trip preserves the events table (S6/F1/F3)") {
-    val dir = tmpDir("graft_csv")
-    val ev = Tables.events(spark, sf)
-      .select(col("event_id"), date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSXXX").as("ts"),
-        col("user_id"), col("event_type"), col("value"), col("props"))
-    // props contains '{"k": 69}' — no pipes, safe unquoted? it has spaces and
-    // braces; csv writer quotes as needed
-    ev.coalesce(1).write.mode("overwrite")
-      .option("sep", "|").option("header", "true").csv(dir)
-
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    val back = CsvTables.readPipeCsv(spark, dir, schema)
-
-    val a = Tables.events(spark, sf)
-      .select(col("event_id"), unix_timestamp(col("ts")).as("t"), col("user_id"),
-        col("event_type"), col("value"), col("props"))
-      .orderBy(col("event_id")).collect()
-    val b = back
-      .select(col("event_id"), unix_timestamp(col("ts")).as("t"), col("user_id"),
-        col("event_type"), col("value"), col("props"))
-      .orderBy(col("event_id")).collect()
-    assert(a.sameElements(b))
-  }
-
-  test("tag-set literal parse (F2): bracket lists, spaces, empty") {
-    import spark.implicits._
-    val df = Seq("[12, 34]", "[7]", "[]", "[ ]").toDF("raw")
-      .select(CsvTables.parseTagSet(col("raw")).as("tags"))
-    val got = df.collect().map(_.getSeq[Int](0).toList)
-    assert(got.toList == List(List(12, 34), List(7), Nil, Nil))
-  }
 
   test("keyed upsert sink: last-write-wins by version, stale writes ignored, replay idempotent") {
     import spark.implicits._

@@ -4,11 +4,10 @@ import graft.sources.KafkaIO
 import graft.streaming.Ev
 import org.apache.spark.sql.functions._
 
-/** The Kafka wiring's codec and key layout, tested without a broker: the
-  * `format("kafka")` load/sink binds at runtime, but every column
-  * expression between it and the engine — Avro encode, decode, key
-  * choice, millisecond timestamps — is plain Catalyst and must round-trip
-  * exactly, in the reference's wire format: the raw binary Avro datum
+/** The Kafka wire codec and key layout, tested without a broker: every
+  * column expression — Avro encode, decode, key choice, millisecond
+  * timestamps — is plain Catalyst and must round-trip exactly, in the
+  * reference's wire format: the raw binary Avro datum
   * (utils/avro/Avro4sSerializationSchema.scala:30-47). */
 class KafkaCodecSpec extends GraftSuite {
   import spark.implicits._

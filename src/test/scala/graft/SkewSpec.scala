@@ -16,16 +16,6 @@ class SkewSpec extends GraftSuite {
     assert(salted == direct)
   }
 
-  test("salted exact distinct equals countDistinct") {
-    val ev = Tables.events(spark, sf)
-    val direct = ev.groupBy(col("event_type"))
-      .agg(countDistinct(col("user_id")).as("n"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val salted = Skew.saltedDistinct(ev, "event_type", "user_id")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(salted == direct)
-  }
-
   test("salted plan spreads one key over many shards before the final shuffle") {
     val plan = Skew.saltedCountSum(Tables.events(spark, sf), "event_type", "value")
       .queryExecution.executedPlan.toString
