@@ -26,9 +26,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     drift columns folded on, R3) keyed by version + publish the
   *     latest model to the classifier through a [[ModelRef]].
   *  2. CLASSIFY query: the same featurized stream, classified per
-  *     micro-batch against the LATEST published model via broadcast
-  *     centroid literals in [[KMeans.nearest]] (J14, the q62 plan shape)
+  *     micro-batch against the LATEST published model, its centroids
+  *     literals in [[KMeans.nearest]] (J14, the q62 plan shape)
   *     → upsert keyed by event_id, versioned by the classifying model.
+  *
+  * Both queries start through [[StreamOps.startInterpreted]]: their
+  * micro-batches, sinks included, run interpreted.
   *
   * Events arriving before the first model fires are dropped — the
   * reference's inner-join drop semantics (ClassifyEventsFunction
@@ -48,8 +51,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Scale: clustering state is one bounded window buffer (≤ maxCount
   * points) in a single state group — the same parallelism-1 choice the
   * reference makes (UnusualActivityDetectionJob.scala:367,376);
-  * classification is embarrassingly parallel (centroids are literals in a
-  * codegen'd expression — no shuffle, no state).
+  * classification is embarrassingly parallel (centroids are literals in
+  * one projection — no shuffle, no state).
   */
 object ActivityDetectionJob {
 
@@ -139,17 +142,20 @@ object ActivityDetectionJob {
       }.getOrElse(pts)
       .as[ClusterIn]
 
-    StreamOps.clusterWindows(in, k, decay, windowSizeMs, minCount, maxCount)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[ModelRow], _: Long) =>
-        val rows = batch.collect().sortBy(_.version) // a handful of models
-        rows.lastOption.foreach(m => latest.set(Some((m.version, toModel(m)))))
-        if (rows.nonEmpty)
-          KeyedUpsertSink.upsert(spark, s"$outDir/models",
-            spark.createDataset(rows.toIndexedSeq).toDF(), Seq("version"), "version")
-      }
-      .start()
+    StreamOps.startInterpreted(spark)(
+      StreamOps.clusterWindows(in, k, decay, windowSizeMs, minCount, maxCount)
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: Dataset[ModelRow], _: Long) =>
+          val rows = batch.collect().sortBy(_.version) // a handful of models
+          rows.lastOption.foreach(m => latest.set(Some((m.version, toModel(m)))))
+          if (rows.nonEmpty) {
+            val s = batch.sparkSession
+            KeyedUpsertSink.upsert(s, s"$outDir/models",
+              s.createDataset(rows.toIndexedSeq).toDF(), Seq("version"), "version")
+          }
+        }
+        .start())
   }
 
   /** The classification query: featurized events scored per micro-batch
@@ -157,18 +163,19 @@ object ActivityDetectionJob {
     * event_id, versioned by classifying model). */
   def classifyQuery(spark: SparkSession, events: DataFrame, outDir: String,
                     checkpointDir: String, latest: ModelRef): StreamingQuery =
-    featurize(events)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        latest.get() match {
-          case Some((ver, m)) =>
-            KeyedUpsertSink.upsert(batch.sparkSession, s"$outDir/classified",
-              classifyDf(batch, m, ver), Seq("event_id"), "model_version")
-          case None => () // before the first model: dropped (J14 semantics)
+    StreamOps.startInterpreted(spark)(
+      featurize(events)
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          latest.get() match {
+            case Some((ver, m)) =>
+              KeyedUpsertSink.upsert(batch.sparkSession, s"$outDir/classified",
+                classifyDf(batch, m, ver), Seq("event_id"), "model_version")
+            case None => () // before the first model: dropped (J14 semantics)
+          }
         }
-      }
-      .start()
+        .start())
 
   /** Compose the full job (both queries, racing on the shared source —
     * production semantics). Returns (model query, classify query). */

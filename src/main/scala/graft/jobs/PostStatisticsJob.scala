@@ -92,8 +92,10 @@ object PostStatisticsJob {
     // reference accepts exactly the same drop through its own allowed
     // lateness (BuildReplyTreeProcessFunction's watermark eviction +
     // side output). Scope the opt-out to this query's startup
-    // (StreamOps.startUnchecked).
-    StreamOps.startUnchecked(spark) {
+    // (StreamOps.startUnchecked), and run the query interpreted
+    // (StreamOps.startInterpreted: its micro-batches are too small to
+    // repay compiling generated code).
+    StreamOps.startUnchecked(spark)(StreamOps.startInterpreted(spark) {
       StreamOps.slidingStats(resolved, "root_id")
         .writeStream.outputMode("append")
         .option("checkpointLocation", checkpointDir)
@@ -102,7 +104,7 @@ object PostStatisticsJob {
             Seq("wstart", "root_id"), "n_events")
         }
         .start()
-    }
+    })
   }
 
   /** "N unit" → "2N unit" (e.g. "1 hour" → "2 hour"); non-trivial interval

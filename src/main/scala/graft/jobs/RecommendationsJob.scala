@@ -2,6 +2,7 @@ package graft.jobs
 
 import graft.operators.RecommendationPack
 import graft.sources.{KeyedUpsertSink, ReplaySource}
+import graft.streaming.StreamOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -61,7 +62,9 @@ object RecommendationsJob {
       .agg(collect_set(col("event_type")).as("acts"))
       .select(unix_timestamp(col("w.start")).as("wstart"), col("user_id"), col("acts"))
 
-    fired.writeStream.outputMode("update")
+    // interpreted (StreamOps.startInterpreted); the static store above was
+    // built compiled, on the caller's session
+    StreamOps.startInterpreted(spark)(fired.writeStream.outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // The recompute references the fired frame from several plan
@@ -91,7 +94,7 @@ object RecommendationsJob {
           KeyedUpsertSink.upsert(spark, outDir, recs, Seq("user_id"), "ver")
         }
       }
-      .start()
+      .start())
   }
 
   /** CLI: RecommendationsJob <sfDir> <outDir> <checkpointDir> [speedup] [runSeconds] */

@@ -184,7 +184,7 @@ object ReplyTreeOp {
     * group — pending size is bounded by the replies INSIDE the watermark
     * horizon. */
   def resolveEvicting(events: Dataset[EdgeEventT]): Dataset[TreeOut] = {
-    implicit val stateEnc = Encoders.product[TreeState]
+    implicit val stateEnc = StreamOps.stateEncoder[TreeState]
     implicit val outEnc = Encoders.product[TreeOut]
     implicit val keyEnc = Encoders.scalaInt
     events.groupByKey(_ => 0)
@@ -282,7 +282,7 @@ object ReplyTreeOp {
     * `reg = true` for the first archive hop. */
   private[streaming] def frontier(events: Dataset[EdgeEventT],
                                   horizonMs: Long): Dataset[TreeFlow] = {
-    implicit val stateEnc = Encoders.product[TreeState]
+    implicit val stateEnc = StreamOps.stateEncoder[TreeState]
     implicit val outEnc = Encoders.product[TreeFlow]
     implicit val keyEnc = Encoders.scalaInt
     events.groupByKey(_ => 0)

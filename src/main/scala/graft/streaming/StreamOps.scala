@@ -4,9 +4,12 @@ import graft.functions.KMeans
 import org.apache.logging.log4j.Level
 import org.apache.logging.log4j.core.LoggerContext
 import org.apache.logging.log4j.core.config.Configurator
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import scala.reflect.runtime.universe.TypeTag
 
 /** Typed event for streaming ops (the reference's unified `Event` shape,
   * model/Events.scala:13, with the testdata column names). */
@@ -398,23 +401,60 @@ object StreamOps {
     * WARN of over a hundred lines; its logger is held at ERROR for the
     * same scope. */
   def startUnchecked[T](spark: SparkSession)(start: => T): T = {
-    val key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    val prev = spark.conf.getOption(key)
     val own = LoggerContext.getContext(false).getConfiguration.getLoggerConfig(Checker)
     val prevLevel: Level = if (own.getName == Checker) own.getLevel else null // null: inherit
-    spark.conf.set(key, "false")
     Configurator.setLevel(Checker, Level.ERROR)
-    try start
-    finally {
-      Configurator.setLevel(Checker, prevLevel)
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
+    try withConf(spark, "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false")(start)
+    finally Configurator.setLevel(Checker, prevLevel)
   }
 
   private val Checker = "org.apache.spark.sql.catalyst.analysis.UnsupportedOperationChecker"
+
+  /** Start a streaming query with code generation off: no whole-stage
+    * code, and every expression-level projection, predicate and ordering
+    * interpreted (Spark still compiles the object (de)serializers of typed
+    * operators, once each: see [[stateEncoder]]). A query clones the
+    * caller's session conf at `start`, so its micro-batch plans (and the
+    * plans its `foreachBatch` sink builds on `batch.sparkSession`) keep
+    * the setting for the query's life; the caller's session gets its
+    * values back as soon as `start` returns, so its batch queries stay
+    * compiled.
+    *
+    * Why: a micro-batch of a few hundred to a few thousand rows runs in
+    * milliseconds, while compiling its generated code takes seconds, and
+    * the DSPA jobs' plans hold more distinct generated sources than
+    * Spark's JVM-wide codegen cache (`spark.sql.codegen.cache.maxEntries`,
+    * 100, a static conf) keeps, so the same sources were compiled again
+    * and again, batch after batch. `factoryMode` is internal in
+    * `SQLConf`; JobsSpec pins its effect, so an upgrade that drops it
+    * fails there. */
+  def startInterpreted[T](spark: SparkSession)(start: => T): T =
+    withConf(spark, "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(start)
+
+  /** A `flatMapGroupsWithState` state encoder, resolved once. Spark
+    * resolves the state deserializer again at every micro-batch, and a
+    * collection field then gets new lambda-variable ids, so the
+    * deserializer's generated source differs from batch to batch and
+    * Spark compiles it anew each time (it compiles state deserializers
+    * whatever `factoryMode` says). Resolved here, the ids are fixed and
+    * the class compiled in the first batch serves every later one. The
+    * state schema is the same as `Encoders.product[T]`'s, so existing
+    * checkpoints keep working. */
+  private[graft] def stateEncoder[T <: Product : TypeTag]: Encoder[T] =
+    ExpressionEncoder[T]().resolveAndBind()
+
+  /** Set `kvs` on `spark`'s session conf for the scope of `body`, then put
+    * each key back as it was (set to its old value, or unset). */
+  private def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 
   /** Shared watermark-gated session machinery behind [[sessionFunnel]]
     * and [[sessionTransitions]]: per-user event buffer, 30-min-gap split
@@ -597,7 +637,7 @@ object StreamOps {
                      windowSizeMs: Long, minCount: Int, maxCount: Int,
                      seed: Long = 137L): Dataset[ModelRow] = {
     val logic = new ClusterWindowLogic(k, decay, windowSizeMs, minCount, maxCount, seed)
-    implicit val stateEnc = Encoders.product[ClusterWinState]
+    implicit val stateEnc = stateEncoder[ClusterWinState]
     implicit val outEnc = Encoders.product[ModelRow]
     implicit val keyEnc = Encoders.scalaInt
     in.groupByKey(_ => 0)

@@ -2,7 +2,9 @@ package graft
 
 import graft.functions.KMeans
 import graft.jobs.{ActivityDetectionJob, PostStatisticsJob, RecommendationsJob}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 
 /** The three reference streaming jobs as ASSEMBLIES (reference:
@@ -25,7 +27,12 @@ class JobsSpec extends GraftSuite {
   test("PostStatisticsJob: multi-batch arrival converges to the batch answer (monotonic upsert)") {
     // event-ordered micro-batches through the per-post chain, then one root
     // two days on: its doubled watermark closes every window of the sf
-    // span, so the store must hold exactly the q45 + q21 batch twin
+    // span, so the store must hold exactly the q45 + q21 batch twin.
+    // Batches 2 and 3 compile nothing: the query runs interpreted, and
+    // the resolver's state deserializer, which Spark compiles anyway,
+    // keeps the source that batch 1 compiled (StreamOps.stateEncoder).
+    // Measured with CodeGenerator.compileTime, the JVM-wide counter the
+    // perfbench replay reads.
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val out = tmp("psj2_out"); val ckpt = tmp("psj2_ckpt")
@@ -37,9 +44,16 @@ class JobsSpec extends GraftSuite {
       stream.toDF().toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
       out, ckpt)
     try {
-      rows.grouped(math.max(1, rows.length / 3)).foreach { c =>
+      val feed = (c: Array[(Long, java.sql.Timestamp, Long, String, Double, String)]) => {
         stream.addData(c.toIndexedSeq); q.processAllAvailable()
       }
+      val chunks = rows.grouped(math.max(1, rows.length / 3)).toSeq
+      feed(chunks.head)
+      val c0 = CodeGenerator.compileTime
+      chunks.slice(1, 3).foreach(feed)
+      val compiledMs = (CodeGenerator.compileTime - c0) / 1e6
+      assert(compiledMs == 0.0, s"micro-batches 2 and 3 compiled generated code for $compiledMs ms")
+      chunks.drop(3).foreach(feed)
       val last = rows.last
       stream.addData((rows.map(_._1).max + 1,
         new java.sql.Timestamp(last._2.getTime + 2L * 86400 * 1000), 0L, "view", 0.0, "0"))
@@ -103,6 +117,7 @@ class JobsSpec extends GraftSuite {
     val o1 = tmp("cc1_out"); val c1 = tmp("cc1_ckpt")
     val o2 = tmp("cc2_out"); val c2 = tmp("cc2_ckpt")
     val o3 = tmp("cc3_out"); val c3 = tmp("cc3_ckpt")
+    val confBefore = codegenKeys.map(spark.conf.getOption)
     val q1 = PostStatisticsJob.runResolved(spark, replayed, o1, c1)
     val q2 = RecommendationsJob.run(spark, replayed, sf, o2, c2)
     // early-fire params (as in the standalone composed-job test): model
@@ -112,6 +127,20 @@ class JobsSpec extends GraftSuite {
       windowSizeMs = 3650L * 24 * 3600 * 1000)
     try {
       Seq(q1, q2, m3, cl3).foreach(_.processAllAvailable())
+      // the four queries run interpreted (StreamOps.startInterpreted);
+      // the caller's session gets its codegen conf back and still
+      // compiles its batch queries
+      Seq("task1" -> q1, "task2" -> q2, "task3 model" -> m3, "task3 classify" -> cl3)
+        .foreach { case (name, q) =>
+          assert(wholeStageStages(q.asInstanceOf[StreamingQueryWrapper]
+            .streamingQuery.lastExecution.executedPlan) == 0,
+            s"the $name query planned a whole-stage codegen stage")
+        }
+      assert(codegenKeys.map(spark.conf.getOption) == confBefore,
+        "a job builder leaked its codegen conf into the caller's session")
+      assert(wholeStageStages(spark.range(100).filter(col("id") % 3 === 0)
+        .select((col("id") * 2).as("x")).queryExecution.executedPlan) > 0,
+        "a batch query on the caller's session lost whole-stage codegen")
       // Task 1 (default scale-out chain, append mode): per-root stats
       // equal the batch fixpoint composition on the FINALIZED windows
       // (end at or behind the final doubled-delay watermark)
@@ -149,6 +178,11 @@ class JobsSpec extends GraftSuite {
       }
     } finally Seq(q1, q2, m3, cl3).foreach(_.stop())
   }
+
+  private val codegenKeys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+
+  private def wholeStageStages(plan: SparkPlan): Int =
+    plan.collect { case w: WholeStageCodegenExec => w }.size
 
   /** The job's fired-window frame recomputed in batch: per (4h window,
     * user), the set of event types — the activity features' raw form. */
